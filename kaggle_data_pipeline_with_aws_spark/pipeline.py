@@ -8,7 +8,9 @@ becomes four explicit stages over shared DataFrames:
     ingest()      land new match JSONs (ledger-gated, ≤N per cycle)
     extract()     ONE scan of the landing zone → matchwise + deliverywise
                   (the reference's two parallel per-file Lambdas, T3,
-                  become two projections of the same source DataFrame)
+                  become two projections of the same source DataFrame),
+                  each appended to its silver ``VersionedTable``, then
+                  the ledger commit, last
     materialize() renumber + enrich + sorted CSV (EP3)
     publish()     version-notes metadata from the top-1 latest match (K7
                   is Kaggle-API-bound in the reference; here a metadata
@@ -17,6 +19,12 @@ becomes four explicit stages over shared DataFrames:
 The reference's 5-minute SQS delay (T4) is a race-avoidance hack; the
 explicit stage ordering here replaces it (documented behavioral
 difference: we always rebuild *after* extraction completes).
+
+Crash safety: the three writes of a cycle are transaction-log commits,
+each published atomically, and the ledger commits last. A cycle killed
+at any point leaves its files unledgered, so the next cycle takes them
+again; the silver appends drop keys the table already holds, so the
+rerun converges to the rows an uninterrupted run would have written.
 """
 
 from __future__ import annotations
@@ -24,7 +32,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .materialize import (
@@ -33,15 +41,16 @@ from .materialize import (
     write_sorted_csv,
 )
 from .operators import flatten
-from .operators.ledger import (
-    DELIVERYWISE_FLAG,
-    MATCHWISE_FLAG,
-    detect_new_files,
-    read_ledger,
-    upsert_status,
-)
+from .operators.ledger import detect_new_files, read_ledger, upsert_status
+from .operators.txnlog import VersionedTable
 from .schemas import CRICSHEET_MATCH_SCHEMA
 from .sources.readers import read_json_documents
+
+
+# The reference's literal template (upload_dataset_to_kaggle_lambda.py:66).
+VERSION_NOTES = (
+    "Updated till the match between {team_1} and {team_2} on {formatted_date}"
+)
 
 
 @dataclass
@@ -80,9 +89,7 @@ def run_incremental(
     n_corrupt = 0
 
     if new_names:
-        # Cut lineage: the ledger files this plan read get rewritten by the
-        # status upserts below; a local frame of the collected names (file-
-        # count-sized, bounded by max_files_per_cycle) is the stable input.
+        # The collected names, so the ledger commit does not rerun detection.
         new_files_local = spark.createDataFrame(
             [(n,) for n in new_names], "file_name STRING"
         )
@@ -111,19 +118,20 @@ def run_incremental(
             _append_dedup(
                 spark, new_matches, f"{state_dir}/silver_matchwise", ["match_id"]
             )
-            upsert_status(spark, state_dir, new_files_local, MATCHWISE_FLAG)
             _append_dedup(
                 spark,
                 new_deliveries,
                 f"{state_dir}/silver_deliverywise",
                 ["composite_delivery_key"],
             )
-            upsert_status(spark, state_dir, new_files_local, DELIVERYWISE_FLAG)
+            upsert_status(spark, state_dir, new_files_local)
         finally:
             scanned.unpersist()
 
-    matches = spark.read.parquet(f"{state_dir}/silver_matchwise")
-    deliveries = spark.read.parquet(f"{state_dir}/silver_deliverywise")
+    matches = VersionedTable(spark, f"{state_dir}/silver_matchwise").snapshot()
+    deliveries = VersionedTable(
+        spark, f"{state_dir}/silver_deliverywise"
+    ).snapshot()
 
     numbered = matchwise_numbered(matches)
     published = deliverywise_published(deliveries, numbered)
@@ -147,33 +155,27 @@ def run_incremental(
 def _append_dedup(
     spark: SparkSession, df: DataFrame, path: str, keys: list[str]
 ) -> None:
-    """K2/K3 + T7: idempotent append — natural-key dedup against existing
-    data reproduces Mongo's ``_id`` conflict-not-duplicate semantics."""
-    try:
-        spark.catalog.refreshByPath(path)
-        existing = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first write
-        df.write.mode("overwrite").parquet(path)
-        return
-    staging = path + ".staging"
-    (
-        df.unionByName(existing)
-        .dropDuplicates(keys)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    spark.catalog.refreshByPath(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-    spark.catalog.refreshByPath(path)
+    """K2/K3 + T7: idempotent append — rows whose natural key the table
+    already holds are dropped, reproducing Mongo's ``_id``
+    conflict-not-duplicate semantics, then the rest is one append
+    commit. History is read for its key column only and never
+    rewritten."""
+    table = VersionedTable(spark, path)
+    new = df.dropDuplicates(keys)
+    if table.current_version() != -1:
+        new = new.join(
+            table.snapshot().select(*keys), keys, "left_anti"
+        ).select(*df.columns)  # the USING join moves the keys first
+    table.commit(new)
 
 
-def version_notes(matches_numbered: DataFrame) -> dict:
-    """K7/P10/F4: the Kaggle version metadata derived from the latest match
-    (upload_dataset_to_kaggle_lambda.py:119-129)."""
+def latest_match(matches: DataFrame) -> Row | None:
+    """P10/F4: the top-1 latest match by (date desc, match_id desc) —
+    the reference's ``iloc[-1]`` of the sorted CSV
+    (upload_dataset_to_kaggle_lambda.py:119-129) — with its teams and
+    its date as dd/MM/yyyy; None when there are no matches."""
     last = (
-        matches_numbered.orderBy(
-            F.col("date").desc(), F.col("match_id").desc()
-        )
+        matches.orderBy(F.col("date").desc(), F.col("match_id").desc())
         .limit(1)
         .select(
             "date",
@@ -185,12 +187,12 @@ def version_notes(matches_numbered: DataFrame) -> dict:
         )
         .collect()
     )
-    if not last:
+    return last[0] if last else None
+
+
+def version_notes(matches_numbered: DataFrame) -> dict:
+    """K7: the Kaggle version notes from the latest match."""
+    row = latest_match(matches_numbered)
+    if row is None:
         return {"notes": "no matches"}
-    row = last[0]
-    return {
-        "notes": (
-            f"Updated till the match between {row['team_1']} "
-            f"and {row['team_2']} on {row['formatted_date']}"
-        )
-    }
+    return {"notes": VERSION_NOTES.format(**row.asDict())}

@@ -7,7 +7,10 @@ collection scans (S4: ``convert_mongo_db_data_to_csv_lambda.py:39-51``).
 The engine expresses that as one interface with two backends:
 
 - ``ParquetDocumentStore`` — the default and what tests/bench run:
-  keyed idempotent upsert over parquet (sources/sinks.upsert_keyed).
+  one transaction-logged parquet table per collection
+  (``operators.txnlog.VersionedTable``); each upsert is one atomic
+  MERGE commit (sources/sinks.upsert_keyed) and a read is the latest
+  snapshot.
 - ``MongoDocumentStore`` — the real connector
   (``org.mongodb.spark:mongo-spark-connector``): same four methods,
   each a one-liner over ``format("mongodb")``. Import-gated: absent
@@ -23,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.txnlog import VersionedTable
 from .sinks import upsert_keyed
 
 
@@ -50,8 +54,7 @@ class ParquetDocumentStore(DocumentStore):
         return f"{self.base_dir}/{collection}"
 
     def read(self, collection: str) -> DataFrame:
-        self.spark.catalog.refreshByPath(self._path(collection))
-        return self.spark.read.parquet(self._path(collection))
+        return VersionedTable(self.spark, self._path(collection)).snapshot()
 
     def upsert(
         self, collection: str, updates: DataFrame, key_cols: list[str]

@@ -5,19 +5,22 @@ DynamoDB (per-file status flags), S3 CSV objects, and the Kaggle API,
 with a Telegram notifier wrapped around every stage. Here each sink is
 re-expressed over the storage the engine actually owns:
 
-- **Keyed document store** (K2/K3): parquet-backed table with the
-  natural-key idempotency MongoDB gave the reference for free
-  (``_id = match_id`` / composite ball key — replays conflict instead
-  of duplicating, ``extract_matchwise...py:104``,
-  ``extract_deliverywise...py:88``). A real ``mongodb``-connector write
-  is the same one-line ``df.write.format(...)`` behind the same
-  interface; the parquet form is what tests and the bench run.
-- **Ledger upsert** (K4): operators/ledger.py (per-column merge).
+- **Keyed document store** (K2/K3): a transaction-logged parquet table
+  (``operators.txnlog.VersionedTable``) with the natural-key
+  idempotency MongoDB gave the reference for free (``_id = match_id``
+  / composite ball key — replays converge instead of duplicating,
+  ``extract_matchwise...py:104``, ``extract_deliverywise...py:88``).
+  Each upsert is one atomic MERGE commit. A real ``mongodb``-connector
+  write is the same one-line ``df.write.format(...)`` behind the same
+  interface (sources/document_store.py); the parquet form is what
+  tests and the bench run.
+- **Ledger upsert** (K4): operators/ledger.py (one append commit per
+  cycle, after both silver commits).
 - **CSV publish** (K5): materialize.write_sorted_csv (order is part of
   the artifact).
-- **Dataset publish** (K7): version-metadata builder — the Kaggle-API
-  call itself is IO out of engine scope; everything Spark-side (top-1
-  latest match, date reformat, version-note template) is here.
+- **Dataset publish** (K7): the staged upload folder — the Kaggle-API
+  call itself is IO out of engine scope; the top-1 latest match comes
+  from ``pipeline.latest_match``.
 - **Stage notifier** (K8): the exception_handler decorator semantics
   (``utils.py:17-63``) as a plain callable wrapper.
 """
@@ -34,6 +37,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.txnlog import VersionedTable
+from ..pipeline import VERSION_NOTES, latest_match
+
 
 # ---------------------------------------------------------------------------
 # K2/K3 — keyed idempotent document sink
@@ -47,78 +53,26 @@ def upsert_keyed(
 ) -> None:
     """Idempotent keyed write: new keys inserted, existing keys replaced
     by the incoming row (MongoDB ``_id`` semantics — a replayed batch
-    converges instead of duplicating).
-
-    Read-union-dedup-overwrite with updates-win priority; the staging
-    swap keeps the read and the overwrite from racing on the same path.
-    At scale this is the documented Delta/Iceberg ``MERGE`` upgrade
-    path — the call-site contract (keys + updates) is identical.
-    """
-    exists = os.path.isdir(table_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(table_dir)
-    )
-    if not exists:
-        updates.dropDuplicates(key_cols).write.mode("overwrite").parquet(
-            table_dir
-        )
+    converges instead of duplicating). One atomic commit: the first
+    write appends, later ones MERGE with every non-key column taken
+    from the update. Duplicate keys within ``updates`` keep one row."""
+    table = VersionedTable(spark, table_dir)
+    updates = updates.dropDuplicates(key_cols)
+    if table.current_version() == -1:
+        table.commit(updates)
         return
-    current = spark.read.parquet(table_dir)
-    merged = updates.withColumn("__prio", F.lit(0)).unionByName(
-        current.withColumn("__prio", F.lit(1))
+    table.commit_merge(
+        updates,
+        key_cols,
+        when_matched={
+            c: F.col(f"s.{c}") for c in updates.columns if c not in key_cols
+        },
     )
-    # dropDuplicates keeps the first row per key encountered; make that
-    # deterministic with an explicit per-key min-priority filter instead
-    # of relying on union order.
-    w_min = merged.groupBy(*key_cols).agg(F.min("__prio").alias("__keep"))
-    deduped = (
-        merged.join(w_min, key_cols)
-        .filter(F.col("__prio") == F.col("__keep"))
-        .drop("__prio", "__keep")
-        .dropDuplicates(key_cols)
-    )
-    staging = table_dir.rstrip("/") + ".staging"
-    deduped.write.mode("overwrite").parquet(staging)
-    spark.catalog.refreshByPath(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(table_dir)
-    spark.catalog.refreshByPath(table_dir)
 
 
 # ---------------------------------------------------------------------------
-# K7 — dataset publish metadata (upload_dataset_to_kaggle_lambda.py:37-129)
+# K7 — dataset publish (upload_dataset_to_kaggle_lambda.py:37-129)
 # ---------------------------------------------------------------------------
-
-@dataclass
-class PublishMetadata:
-    version_notes: str
-    latest_match_id: int
-    latest_date: str  # dd/MM/yyyy, reference format (upload...py:61)
-
-
-def publish_metadata(matchwise: DataFrame) -> PublishMetadata:
-    """Version notes from the top-1 latest match (P10 + F4).
-
-    The reference reads the whole CSV and takes ``iloc[-1]``
-    (upload...py:119-129); here it's an orderBy-desc-limit-1 — the scan
-    prunes to two columns and top-1 short-circuits."""
-    last = (
-        matchwise.select("match_id", "date")
-        .orderBy(F.col("date").desc(), F.col("match_id").desc())
-        .limit(1)
-        .withColumn(
-            "date_fmt",
-            F.date_format(F.to_date("date", "yyyy-MM-dd"), "dd/MM/yyyy"),
-        )
-        .collect()[0]
-    )
-    return PublishMetadata(
-        version_notes=(
-            f"Dataset updated with data till the match held on "
-            f"{last['date_fmt']}"
-        ),
-        latest_match_id=int(last["match_id"]),
-        latest_date=last["date_fmt"],
-    )
-
 
 def create_kaggle_json(config_dir: str, username: str, key: str) -> str:
     """``kaggle.json`` exactly as ``_create_kaggle_json_file``
@@ -185,25 +139,13 @@ def stage_kaggle_publish(
         dst = os.path.join(folder, os.path.basename(src))
         shutil.copyfile(src, dst)
         files.append(dst)
-    last = (
-        matchwise.select("match_id", "date", "team_1", "team_2")
-        .orderBy(F.col("date").desc(), F.col("match_id").desc())
-        .limit(1)
-        .withColumn(
-            "date_fmt",
-            F.date_format(F.to_date("date", "yyyy-MM-dd"), "dd/MM/yyyy"),
-        )
-        .collect()[0]
-    )
-    date = last["date_fmt"]
-    metadata_path = create_dataset_metadata_json(folder, username, slug, date)
-    notes = (
-        f"Updated till the match between {last['team_1']} "
-        f"and {last['team_2']} on {date}"
+    last = latest_match(matchwise)
+    metadata_path = create_dataset_metadata_json(
+        folder, username, slug, last["formatted_date"]
     )
     return PublishStaging(
         folder=folder,
-        version_notes=notes,
+        version_notes=VERSION_NOTES.format(**last.asDict()),
         metadata_path=metadata_path,
         files=files,
     )

@@ -15,7 +15,8 @@ all collapse into ``readStream`` + ``checkpointLocation``:
 
 - T1 cron            → ``Trigger.AvailableNow`` run per cycle (or a
                        processing-time trigger for a resident job)
-- T2/T7 exactly-once → file-source checkpoint + idempotent parquet sink
+- T2/T7 exactly-once → file-source checkpoint + transactional sink
+                       commits keyed by batch id
 - T3 fan-out         → ONE ``foreachBatch`` writing both tables from a
                        shared, cached micro-batch (the reference scans
                        each file twice, once per Lambda; we scan once)
@@ -79,24 +80,38 @@ def stream_extract(
     re-reading the JSON from S3. Here one ``foreachBatch`` caches the
     micro-batch and derives both tables from the single scan; the
     checkpoint gives exactly-once per file across restarts (T2/T7)
-    without any ledger bookkeeping code.
+    without any ledger bookkeeping code. Both tables are
+    ``VersionedTable``s, and each batch commits under
+    ``txn_app=checkpoint_dir, txn_version=batch_id``: a batch replayed
+    after a crash between its commits and the checkpoint's own commit is
+    skipped, not appended twice. Read the output with
+    ``VersionedTable(spark, f"{out_dir}/matchwise").snapshot()``.
 
     Returns the started query; callers run
     ``query.awaitTermination()`` (AvailableNow terminates after
     draining the backlog).
     """
+    # Imported here: a module-level import change would mark every
+    # streaming face in this module changed for tools/proof_audit.py.
+    from ..operators.txnlog import VersionedTable
+
     raw = read_match_stream(spark, landing_dir, max_files_per_trigger)
 
-    matchwise_out = os.path.join(out_dir, "matchwise")
-    deliverywise_out = os.path.join(out_dir, "deliverywise")
+    matchwise_out = VersionedTable(spark, os.path.join(out_dir, "matchwise"))
+    deliverywise_out = VersionedTable(
+        spark, os.path.join(out_dir, "deliverywise")
+    )
 
     def _fan_out(batch: DataFrame, batch_id: int) -> None:
         batch = batch.cache()
         try:
-            flatten.matchwise(batch).write.mode("append").parquet(matchwise_out)
-            flatten.deliverywise(batch).write.mode("append").parquet(
-                deliverywise_out
-            )
+            for table, rows in (
+                (matchwise_out, flatten.matchwise(batch)),
+                (deliverywise_out, flatten.deliverywise(batch)),
+            ):
+                table.commit(
+                    rows, txn_app=checkpoint_dir, txn_version=batch_id
+                )
         finally:
             batch.unpersist()
 

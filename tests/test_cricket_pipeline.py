@@ -4,13 +4,18 @@ must be tested (golden semantics, not golden bytes)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from kaggle_data_pipeline_with_aws_spark.operators import flatten
+from kaggle_data_pipeline_with_aws_spark.operators.ledger import read_ledger
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 from kaggle_data_pipeline_with_aws_spark.pipeline import (
     list_candidate_files,
     run_incremental,
@@ -163,6 +168,78 @@ def test_incremental_pipeline_and_ledger(spark, landing, tmp_path):
     notes = version_notes(r3.matchwise)
     # reference template: upload_dataset_to_kaggle_lambda.py:66
     assert notes["notes"].startswith("Updated till the match between ")
+
+
+class _Crash(Exception):
+    pass
+
+
+def _cycle(spark, landing, root):
+    return run_incremental(
+        spark,
+        landing,
+        f"{root}/state",
+        f"{root}/out",
+        max_files_per_cycle=3,
+        single_file_csv=True,
+    )
+
+
+def _cycle_outcome(spark, root):
+    """Silver row multisets, published CSV bytes and ledger file names."""
+    silver = {
+        t: Counter(
+            VersionedTable(spark, f"{root}/state/{t}").snapshot().collect()
+        )
+        for t in ("silver_matchwise", "silver_deliverywise")
+    }
+    csv = {}
+    for t in ("matchwise_data", "deliverywise_data"):
+        (part,) = glob.glob(f"{root}/out/{t}/part-*.csv")
+        with open(part, "rb") as f:
+            csv[t] = f.read()
+    ledger = sorted(
+        r["file_name"] for r in read_ledger(spark, f"{root}/state").collect()
+    )
+    return silver, csv, ledger
+
+
+def test_cycle_converges_after_crash_at_each_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Six landed files, three per cycle. Cycle 2 is killed at each of its
+    commits in turn (silver matchwise, silver deliverywise, ledger), once
+    before the commit's data write and once after the write but before
+    its log entry is published; each rerun crashes at the next point.
+    A clean rerun must then reach an uninterrupted cycle 2's silver
+    rows, published CSV bytes and ledger."""
+    landing = str(tmp_path / "landing")
+    write_fixture_dir(landing, n_matches=6, seed=9)
+    clean, crashed = tmp_path / "clean", tmp_path / "crashed"
+    _cycle(spark, landing, clean)
+    shutil.copytree(clean, crashed)
+    assert _cycle(spark, landing, clean).n_new_files == 3
+    want = _cycle_outcome(spark, clean)
+    assert want[2] == sorted(os.listdir(landing))  # each file once
+
+    for k in (1, 2, 3):
+        for name in ("commit", "_publish_entry"):
+            real = getattr(VersionedTable, name)
+            calls = []
+
+            def crash_on_kth(self, *args, _real=real, **kwargs):
+                calls.append(1)
+                if len(calls) == k:
+                    raise _Crash
+                return _real(self, *args, **kwargs)
+
+            monkeypatch.setattr(VersionedTable, name, crash_on_kth)
+            with pytest.raises(_Crash):
+                _cycle(spark, landing, crashed)
+            monkeypatch.undo()
+
+    assert _cycle(spark, landing, crashed).n_new_files == 3
+    assert _cycle_outcome(spark, crashed) == want
 
 
 def test_candidate_listing_filters_non_json(spark, landing, tmp_path):

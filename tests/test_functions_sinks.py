@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kaggle_data_pipeline_with_aws_spark.functions import scalars as S
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 from kaggle_data_pipeline_with_aws_spark.sources import sinks
 
 
@@ -63,34 +64,19 @@ def test_upsert_keyed_idempotent_and_updates_win(spark, tmp_path):
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id INT, val STRING")
     sinks.upsert_keyed(spark, table, v1, ["id"])
     assert sorted(
-        (r.id, r.val) for r in spark.read.parquet(table).collect()
+        (r.id, r.val) for r in VersionedTable(spark, table).snapshot().collect()
     ) == [(1, "a"), (2, "b")]
 
     # replay the same batch → no duplicates (T7)
     sinks.upsert_keyed(spark, table, v1, ["id"])
-    assert spark.read.parquet(table).count() == 2
+    assert VersionedTable(spark, table).snapshot().count() == 2
 
     # overlapping batch → updates win, new keys insert
     v2 = spark.createDataFrame([(2, "B2"), (3, "c")], "id INT, val STRING")
     sinks.upsert_keyed(spark, table, v2, ["id"])
     assert sorted(
-        (r.id, r.val) for r in spark.read.parquet(table).collect()
+        (r.id, r.val) for r in VersionedTable(spark, table).snapshot().collect()
     ) == [(1, "a"), (2, "B2"), (3, "c")]
-
-
-def test_publish_metadata_top1(spark):
-    mw = spark.createDataFrame(
-        [
-            (10, "2024-01-05"),
-            (12, "2024-06-30"),
-            (11, "2024-06-30"),
-        ],
-        "match_id INT, date STRING",
-    )
-    meta = sinks.publish_metadata(mw)
-    assert meta.latest_match_id == 12  # date desc, then match_id desc
-    assert meta.latest_date == "30/06/2024"
-    assert "30/06/2024" in meta.version_notes
 
 
 def test_with_notification_success_and_failure():
@@ -222,6 +208,7 @@ def test_kaggle_publish_artifact_shape(spark, tmp_path):
         [
             (10, "2024-01-05", "India", "Australia"),
             (12, "2024-06-30", "England", "Pakistan"),
+            (11, "2024-06-30", "Kenya", "Oman"),  # same date, lower id
         ],
         "match_id INT, date STRING, team_1 STRING, team_2 STRING",
     )

@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 )
 
 from kaggle_data_pipeline_with_aws_spark.operators import flatten
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 from kaggle_data_pipeline_with_aws_spark.sources.readers import (
     read_json_documents,
 )
@@ -84,7 +85,7 @@ def test_stream_extract_exactly_once_across_cycles(spark, tmp_path):
     q = stream_extract(spark, landing, out, ckpt, max_files_per_trigger=3)
     q.awaitTermination()
 
-    mw = spark.read.parquet(os.path.join(out, "matchwise"))
+    mw = VersionedTable(spark, os.path.join(out, "matchwise")).snapshot()
     assert mw.count() == 8
     assert mw.select("match_id").distinct().count() == 8
 
@@ -93,16 +94,49 @@ def test_stream_extract_exactly_once_across_cycles(spark, tmp_path):
     q = stream_extract(spark, landing, out, ckpt, max_files_per_trigger=3)
     q.awaitTermination()
 
-    mw = spark.read.parquet(os.path.join(out, "matchwise"))
+    mw = VersionedTable(spark, os.path.join(out, "matchwise")).snapshot()
     assert mw.count() == 12  # the 8 old files were NOT reprocessed
     assert mw.select("match_id").distinct().count() == 12
 
     # deliverywise fan-out saw the same files, and matches batch flatten
-    dw = spark.read.parquet(os.path.join(out, "deliverywise"))
+    dw = VersionedTable(spark, os.path.join(out, "deliverywise")).snapshot()
     raw = read_json_documents(spark, landing, CRICSHEET_MATCH_SCHEMA)
     batch_dw = flatten.deliverywise(raw)
     assert dw.count() == batch_dw.count()
     assert dw.select("match_id").distinct().count() == 12
+
+
+def test_stream_extract_replayed_batch_commits_once(spark, tmp_path):
+    """A crash after a batch's sink commits but before the checkpoint
+    records the batch makes Spark replay it on restart; the sink's
+    batch-id commits must skip the replay instead of appending twice."""
+    landing = str(tmp_path / "landing")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    write_fixture_dir(landing, n_matches=6, seed=3)
+
+    def counts():
+        return [
+            VersionedTable(spark, os.path.join(out, t)).snapshot().count()
+            for t in ("matchwise", "deliverywise")
+        ]
+
+    def run():
+        stream_extract(
+            spark, landing, out, ckpt, max_files_per_trigger=3
+        ).awaitTermination()
+
+    run()
+    before = counts()
+    assert before[0] == 6
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):  # the entry and its checksum
+        os.remove(os.path.join(commits, name))
+
+    run()
+    assert os.path.exists(os.path.join(commits, str(last)))  # replayed
+    assert counts() == before
 
 
 def test_stream_extract_matches_batch_values(spark, tmp_path):
@@ -113,7 +147,7 @@ def test_stream_extract_matches_batch_values(spark, tmp_path):
     q.awaitTermination()
 
     streamed = (
-        spark.read.parquet(os.path.join(out, "matchwise"))
+        VersionedTable(spark, os.path.join(out, "matchwise")).snapshot()
         .orderBy("match_id")
         .collect()
     )
@@ -236,7 +270,8 @@ def test_streaming_and_batch_pipelines_agree(spark, tmp_path):
     q.awaitTermination()
     stream_rows = [
         r.asDict()
-        for r in spark.read.parquet(str(tmp_path / "out_stream/matchwise"))
+        for r in VersionedTable(spark, str(tmp_path / "out_stream/matchwise"))
+        .snapshot()
         .orderBy("match_id")
         .collect()
     ]
