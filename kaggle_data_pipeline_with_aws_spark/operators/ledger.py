@@ -26,17 +26,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import FILE_STATUS_SCHEMA
+from .txnlog import VersionedTable
 
 MATCHWISE_FLAG = "matchwise_data_extraction_status"
 DELIVERYWISE_FLAG = "deliverywise_data_extraction_status"
 
 
 def _ledger_table(spark: SparkSession, state_dir: str):
-    # Imported here, not at module level: tools/proof_audit.py treats an
-    # import change as a change to every symbol of the module, and
-    # merge_upsert's proofs do not depend on the transaction log.
-    from .txnlog import VersionedTable
-
     return VersionedTable(spark, os.path.join(state_dir, "file_status"))
 
 

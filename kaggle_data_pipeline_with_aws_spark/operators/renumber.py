@@ -63,33 +63,23 @@ def _order_surrogate(col: Column, dtype: T.DataType) -> Column | None:
     return None
 
 
-def contiguous_row_number(
+def _bucket(
     df: DataFrame,
     order_by: list[str | Column],
-    out_col: str = "row_number",
-    num_partitions: int | None = None,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Add a dense 1..N column defined by a total order.
-
-    ``order_by`` must be a total order (include a unique tie-breaker
-    key) — same requirement the reference's sort-then-range has
-    implicitly via ``(date, match_id)``.
-
-    ``accuracy`` feeds ``percentile_approx`` for the bucket boundaries.
-    Boundaries only have to BALANCE the buckets, not be precise
-    quantiles — any monotone cut is correct — so ~1,000 (≈0.1% relative
-    rank error) keeps the ~n buckets within noise of even while the
-    boundary job's sketch is 10× smaller. The 10,000 default is kept
-    for existing callers whose plans are driver-proven.
-    """
+    num_partitions: int | None,
+    accuracy: int,
+) -> Column | None:
+    """The int bucket column: ``n`` order-aligned quantile ranges of the
+    leading sort key, with boundaries baked in as literals. ``None``
+    when the leading key has no numeric surrogate (the caller falls
+    back to a single global window)."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     first = order_by[0]
     fcol = F.col(first) if isinstance(first, str) else first
     dtype = df.select(fcol.alias("__k")).schema[0].dataType
     surr = _order_surrogate(fcol, dtype)
-    if surr is None:  # exotic leading key type: correctness-first fallback
-        return _single_window_row_number(df, order_by, out_col)
+    if surr is None:
+        return None
 
     # One small job: boundary quantiles over a pruned scan. Baked in as
     # literals ⇒ deterministic bucket assignment across all later passes.
@@ -109,8 +99,34 @@ def contiguous_row_number(
         bucket = bucket.otherwise(F.lit(len(bounds)))
     else:
         bucket = F.lit(0)
+    return bucket.cast("int")
 
-    bucketed = df.withColumn("__bucket", bucket.cast("int"))
+
+def contiguous_row_number(
+    df: DataFrame,
+    order_by: list[str | Column],
+    out_col: str = "row_number",
+    num_partitions: int | None = None,
+    accuracy: int = 10_000,
+) -> DataFrame:
+    """Add a dense 1..N column defined by a total order.
+
+    ``order_by`` must be a total order (include a unique tie-breaker
+    key) — same requirement the reference's sort-then-range has
+    implicitly via ``(date, match_id)``.
+
+    ``accuracy`` feeds ``percentile_approx`` for the bucket boundaries.
+    Boundaries only have to BALANCE the buckets, not be precise
+    quantiles — any monotone cut is correct — so ~1,000 (≈0.1% relative
+    rank error) keeps the ~n buckets within noise of even while the
+    boundary job's sketch is 10× smaller. The weekly cycle uses the
+    10,000 default.
+    """
+    bucket = _bucket(df, order_by, num_partitions, accuracy)
+    if bucket is None:  # exotic leading key type: correctness-first fallback
+        return _single_window_row_number(df, order_by, out_col)
+
+    bucketed = df.withColumn("__bucket", bucket)
     local = F.row_number().over(
         Window.partitionBy("__bucket").orderBy(*order_by)
     )
@@ -159,12 +175,8 @@ def global_prefix_sum(
     is bit-exact — the bucket decomposition only reorders integer
     additions.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    first = order_by[0]
-    fcol = F.col(first) if isinstance(first, str) else first
-    dtype = df.select(fcol.alias("__k")).schema[0].dataType
-    surr = _order_surrogate(fcol, dtype)
-    if surr is None:  # exotic leading key: correctness-first fallback
+    bucket = _bucket(df, order_by, num_partitions, 10_000)
+    if bucket is None:  # exotic leading key: correctness-first fallback
         return df.withColumn(
             out_col,
             F.sum(weight_col)
@@ -176,24 +188,7 @@ def global_prefix_sum(
             .cast("long"),
         )
 
-    probs = [i / n for i in range(1, n)] or [0.5]
-    row = df.select(
-        F.percentile_approx(
-            surr, F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("__b")
-    ).first()
-    quantiles = row["__b"] if row is not None and row["__b"] is not None else []
-    bounds = sorted({b for b in quantiles if b is not None})
-
-    if bounds:
-        bucket = F.when(surr.isNull(), F.lit(0))  # nulls sort first
-        for i, b in enumerate(bounds):
-            bucket = bucket.when(surr < F.lit(b), F.lit(i))
-        bucket = bucket.otherwise(F.lit(len(bounds)))
-    else:
-        bucket = F.lit(0)
-
-    bucketed = df.withColumn("__bucket", bucket.cast("int"))
+    bucketed = df.withColumn("__bucket", bucket)
     local = F.sum(weight_col).over(
         Window.partitionBy("__bucket")
         .orderBy(*order_by)
@@ -228,10 +223,8 @@ def global_running_max(
     PRECEDING AND 1 PRECEDING)`` — strictly-preceding running max over
     a TOTAL order — without the single-partition window.
 
-    Same decomposition as ``contiguous_row_number`` (deliberately
-    re-stated rather than refactored out of it, so this addition
-    cannot perturb that function's proven plan): quantile-bucket the
-    leading key, run the bounded window INSIDE each bucket, and carry
+    Same decomposition as ``contiguous_row_number``: quantile-bucket
+    the leading key, run the bounded window INSIDE each bucket, and carry
     the maximum of all EARLIER buckets in via a bucket-sized prefix
     window + broadcast join — ``greatest(carry, within)``. Rows with
     no predecessor (the global first; ties handled by the full
@@ -241,34 +234,14 @@ def global_running_max(
     bucket (covered by the local window) or an earlier bucket
     (covered by the carry) — exact.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    first = order_by[0]
-    fcol = F.col(first) if isinstance(first, str) else first
-    dtype = df.select(fcol.alias("__k")).schema[0].dataType
-    surr = _order_surrogate(fcol, dtype)
-    if surr is None:
+    bucket = _bucket(df, order_by, num_partitions, 10_000)
+    if bucket is None:
         w = Window.orderBy(*order_by).rowsBetween(
             Window.unboundedPreceding, -1
         )
         return df.withColumn(out_col, F.max(value_col).over(w))
 
-    probs = [i / n for i in range(1, n)] or [0.5]
-    row = df.select(
-        F.percentile_approx(
-            surr, F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-        ).alias("__b")
-    ).first()
-    quantiles = row["__b"] if row is not None and row["__b"] is not None else []
-    bounds = sorted({b for b in quantiles if b is not None})
-    if bounds:
-        bucket = F.when(surr.isNull(), F.lit(0))
-        for i, b in enumerate(bounds):
-            bucket = bucket.when(surr < F.lit(b), F.lit(i))
-        bucket = bucket.otherwise(F.lit(len(bounds)))
-    else:
-        bucket = F.lit(0)
-
-    bucketed = df.withColumn("__rbucket", bucket.cast("int"))
+    bucketed = df.withColumn("__rbucket", bucket)
     w_in = Window.partitionBy("__rbucket").orderBy(*order_by).rowsBetween(
         Window.unboundedPreceding, -1
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import HASH_MOD, portable_hash
+from .text import HASH_MOD, portable_hash, portable_hash60
 
 
 def kmv_distinct_estimate(
@@ -275,11 +275,6 @@ def hll_registers(
     MAX per (group, idx) -> a shuffle bounded by groups x m rows; the
     grid fill joins against a groups-x-m frame built from the bounded
     distinct-group set (broadcast)."""
-    # local import: adding this symbol to the module's top-level
-    # import line would (per the proof audit's closure rule) stale
-    # every proven sketch query — same discipline as wave41
-    from .text import portable_hash60
-
     c = value if isinstance(value, Column) else F.col(value)
     h = df.select(
         F.col(group_col),

@@ -29,10 +29,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d33 — unigram log-probability scoring.
 # The classic cheap LM-quality proxy: score each document by the mean
@@ -322,8 +318,8 @@ def q37_customer_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The window partitions by segment so it parallelizes across
     segments; the pre-aggregation shrinks the windowed set to one row
     per customer before any sort."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     totals = orders.groupBy("o_custkey").agg(
         F.sum("o_totalprice").alias("total")
     )
@@ -480,9 +476,9 @@ def q38_supplier_revenue_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (revenue, suppkey) makes the order total. The rank window
     partitions by nation → parallel across nations, and it ranks the
     pre-aggregated supplier rollup, not raw lineitems."""
-    li = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     dec = "decimal(18,2)"
     rev = li.groupBy("l_suppkey").agg(
         F.round(
@@ -536,7 +532,7 @@ def q39_orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     window aggregate so the fact table is read once and shuffled once
     (by customer). Single-order customers are excluded (their order
     equals the mean by construction)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey")
     return (
         orders.select(
@@ -571,8 +567,8 @@ def q40_customers_with_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFr
     once, with no distinct needed) and Spark only ships the join key of
     the subquery side. The urgent-order filter pushes into the orders
     scan before the shuffle."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_custkey").alias("c_custkey")
     )
@@ -602,7 +598,7 @@ def q41_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     final hash aggregate instead of four scans + union. ``grouping_id``
     disambiguates a real NULL group key from a rolled-up margin (the
     standard CUBE pitfall)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -633,7 +629,7 @@ def q42_retained_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     full cross-year materialization). The year filters prune at the
     scan; at 100 TB with date-partitioned orders this reads exactly two
     year partitions."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     a = orders.filter(y == 1995).select("o_custkey")
     b = orders.filter(y == 1996).select("o_custkey")
@@ -672,7 +668,7 @@ def q43_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the previous stage — the frontier shrinks monotonically, and at
     scale each broadcastable frontier turns the next stage into scan +
     broadcast join + partial agg (no event-table shuffle)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id").agg(F.min("ts").alias("t1"))
@@ -871,7 +867,7 @@ def q44_churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a distinct + left-anti join on the key sets. Pairs with q42
     (INTERSECT) to close out the set-operation family; same two-
     partition pruned scan shape."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     a = orders.filter(y == 1995).select("o_custkey")
     b = orders.filter(y == 1996).select("o_custkey")
@@ -1019,7 +1015,7 @@ def q46_ewma_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing weights. Identical fold order on both engines →
     bit-comparable before the final rounding. The frame is 5 values, so
     the collected array cost is constant per row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1079,7 +1075,7 @@ def q48_json_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload). ``get_json_object`` evaluates JVM-side inside codegen; at
     scale prefer parsing ONCE into a struct column (``from_json`` at
     ingest) over re-parsing per query — this query is the probe face."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -1114,7 +1110,7 @@ def q49_unpivot_order_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans it as a single Expand over the aggregated (tiny) wide
     table, not one scan per measure; the oracle states the same thing
     as UNION ALL."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     wide = orders.groupBy("o_orderstatus").agg(
         F.count("*").cast("double").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
@@ -1345,7 +1341,7 @@ def q51_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase, aggregate per user. Two shuffles total: the session
     grouping and the per-user rollup; the oracle states sessionization
     as gaps-and-islands SQL."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sessions = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
@@ -1400,7 +1396,7 @@ def q52_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcasts the per-day fences back for a row-local filter. (A
     direct ``Window.orderBy(day)`` over the fact table would collapse
     ALL rows to one partition — the renumber-operator anti-pattern.)"""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     o = orders.select(
         "o_orderkey",
         "o_orderdate",
@@ -1546,7 +1542,7 @@ def d48_daily_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial re-aggregation compose. Per-day top-k is a bounded window
     (rows = distinct users per day); the estimate is deterministic via
     the portable hash, hence exactly oracle-checkable."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         F.date_trunc("day", "ts").alias("day"),
         text.portable_hash(
@@ -1712,7 +1708,7 @@ def q53_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a median). ``percentile`` runs as a true window aggregate over
     the bounded frame, partitioned per user, and its interpolation rule
     matches DuckDB's ``quantile_cont`` exactly."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1754,7 +1750,7 @@ def q54_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (users-sized → broadcast back); activity dedup + the cell count are
     partial-aggregated, so the events table is scanned twice and never
     shuffled raw."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -1803,7 +1799,7 @@ def q55_value_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one co-moment aggregate; both engines use the same co-moment
     formula, so rounded values agree exactly. Users with fewer than 10
     consecutive pairs are dropped (the estimate is noise below that)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = ev.select(
         "user_id", "value", F.lag("value").over(w).alias("prev_value")
@@ -1850,10 +1846,10 @@ def q56_revenue_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny) nation rollup that broadcast back, so the fact table is
     scanned once. Dimension joins broadcast (nation/region are
     dimension-sized at any scale)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     rev = (
         orders.join(
             F.broadcast(customer.select("c_custkey", "c_nationkey")),
@@ -2095,7 +2091,7 @@ def q59_argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregates, so unlike a rank-over-partition this never
     materializes a per-group sort; the idiomatic greatest-n-per-group
     at 100 TB when n=1."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     mx = orders.groupBy(
         F.col("o_orderpriority").alias("__prio")
     ).agg(F.max("o_totalprice").alias("top_price"))
@@ -2149,7 +2145,7 @@ def q60_snapshot_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, a single-pass conditional aggregation is the cheaper
     equivalent; the full-outer form is the one that generalizes to
     distinct sources.)"""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(_RECON_CUTOFF).cast("date")
     b = (
         orders.filter(F.col("o_orderdate") < cutoff)

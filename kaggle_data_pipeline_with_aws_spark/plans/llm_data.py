@@ -30,10 +30,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -335,7 +331,7 @@ _NORM_SQL = (
     """,
 )
 def d09_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") < 10)
     return similarity.brute_force_topk(embs, queries, k=5)
 
@@ -396,7 +392,7 @@ def d10_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs form (`similarity.near_duplicate_pairs`) is its
     verification twin in tests."""
     return similarity.near_duplicate_pairs_banded(
-        _embs(spark, sf_dir), threshold=0.4, n_bands=4
+        load_table(spark, sf_dir, "embeddings"), threshold=0.4, n_bands=4
     )
 
 
@@ -539,7 +535,7 @@ def d13_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the candidate set itself is deterministic: the ±1 planes are
     seeded constants, so the oracle rebuilds the identical signatures,
     Hamming pre-filter and cosine ranking in SQL)."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") < 10)
     return similarity.hyperplane_lsh_topk(embs, queries, k=5)
 
@@ -699,7 +695,7 @@ def d15_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the map side); the Lloyd mean is a (cell, dim) aggregate —
     cells×64 rows however big the corpus; serving is d20's shape
     (broadcast centroid table, equi-join on cell, never all-pairs)."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     seeds = F.broadcast(
         embs.filter(F.col("vec_id") < 16).select(
             F.col("vec_id").alias("sid"), F.col("embedding").alias("semb")
@@ -943,7 +939,7 @@ def d20_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing are relational argmax-over-cosine — the production shape of
     an offline-fitted index, and fully oracle-checked (unlike the
     KMeans-fit d15)."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     centroids = embs.filter(F.col("vec_id") < 16)
     queries = embs.filter(F.col("vec_id") < 10)
     return similarity.ivf_topk_fixed_centroids(
@@ -1192,7 +1188,7 @@ def d29_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier trains from): posexplode the vector → one (label, dim)
     partial-agg — the shuffle carries 64 rows per (partition, label),
     never the vectors themselves."""
-    e = _embs(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     return (
         e.select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")

@@ -4,9 +4,8 @@ Every operator the engine implements (SURVEY.md §2 inventory + the
 LLM-data-pipeline extensions) registers here as a named query:
 
 - ``QUERIES[name]``   — callable ``(spark, sf_dir) -> DataFrame``
-- ``ORACLE_SQL[name]``— equivalent ANSI SQL for the DuckDB oracle
-  (omitted only for genuinely non-SQL-expressible operators; the driver
-  then records a weaker rows-only check).
+- ``ORACLE_SQL[name]``— equivalent ANSI SQL for the DuckDB oracle;
+  tier-1 (tests/test_entry.py) compares every query with it.
 
 Column names are aliased identically on both sides — the harness sorts
 columns by name before hashing values.
@@ -22,13 +21,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def spark_query(name: str, oracle: str | None = None):
-    """Register a query plan and (optionally) its DuckDB oracle twin."""
+def spark_query(name: str, oracle: str):
+    """Register a query plan and its DuckDB oracle twin."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
+        ORACLE_SQL[name] = oracle
         return fn
 
     return deco

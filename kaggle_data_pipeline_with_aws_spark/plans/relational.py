@@ -23,10 +23,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship: pricing summary (TPC-H Q1 shape).
 # Reference analog: A1 filtered nested sum (extract_matchwise...py:85-98) +
@@ -48,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -78,7 +74,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q02_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .withColumnRenamed("o_orderkey", "order_id")
         .withColumnRenamed("o_custkey", "cust_id")
@@ -99,7 +95,7 @@ def q02_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q03_filter_endswith(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").endswith("bolt"))
         .select("p_partkey", "p_name", "p_type")
     )
@@ -117,7 +113,7 @@ def q03_filter_endswith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q04_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.filter(
         (F.col("c_mktsegment") == "BUILDING") | (F.col("c_mktsegment") == "AUTOMOBILE")
     ).select("c_custkey", "c_name", "c_mktsegment")
@@ -135,7 +131,7 @@ def q04_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q05_ci_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.filter(F.lower(F.col("o_orderpriority")) == "1-urgent").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -158,7 +154,7 @@ def q05_ci_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q06_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"]
     return o.select(
         *[
@@ -182,7 +178,7 @@ def q06_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q07_top1_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
         .limit(1)
@@ -204,8 +200,8 @@ def q07_top1_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q08_left_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     return li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey, "left").select(
@@ -230,9 +226,9 @@ def q08_left_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q09_anti_join_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     returned = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .select("l_orderkey")
     )
@@ -253,7 +249,7 @@ def q09_anti_join_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q10_group_year_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.year("o_orderdate").cast("long").alias("order_year"))
         .agg(F.count("*").alias("n_orders"))
@@ -273,7 +269,7 @@ def q10_group_year_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_group_two_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"))
     )
@@ -293,7 +289,7 @@ def q11_group_two_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_bool_recode_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.withColumn("is_high", F.col("o_totalprice") > 50000)
         .withColumn(
@@ -318,7 +314,7 @@ def q12_bool_recode_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q13_conditional_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("n_rows"),
         F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias(
@@ -342,7 +338,7 @@ def q13_conditional_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q14_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(F.col("l_returnflag").alias("flag"))
         .union(li.select(F.col("l_linestatus").alias("flag")))
@@ -365,7 +361,7 @@ def q14_distinct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q15_group_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(F.count("*").alias("n"))
     total = ev.agg(F.count("*").alias("__total"))
     return (
@@ -391,7 +387,7 @@ def q15_group_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q16_multikey_sort_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
         .limit(100)
@@ -413,7 +409,7 @@ def q16_multikey_sort_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_global_renumber(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     # accuracy=1_000: the boundary sketch only balances buckets (any
     # monotone cut is correct), and the r4 bench regression traced to
     # the boundary job's cost/variance — see BENCH_SCALING.md (q17
@@ -436,7 +432,7 @@ def q17_global_renumber(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q18_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber")).alias(
             "line_key"
@@ -463,9 +459,9 @@ def q18_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q19_coalesce_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     returned = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("returned_qty"))
@@ -490,7 +486,7 @@ def q19_coalesce_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q20_date_reformat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.date_format("o_orderdate", "dd/MM/yyyy").alias("formatted_date"),
@@ -509,7 +505,7 @@ def q20_date_reformat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q21_regexp_extract_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.regexp_extract("c_name", r"Customer#(\d+)", 1).cast("long").alias("name_id"),
@@ -527,7 +523,7 @@ def q21_regexp_extract_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q22_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
@@ -550,7 +546,7 @@ def q22_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q23_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.window("ts", "1 hour").alias("w"),
@@ -584,7 +580,7 @@ def q23_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q24_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
     )
@@ -614,11 +610,13 @@ def q24_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q25_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_regionkey", "n_name"
+    )
+    r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     return (
         li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -648,7 +646,7 @@ def q25_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q26_bounded_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .limit(10)
@@ -671,7 +669,7 @@ def q26_bounded_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q27_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("__pos", "token"),
@@ -702,7 +700,7 @@ def q27_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -731,7 +729,7 @@ def q28_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q29_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "hour", F.date_trunc("hour", "ts")
     )
     return ev.rollup("event_type", "hour").agg(
@@ -755,7 +753,7 @@ def q29_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q30_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -781,7 +779,7 @@ def q30_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q31_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     return ev.select(
@@ -815,7 +813,7 @@ def q31_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q32_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.interval import interval_point_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     intervals = ev.filter(F.col("event_type") == "signup").select(
         F.col("event_id").alias("signup_id"),
         F.col("ts").alias("start_ts"),
@@ -868,7 +866,7 @@ def q32_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q33_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hour = F.date_trunc("hour", "ts")
     w_pick = Window.partitionBy("user_id", hour).orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -921,7 +919,7 @@ def q33_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q34_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(0.5)), 6).alias("p50"),
         F.round(F.percentile("value", F.lit(0.9)), 6).alias("p90"),
@@ -956,7 +954,7 @@ def q35_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows (those starting at its 30-min bucket and the one before).
     The shuffle carries partially-aggregated (window, type) rows — the
     2× fan-out happens map-side, pre-combine."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
@@ -992,7 +990,7 @@ def q35_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q36_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
     )

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup, similarity, text
-from ..operators.components import connected_components
 from ..operators.packing import next_fit_pack
 from ..operators.renumber import global_prefix_sum
 from ..sources.readers import load_table

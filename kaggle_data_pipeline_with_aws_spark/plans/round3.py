@@ -28,10 +28,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q61 — cheapest qualified supplier per part (TPC-H Q2 shape).
 # The schema has no partsupp table, so supply cost is the observed mean
@@ -90,17 +86,17 @@ def q61_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (observed: a single-row group's mean 1046.3109375). The collected
     group is bounded by lineitems per (part, supplier) pair — ~dozens
     in TPC-H-shaped data — so the array stays row-local and tiny."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") < 10)
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") < 10)
     sup = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+                load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
@@ -169,15 +165,15 @@ def q62_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated (order-sized, not line-sized) result — rank by the
     ROUNDED revenue so the cut is engine-stable."""
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") < cutoff)
         .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     rev = (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .groupBy(
@@ -223,8 +219,8 @@ def q63_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps at most one copy of each order — no fact-side blowup, no
     distinct needed (the exact plan Catalyst uses for decorrelated
     EXISTS subqueries)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = o.join(
         li,
         (o["o_orderkey"] == li["l_orderkey"])
@@ -263,15 +259,15 @@ def q64_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation is broadcast; the year filter prunes orders before its join.
     At 100 TB the 1997 filter would also prune partitions if orders is
     date-partitioned — the filter sits directly on the scan."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate") == 1997
     ).select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -318,23 +314,23 @@ def q65_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator and denominator — the fact table is scanned and shuffled
     exactly once, on the year key."""
     eur = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+                load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", F.lit(1).alias("is_eur"))
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -391,7 +387,7 @@ def q66_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     place, and only last-shipping lines of multi-supplier orders
     survive to the supplier rollup. Counts are integers, so the global
     top-20 rank is exactly reproducible."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     per_order = li.groupBy("l_orderkey").agg(
@@ -406,7 +402,7 @@ def q66_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_suppkey")
         .distinct()
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     counted = (
         blockers.join(F.broadcast(sup), blockers["l_suppkey"] == sup["s_suppkey"])
         .groupBy("s_suppkey", "s_name")
@@ -565,7 +561,7 @@ def d70_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the item-frequency table and the 1-row user count broadcast back.
     Item vocabulary is assumed dimension-sized (event types, SKUs) —
     the standard market-basket regime."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     basket = ev.select("user_id", "event_type").distinct()
     n_users = basket.agg(
         F.countDistinct("user_id").cast("long").alias("n_users")
@@ -763,7 +759,7 @@ def d72_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per (partition, cell), never the vectors. Iterating this step
     IS distributed KMeans — each round is one cheap map + one tiny
     shuffle, centroids re-broadcast each round."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     cents = e.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("__ct")
     )
@@ -830,7 +826,7 @@ def d73_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential folds inside codegen; nothing shuffles. Johnson-
     Lindenstrauss-style compression — downstream distance work runs on
     8 doubles instead of 64 floats."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     cols = []
     for p in range(_D73_PLANES):

@@ -21,10 +21,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q80 — explicit GROUPING SETS (not the full CUBE): ((nation, year),
 # (nation), ()) — the named-subtotal report shape.
@@ -55,11 +51,11 @@ def q80_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers that). Spark expands the sets inside one partial+final hash
     aggregate: a single fact pass, never three scans + union.
     ``grouping_id``-style gid disambiguates genuine NULL keys."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     joined = (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -126,14 +122,14 @@ def q81_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections (reference upsert semantics at ``utils.py:74-89``)."""
     from ..operators.ledger import merge_upsert
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     target = cust.filter(F.col("c_custkey") % 3 != 0).select(
         "c_custkey",
         "c_name",
         F.round("c_acctbal", 6).alias("c_acctbal"),
         "c_mktsegment",
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
     source = (
@@ -176,7 +172,7 @@ def q82_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     all five priority classes). One groupBy with a distinct-count
     aggregate compared to the broadcast 1-row universe count — never
     the textbook double-NOT-EXISTS (two correlated anti-joins)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     universe = o.agg(
         F.count_distinct("o_orderpriority").alias("__u")
     )
@@ -225,11 +221,11 @@ def q83_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark skips the extra distinct-values job and the aggregate stays
     one partial+final pass; unlisted future values fail loudly instead
     of silently adding columns. Missing cells coalesce to 0."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     joined = (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -273,7 +269,7 @@ def q84_range_frame_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global window anywhere."""
     from ..functions.scalars import epoch_micros
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(epoch_micros(F.col("ts")))
@@ -313,7 +309,7 @@ def d86_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; the assignment column itself costs nothing at 100 TB."""
     from ..operators.text import portable_hash
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bucket = F.pmod(
         portable_hash(F.col("doc_id").cast("string")), F.lit(100)
     )
@@ -372,7 +368,7 @@ def d87_overlap_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle a value-exact handle without hauling chunk text."""
     from ..operators.text import portable_hash, tokens
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", tokens("text").alias("t")).filter(
         F.array_size("t") > 0
     )
@@ -441,7 +437,7 @@ def d88_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Short docs (fewer than w k-grams) keep their single global min."""
     from ..operators.text import portable_hash, tokens
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", tokens("text").alias("t")).filter(
         F.array_size("t") >= _WIN_K
     )
@@ -504,7 +500,7 @@ def d89_contamination_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     own count and never on content."""
     from ..operators.dedup import shingle_table
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = shingle_table(d, "text", 3)
     bench = (
         sh.filter(F.col("doc_id") < 20).select("shingle").distinct()
@@ -551,7 +547,7 @@ def d90_embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes). posexplode → 64-way groupBy: one shuffle of (dim, value)
     pairs; at scale the partial aggregates collapse each partition to
     64 rows before the exchange."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     exploded = e.select(
         F.posexplode("embedding").alias("pos", "v")
     ).select((F.col("pos") + 1).cast("int").alias("dim"), F.col("v").cast("double"))
@@ -609,7 +605,7 @@ def d91_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     within probed cells only."""
     from ..operators.similarity import cosine_vectorized
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     anchors = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
@@ -683,7 +679,7 @@ def d92_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; the only window orders ~n/50 bucket rows."""
     from ..operators.text import tokens, word_shingles
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(word_shingles(tokens("text"), 2)).alias("term")
     )

@@ -14,10 +14,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q85 — events since last purchase (gaps-and-islands segmentation).
 # ---------------------------------------------------------------------------
@@ -44,7 +40,7 @@ def q85_events_since_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase row opens its own segment, so it reads n_since = 0 and
     the count climbs until the next purchase. Both windows partition
     by user: state is bounded per key, no global window anywhere."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_seg = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -82,7 +78,7 @@ def q86_except_all_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT/anti-join can't express (they collapse multiplicity).
     Spark plans it as one count-aggregate per side + a generate of
     the surplus — two shuffles on user_id, no row-by-row matching."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select("user_id")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id")
     return views.exceptAll(clicks)
@@ -111,7 +107,7 @@ def d93_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned."""
     from ..operators.renumber import contiguous_row_number
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     ranked = contiguous_row_number(
         d, [F.col("n_chars"), F.col("doc_id")], out_col="__rank"
     )
@@ -177,7 +173,7 @@ def d94_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     data sees one groupBy only."""
     from ..operators.text import tokens, word_ngrams
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         F.explode(word_ngrams(tokens("text"), 2)).alias("term")
     )
@@ -270,7 +266,7 @@ def d95_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     past bigint range at cluster row counts."""
     from ..operators.similarity import norm
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     quant = F.floor(
         norm(F.col("embedding")) * F.lit(1e10) + F.lit(0.5)
     ).cast("long")
@@ -335,7 +331,7 @@ def d96_lang_profile_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate, shuffled once on term."""
     from ..operators.text import tokens
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "lang", F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
@@ -395,7 +391,7 @@ def d97_length_token_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (sum, sum², cross-sum per group): one shuffle of 10 rows."""
     from ..operators.text import tokens
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     m = d.select(
         "lang",
         F.col("n_chars").cast("double").alias("c"),

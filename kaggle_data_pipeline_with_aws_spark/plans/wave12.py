@@ -38,10 +38,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q87 — forecast revenue change (TPC-H Q6 shape).
 # ---------------------------------------------------------------------------
@@ -66,7 +62,7 @@ def q87_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final exchange moves one row per task. No join, no wide
     shuffle. Reference analytics equivalent: the notebook's filtered
     aggregate pattern (kaggle_notebook.ipynb)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -127,21 +123,21 @@ def q88_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     and engine-identical at any scale — the 10× sweep caught the raw
     double sum drifting the displayed cent — and still a
     partial-aggregable JVM-side sum."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     part = F.broadcast(
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("red%"))
         .select("p_partkey", "p_retailprice")
     )
     sup = F.broadcast(
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", "n_name")
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     dec = "decimal(18,2)"
     profit = F.col("l_extendedprice").cast(dec) * (
         F.lit(1).cast(dec) - F.col("l_discount").cast(dec)
@@ -186,10 +182,10 @@ def q89_late_priority_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate applied post-join (it references both sides), then a
     2-row conditional aggregate that partial-aggregates map-side.
     The CASE counts are the pivoted boolean-distribution face of A5."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linestatus", "l_shipdate"
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -237,9 +233,9 @@ def q90_customer_order_distribution(
     the second aggregate is histogram-sized. Two key-shuffles total;
     the NOT-equal predicate lives in the join's pushed filter, not a
     post-join drop, so null-extension semantics match the oracle."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     per_cust = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") != "5-LOW")
         .groupBy("o_custkey")
         .agg(F.count("*").alias("__n"))
@@ -276,12 +272,12 @@ def q91_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-column broadcast; both sums ride ONE conditional aggregate over
     one fact pass (never two scans for numerator/denominator). Output
     is a single row — the exchange moves one partial per task."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
     part = F.broadcast(
-        _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+        load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
@@ -327,7 +323,7 @@ def q92_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Revenue is rounded BEFORE the max comparison so the equality is
     engine-stable (comparing raw float sums across engines would be
     a coin flip at the boundary)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
@@ -337,7 +333,7 @@ def q92_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = revenue.agg(F.max("total_revenue").alias("__mx"))
     sup = F.broadcast(
-        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+        load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     )
     return (
         revenue.crossJoin(F.broadcast(mx))
@@ -379,17 +375,17 @@ def q93_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered part dimension a broadcast equi-join; the count-distinct
     re-shuffles only the surviving pairs on the 3-part group key."""
     pairs = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .distinct()
     )
     bad = F.broadcast(
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
     part = F.broadcast(
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(
             (F.col("p_brand") != "Brand#5")
             & F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34)
@@ -434,13 +430,13 @@ def q94_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact rows before the fence comparison. Compare q39's window-based
     decorrelation: here the subquery is over a DIFFERENT grain, so a
     join — not a window — is the right rewrite."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     fences = (
         li.groupBy(F.col("l_partkey").alias("__pk"))
         .agg((F.lit(0.5) * F.avg("l_quantity")).alias("qty_fence"))
     )
     brand = F.broadcast(
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#3")
         .select("p_partkey")
     )
@@ -488,12 +484,12 @@ def q95_qualified_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT SEMI join into the (already nation-filtered, broadcast)
     supplier dimension — IN-subquery as semi-join, no distinct
     needed, no row ever duplicated."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
     )
     small = F.broadcast(
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
@@ -505,10 +501,10 @@ def q95_qualified_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     sup = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "nation").filter(
+                load_table(spark, sf_dir, "nation").filter(
                     F.col("n_name").isin("NATION_3", "NATION_7", "NATION_11")
                 )
             ),

@@ -34,10 +34,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q96 — FK orphan audit across the whole star schema.
 # ---------------------------------------------------------------------------
@@ -78,11 +74,11 @@ def q96_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     special case of this audit."""
     out = None
     for label, child, ckey, parent, pkey in _FK_EDGES:
-        parents = _t(spark, sf_dir, parent).select(pkey).distinct()
+        parents = load_table(spark, sf_dir, parent).select(pkey).distinct()
         if parent in ("nation", "supplier", "part", "customer"):
             parents = F.broadcast(parents)
         edge = (
-            _t(spark, sf_dir, child)
+            load_table(spark, sf_dir, child)
             .select(ckey)
             .join(parents, F.col(ckey) == F.col(pkey), "left")
             .agg(
@@ -119,7 +115,7 @@ def q97_customer_journey(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the struct (row-local), then project+join — one shuffle on the
     group key, partial collect_list map-side, per-group state bounded
     by orders/customer."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     packed = F.sort_array(
         F.collect_list(
             F.struct(
@@ -167,7 +163,7 @@ def q98_modal_value_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin via min-of-struct — an ALL-aggregate path, no window, no
     sort)."""
     c = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.floor("value").cast("long").alias("bucket")
         )
@@ -220,7 +216,7 @@ def d104_jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic trick for CI estimation at 100-TB scale where
     bootstrap replication of the corpus is unaffordable."""
     g = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
             F.sum("n_chars").cast("double").alias("s"),
@@ -296,7 +292,7 @@ def _gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     partials = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("embedding")
         .mapInPandas(partial_gram, "i int, j int, v double")
     )

@@ -21,19 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# Unused since d108 moved to text_substrate, but kept byte-identical to
-# the round-5 proof baseline: tools/proof_audit.py treats ANY module-
-# level import change as module-wide, which would invalidate the valid
-# q99/q100/d107/d109 proofs. Remove when this module's queries next
-# re-prove anyway.
-from ..operators import dedup  # noqa: F401
 from ..sources.readers import load_table
 from .llm_data import _minhash_pairs_cte
 from .registry import spark_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +55,7 @@ def q99_value_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus size. Same pre-aggregate-then-window shape as q76's
     running distinct."""
     c = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.round("value", 1).alias("bucket"))
         .agg(F.count("*").alias("n"))
     )
@@ -116,15 +106,15 @@ def q100_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets, not 4. The supplier→nation→region chain is broadcast; the
     fact shuffles once on the expanded grouping key. ``grouping()``
     bits disambiguate rolled-up margins from genuine NULLs."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dims = F.broadcast(
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(_t(spark, sf_dir, "region")),
+            F.broadcast(load_table(spark, sf_dir, "region")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "n_name", "r_name")
@@ -212,7 +202,7 @@ def d107_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — no window over data-sized partitions, no shuffle of
     the embedding table at all (the grouping key is vec_id, already
     unique per row, so Catalyst keeps it a local aggregate)."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(
         embs.filter(F.col("vec_id") < _N_CENT).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
@@ -304,7 +294,7 @@ def d108_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS that probe, batch-side sized. Reference parity: this is the
     ledger anti-join (J2/T2) upgraded from filename-exact to
     content-near equality."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     meta = docs.select("doc_id", "source", F.md5("text").alias("h"))
     batch = meta.filter(F.col("source") == _BATCH_SOURCE)
     corpus = meta.filter(F.col("source") != _BATCH_SOURCE)
@@ -380,7 +370,7 @@ def d109_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level shape as d77's stopword discovery, measuring the
     opposite tail."""
     tf = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")
         .agg(F.count("*").alias("n"))

@@ -32,10 +32,6 @@ from .llm_data import _DOT_SQL, _DOT_VC, _NORM_C, _NORM_SQL, _NORM_V
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d110 — SemDeDup (one-shot, order-independent variant).
 # ---------------------------------------------------------------------------
@@ -96,7 +92,7 @@ def d110_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent pass, so the keep set is deterministic and both
     engines agree without iterating). Output: every vector with its
     cell, centroid similarity, and keep flag."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(
         embs.filter(F.col("vec_id") < 16).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
@@ -237,7 +233,7 @@ def d111_logreg_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift can never compound."""
     tok = text.tokens("text")
     n = F.size(tok)
-    f = _t(spark, sf_dir, "documents").select(
+    f = load_table(spark, sf_dir, "documents").select(
         F.lit(1.0).alias("x0"),
         (n / 100.0).alias("x1"),
         (F.size(F.array_distinct(tok)).cast("double") / n).alias("x2"),
@@ -324,7 +320,7 @@ def d112_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.aggregate(
         tok, F.lit(0).cast("long"), lambda a, w: a + F.length(w)
     ) / F.size(tok)
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         F.floor(score * 10).cast("long").alias("bucket"),
         score.alias("score"),
         F.when(F.array_contains(tok, "the"), 1.0).otherwise(0.0).alias("y"),
@@ -369,7 +365,7 @@ def q101_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. At 100 TB this is the canonical 'compare two cohorts
     without moving them' shape."""
     g = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "view"))
         .groupBy("event_type")
         .agg(
@@ -425,7 +421,7 @@ def q102_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     second scan). Day-of-week is normalized to DuckDB's Sunday=0
     convention (Spark's dayofweek is Sunday=1)."""
     d = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
             (F.dayofweek("ts") - 1).cast("int").alias("dow"),

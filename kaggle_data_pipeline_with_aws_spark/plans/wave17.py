@@ -22,10 +22,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q103 — conversion-latency percentiles.
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ def q103_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact percentile over it is cheap at any corpus scale. Timestamps
     difference through the shared `epoch_micros` helper (the NTZ-safe
     path that fixed s04/s05)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("fv"),
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
@@ -128,7 +124,7 @@ def d113_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5, never the text; token-explode distinct for vocabulary),
     each reduced to a one-row frame before a broadcast crossJoin
     stitches the card together — nothing wide ever joins."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("source").alias("n_sources"),
@@ -195,7 +191,7 @@ def d114_tail_token_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct); the rare-word set is vocabulary-sized and broadcasts
     into the hit semi-join; the per-source report is a left-join flag
     aggregate. The audit you run BEFORE destructive vocab filtering."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).distinct()
@@ -261,7 +257,7 @@ def d115_cross_source_dup_matrix(
     dup mass is intra-source boilerplate or cross-source scraping.
     The pair list is near-dup-sized; source lookup is a broadcast
     join; the matrix is at most |sources|² rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = text_substrate.lsh_pairs(spark, sf_dir, threshold=0.5)
     meta = F.broadcast(docs.select("doc_id", "source"))
     j = (

@@ -19,10 +19,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q104 — lag-gap sessionization (30-minute inactivity timeout).
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def q104_lag_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timestamp math through `epoch_micros` (NTZ-safe)."""
     from ..functions.scalars import epoch_micros
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = epoch_micros(F.col("ts")) - epoch_micros(F.lag("ts").over(w))
     new_s = F.when(
@@ -149,7 +145,7 @@ def d116_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline would mishandle."""
     from .wave13 import _rule_cols
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     r1, r2, r3, r4 = _rule_cols()
     tok = text.tokens("text")
     neg = [

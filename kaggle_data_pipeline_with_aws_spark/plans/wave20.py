@@ -21,10 +21,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q106 — dynamic pivot (discover values, then one Expand).
 # ---------------------------------------------------------------------------
@@ -55,7 +51,7 @@ def q106_dynamic_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema deterministic (values sorted). The pivot itself is q83's
     one-Expand single-aggregate shape. The oracle fixes the same
     columns statically (sorted event types)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     values = sorted(
         r["event_type"]
         for r in ev.select("event_type").distinct().collect()
@@ -112,7 +108,7 @@ def d119_feature_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema stable as features are added."""
     tok = text.tokens("text")
     n = F.size(tok)
-    feats = _t(spark, sf_dir, "documents").select(
+    feats = load_table(spark, sf_dir, "documents").select(
         n.cast("double").alias("n_tokens"),
         (
             F.aggregate(tok, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
@@ -201,7 +197,7 @@ def d120_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     moved. Two bucket-sized aggregates and a 10-row join — rows are
     read once; compare d52's token-level KL (model drift) vs this
     signal-level index (pipeline drift)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     half = docs.agg(
         F.floor(F.max("doc_id") / 2).cast("long").alias("mid")
     )

@@ -17,10 +17,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d121 — Z-order layout audit over (l_partkey, l_suppkey).
 # ---------------------------------------------------------------------------
@@ -88,9 +84,8 @@ def d121_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     key). The z-key is pure row-local bit arithmetic in codegen; the
     file split reuses the rank machinery (the registered audit ranks
     to mirror the oracle exactly — a production write would
-    `repartitionByRange(zkey)`, the same one-exchange shape as
-    compact_parquet)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    `repartitionByRange(zkey)`, one exchange)."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     mx = li.agg(
         F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms")
     )
@@ -168,7 +163,7 @@ def q107_json_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     explodes row-local; the per-key stats are one aggregate over the
     (key, value) stream. At 100 TB the output is bounded by the key
     vocabulary, not the row count."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("props").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("props").isNotNull())
     kv = ev.select(
         F.explode(F.from_json("props", "map<string,string>")).alias(
             "key", "v"

@@ -23,10 +23,6 @@ from .registry import spark_query
 from .retrieval import _knn_graph_cte, _mutual_knn_edges
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q108 — schema-evolution union (unionByName + allowMissingColumns).
 # ---------------------------------------------------------------------------
@@ -52,7 +48,7 @@ def q108_schema_evolution_union(
     NAME) — positional UNION would silently misalign. The union is a
     zero-shuffle concatenation of the two scans; each side's
     projection and parity filter push down independently."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v1 = ev.filter(F.col("event_id") % 2 == 0).select(
         "event_id", "event_type", F.lit("v1").alias("schema_version")
     )

@@ -19,10 +19,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d123 — Gini / Lorenz balance audit of the source mixture.
 # ---------------------------------------------------------------------------
@@ -54,7 +50,7 @@ def d123_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     only row-level work is the groupBy count. The number d60's
     rebalance moves toward zero."""
     s = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count("*").alias("n"))
     )
@@ -124,7 +120,7 @@ def d124_quality_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two corpus passes total, both one-shuffle aggregates."""
     tok = text.tokens("text")
     n = F.size(tok)
-    f = _t(spark, sf_dir, "documents").select(
+    f = load_table(spark, sf_dir, "documents").select(
         "source",
         n.cast("double").alias("x"),
         (F.size(F.array_distinct(tok)).cast("double") / n).alias("y"),

@@ -20,10 +20,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q109 — per-user time-weighted average value.
 # ---------------------------------------------------------------------------
@@ -55,7 +51,7 @@ def q109_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final observation has no holding period and is excluded by
     definition. The naive row mean rides along so the audit SHOWS the
     bias it corrects. Timestamp math via `epoch_micros` (NTZ-safe)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dur = (
         epoch_micros(F.lead("ts").over(w)) - epoch_micros(F.col("ts"))
@@ -117,7 +113,7 @@ def d125_prefix_cache_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership flag (never the prefix STRING shuffled twice — the
     md5 collapses it to 16 bytes), three prefix lengths in one union
     of bucket-sized aggregates over one cached token array scan."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = text.tokens("text")
     out = None
     for k in _PREFIX_KS:

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text_substrate
-from ..sources.readers import load_table
 from .registry import spark_query
 
 _SWEEP_TS = (0.7, 0.8, 0.9)

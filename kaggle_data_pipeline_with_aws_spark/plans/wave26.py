@@ -17,10 +17,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _Q = 5  # quintiles
 
 
@@ -69,7 +65,7 @@ def q110_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike dimensions) never sorts through one task. Score = quintile
     of the rank (ceil(rk·5/n)); recency reverses (recent = high).
     Rounded monetary before ranking keeps the order engine-stable."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     now = ev.agg(F.max("ts").alias("now"))
     u = (
         ev.groupBy("user_id")

@@ -23,10 +23,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d127 — shard checksum manifest.
 # ---------------------------------------------------------------------------
@@ -56,7 +52,7 @@ def d127_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce this table bit-for-bit; any upstream nondeterminism
     shows up as a manifest diff naming the exact shard. One scan, one
     shard-keyed shuffle of 16-byte hashes."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "source",
         (F.col("doc_id") % _MANIFEST_SHARDS).cast("int").alias("shard"),
         "doc_id",
@@ -121,7 +117,7 @@ def d128_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     s = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count("*").alias("n"))
     )
@@ -217,7 +213,7 @@ def q111_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical (rounded) sort key + unique doc_id tiebreak."""
     tok = text.tokens("text")
     n = F.size(tok)
-    f = _t(spark, sf_dir, "documents").select(
+    f = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.lit(1.0).alias("x0"),
         (n / 100.0).alias("x1"),
@@ -331,7 +327,7 @@ def d129_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate in ONE conditional pass over the flagged corpus — never
     two scans. avg(CASE WHEN kept THEN x END) ignores non-kept rows
     via NULL in both engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     keepers = (
         docs.groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"))

@@ -19,10 +19,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q112 — point-in-time join (feature-store semantics).
 # ---------------------------------------------------------------------------
@@ -62,7 +58,7 @@ def q112_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's first state row survive with NULL state (left join).
     Because SCD2 intervals TILE each user's timeline, at most one
     interval matches — no row duplication, no argmax needed."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -163,7 +159,7 @@ def d130_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     pts = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)
     )

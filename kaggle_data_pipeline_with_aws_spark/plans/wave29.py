@@ -19,10 +19,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # s13 — windowed count-min heavy-hitter face.
 # ---------------------------------------------------------------------------
@@ -89,7 +85,7 @@ def s13_windowed_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     along so the output IS the overshoot audit (est ≥ true always;
     the gap is the collision tax of width=64). Deterministic hashes ⇒
     the sketch is bit-identical across engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     win = F.date_trunc("hour", "ts").alias("win_start")
     rb = F.explode(
         F.array(
@@ -196,13 +192,12 @@ def d131_forget_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FK hop, and the users' events. Each purge count is ONE semi-join
     flag aggregate (opt-out set and purged-order keys broadcast —
     erasure sets are tiny by nature); no table is scanned twice. The
-    actual delete is this plan's anti-join complement feeding
-    compact_parquet — run the audit, sign it off, flip semi to
-    anti."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    ev = _t(spark, sf_dir, "events")
+    actual delete is this plan's anti-join complement committed as a
+    rewrite — run the audit, sign it off, flip semi to anti."""
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    ev = load_table(spark, sf_dir, "events")
     fc = cust.filter(F.col("c_custkey") % _FORGET_MOD == 0).select(
         "c_custkey"
     )

@@ -27,10 +27,6 @@ from .registry import spark_query
 from .retrieval import _knn_graph_cte, _mutual_knn_edges
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 # ---------------------------------------------------------------------------
 # d132 — k-hop BFS from the centroid seeds over the mutual-kNN graph.
 # ---------------------------------------------------------------------------
@@ -76,7 +72,7 @@ def d132_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frontier-sized work profile that survives billion-edge graphs,
     against the oracle's recursive-CTE restatement of the same
     traversal."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     edges = _mutual_knn_edges(spark, sf_dir).select("node_a", "node_b")
     seeds = embs.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").cast("long").alias("node")
@@ -157,7 +153,7 @@ def d133_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     step grows with corpus size, only with k. Both legs broadcast the
     query side; the two addends are combined in fixed literal order so
     the fused score is bit-reproducible across engines."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") < 10)
     ex = similarity.brute_force_topk(embs, queries, k=_RRF_DEPTH).select(
         "query_id", "neighbor_id", F.col("rank").alias("rk_exact")
@@ -258,7 +254,7 @@ def d134_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost scales with queries × k, never with the corpus. IDCG is a
     shared Python-computed constant, identical literal on both
     engines."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") < 10)
     gt = similarity.brute_force_topk(embs, queries, k=_NDCG_K).select(
         "query_id", "neighbor_id", F.col("rank").alias("gt_rk")

@@ -24,10 +24,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d135 — pairwise two-sample KS distance over per-source lengths.
 # ---------------------------------------------------------------------------
@@ -70,7 +66,7 @@ def d135_ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Length profiles are THE cheap drift alarm for ingest pipelines —
     a KS spike between yesterday's and today's crawl of the same
     source means the extractor changed, not the web."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     grid = docs.select(F.col("n_chars").alias("v")).distinct()
     src = docs.groupBy("source").agg(F.count("*").alias("n"))
     cnt = docs.groupBy("source", F.col("n_chars").alias("v")).agg(
@@ -170,7 +166,7 @@ def d136_chi2_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice-discovery and topic labeling in curation stacks."""
     from ..operators import text
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(text.tokens("text")).alias("token")
     )
@@ -279,7 +275,7 @@ def q113_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is bit-exact on both engines; the expected shares are
     shared Python literals. One groupBy(digit) over the scan — nine
     output rows, no second pass."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     digits = orders.select(
         F.substring(
             F.round(F.col("o_totalprice") * 100, 0)

@@ -32,10 +32,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d137 — IVF-PQ ADC top-k.
 # ---------------------------------------------------------------------------
@@ -215,7 +211,7 @@ def d137_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d107/d20 discipline). All small sides (codebook, coarse table,
     distance tables, probe list) broadcast; the corpus shuffles only
     to its own narrow (cell, codes) projection."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(
         embs.filter(F.col("vec_id") < _N_CENT).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
@@ -398,7 +394,7 @@ def d138_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizes a possible IEEE −0.0 from cancellation so both
     engines hash identically."""
     tok = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             "source",
@@ -492,7 +488,7 @@ def d139_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized single-partition window at any scale; the hash shuffle
     is md5-portable (identical in the DuckDB oracle and on task
     retry)."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_size(F.split(F.col("text"), " ")).cast("long").alias("tok_n"),
     )

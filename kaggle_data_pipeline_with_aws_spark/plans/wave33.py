@@ -34,10 +34,6 @@ from .llm_data import _minhash_pairs_cte
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d140 — mixture epoch planner.
 # ---------------------------------------------------------------------------
@@ -109,7 +105,7 @@ def d140_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     s = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.sum(F.size(F.split("text", " "))).alias("toks"))
     )
@@ -191,7 +187,7 @@ def d141_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     most 6 rows."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     assigned = F.broadcast(
         docs.select("doc_id", _split_col(F.col("doc_id")).alias("split"))
     )
@@ -284,7 +280,7 @@ def d142_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-split doc/cluster counts and doc share."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # components served from the materialized (dataset, threshold)
     # artifact — shared with d150; connected_components over the pair
     # list remains the standalone semantic twin (equivalence pinned in

@@ -31,10 +31,6 @@ from .llm_data import _DOT_SQL, _NORM_SQL
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d143 — intra-document repetition (Gopher repetition filters).
 # ---------------------------------------------------------------------------
@@ -97,7 +93,7 @@ def d143_intra_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so every shuffle is within-document and the op scales as a
     per-doc map: no cross-document state, no skew beyond document
     length (bounded by the corpus's own max-doc rule)."""
-    docs = spread_for_compute(_t(spark, sf_dir, "documents"))
+    docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     n = F.size("t")
     grams = toks.filter(n >= _REP_N).select(
@@ -201,7 +197,7 @@ def d144_label_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract."""
     from ..operators.similarity import _cosine
 
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     q = embs.filter(F.col("vec_id") < _D144_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("label"),
@@ -322,7 +318,7 @@ def d145_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-independent, identical at any scale), divided in the same
     op order as the oracle; engine-native avg() accumulation, whose
     algorithm differs between engines, is never compared."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     q9 = F.lit(1e9)
     comp = (
         spread_for_compute(embs)

@@ -26,10 +26,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d146 — mergeable histogram quantile sketch with in-band error audit.
 # ---------------------------------------------------------------------------
@@ -128,7 +124,7 @@ def d146_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-bucket cumulative walk — the walk's window partition is
     capped by the distinct-value grid inside ONE bucket (10,000 cent
     values for a $100 bucket), never data-sized."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     b = (
         li.select(
             F.floor(F.col("l_extendedprice") / _HQ_WIDTH)
@@ -253,7 +249,7 @@ def d147_token_mass_percentiles(
     budgets. One histogram aggregate over doc lengths; both cumulative
     walks run over the length-distinct table (bounded by max doc
     length, never corpus-sized)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = (
         docs.select(F.size(F.split("text", " ")).alias("n_tok"))
         .groupBy("n_tok")

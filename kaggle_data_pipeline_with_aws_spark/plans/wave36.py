@@ -27,10 +27,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d148 — join-key skew report over the fact table's candidate keys.
 # ---------------------------------------------------------------------------
@@ -74,7 +70,7 @@ def d148_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(join_key, key_value) with map-side partial aggregation
     shuffles one row per distinct (key name, value). The oracle keeps
     its per-key UNION ALL form; values are identical."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     stack_args = ", ".join(f"'{k}', {k}" for k in _SKEW_KEYS)
     stacked = li.selectExpr(
         f"stack({len(_SKEW_KEYS)}, {stack_args}) AS (join_key, key_value)"
@@ -174,7 +170,7 @@ def d149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, vanishingly rare outside toy corpora). No RNG state: the
     same corpus always yields the same triplets, which is what makes
     the mining reproducible across retries and engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = F.broadcast(docs.agg(F.count("*").alias("n")))
     pairs = text_substrate.lsh_pairs(spark, sf_dir, threshold=0.5)
     sym = pairs.select(

@@ -38,10 +38,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d150 — near-dup cluster cohesion.
 # ---------------------------------------------------------------------------
@@ -230,7 +226,7 @@ def d151_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force shape (query set broadcast, corpus streamed, never
     shuffled); the truncated side scans a 4×-narrower vector column.
     recall_at_k = n_common / k is an exact small-integer ratio."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") < 10)
     full = similarity.brute_force_topk(embs, queries, k=_TRUNC_K)
     trunc_embs = embs.select(

@@ -30,10 +30,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _N_CENTS = 16
 _N_QUERIES = 10
 _PROBE_GRID = (1, 2, 4, 8)
@@ -184,7 +180,7 @@ def d153_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the proven d09 broadcast-query brute force. At scale the only
     corpus-sized work is the one assignment pass and one candidate
     rescore (bounded by the largest budget), both Arrow-batched."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(
         embs.filter(F.col("vec_id") < _N_CENTS).select(
             F.col("vec_id").alias("centroid_id"),
@@ -344,7 +340,7 @@ def d154_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the budget is spent there) and the signal to re-fit or split. One
     corpus assignment pass (broadcast centroids, partial-agg argmax),
     then a 16-row rollup."""
-    embs = _t(spark, sf_dir, "embeddings")
+    embs = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(
         embs.filter(F.col("vec_id") < _N_CENTS).select(
             F.col("vec_id").alias("centroid_id"),

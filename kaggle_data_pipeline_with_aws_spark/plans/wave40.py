@@ -20,12 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text_substrate
-from ..sources.readers import load_table
 from .registry import spark_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 _T_LOOSE = 0.5

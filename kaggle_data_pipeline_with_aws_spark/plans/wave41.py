@@ -35,13 +35,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import domains
-from ..operators.text import portable_hash, portable_hash_sql, token_count
+from ..operators.text import portable_hash_sql, token_count
 from ..sources.readers import load_table
 from .registry import spark_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 _SUFFIXES = ("com", "org", "net", "io", "edu", "gov", "co.uk", "ac.uk")
@@ -194,7 +190,7 @@ def _domain_map_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     url, host, domain, path) rows; the whole derivation is pure
     column expressions in one codegen projection."""
     return (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", "n_chars")
         .withColumn("huri", _huri())
         .withColumn("url", synthetic_url_from_huri())
@@ -230,7 +226,7 @@ def _with_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-joined with the text column (only the consumers that score
     text pay this doc_id-keyed join)."""
     return domain_map(spark, sf_dir).join(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
 
 

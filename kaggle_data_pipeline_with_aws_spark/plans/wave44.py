@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import spark_query
-from .wave41 import _base_cte, _with_domain, domain_map
+from .wave41 import _base_cte, domain_map
 
 _COVER_PCTS = (50, 90, 99)
 

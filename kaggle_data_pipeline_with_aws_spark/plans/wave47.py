@@ -51,10 +51,6 @@ from .wave41 import _SUFFIXES, domain_map
 HLL_M = sketch.HLL_M
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d174 — explicit-register HyperLogLog cardinality per source.
 # ---------------------------------------------------------------------------
@@ -123,7 +119,7 @@ def d174_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; cardinality never touches the driver. At 100 TB you'd
     publish the register table per shard and MAX-merge — the sketch
     is engine-portable, unlike approx_count_distinct's binary state."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     regs = sketch.hll_registers(docs, "source", "text")
     est = sketch.hll_estimate(regs, "source")
     true = docs.groupBy("source").agg(
@@ -280,7 +276,7 @@ def d175_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. No similarity machinery — this is the cheap screen a web
     pipeline runs BEFORE MinHash (d07) ever sees the text."""
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn("hcu", _hcu())
         .withColumn("url", _page_url())
@@ -472,7 +468,7 @@ def d177_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside one codegen stage and collapses via map-side partial sums
     -> the shuffle carries 20 rows per input partition; each
     replicate's mean is one exact-integer pair divided once."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     x = docs.withColumn(
         "r",
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_R - 1))),

@@ -30,10 +30,6 @@ from .registry import spark_query
 from .wave47 import _boot_w_case, _BOOT_T  # noqa: F401 (shared thresholds)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _M = sketch.HLL_M
 _NUM = sketch.hll_alpha() * _M * _M * float(1 << 55)
 
@@ -137,7 +133,7 @@ def d178_hll_rollforward(spark: SparkSession, sf_dir: str) -> DataFrame:
     yesterday's curve). Both register sums ride along as exact
     integers — the oracle pins sketch state at every day, not just
     the estimates."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
     )
     # the register table is days x 64 rows — materialize it once
@@ -242,7 +238,7 @@ def d179_chao1_vocab_richness(
     into a (source, word) table, then a source-bounded rollup); every
     ingredient is an exact integer until the two final divisions."""
     tf = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")
         .agg(F.count("*").alias("n"))
@@ -327,7 +323,7 @@ def d180_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     38), picked with a row_number over a 40-row table — the only
     single-partition work at any corpus scale. One corpus scan total:
     the 40x amplification collapses in map-side partials."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     x = docs.withColumn(
         "r", F.explode(F.sequence(F.lit(0), F.lit(_CI_R - 1)))
     ).withColumn(
@@ -457,7 +453,7 @@ def d181_sketch_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable-hash constructions, so even their ERRORS are
     value-oracled. One documents scan feeds both sketches; all
     downstream work is source x 64 rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     hll = sketch.hll_estimate(
         sketch.hll_registers(docs, "source", "text"), "source"
     ).select("source", F.col("est_distinct").alias("hll_est"))

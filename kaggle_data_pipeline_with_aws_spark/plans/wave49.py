@@ -30,10 +30,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d182 — conditional bigram entropy rate per source.
 # ---------------------------------------------------------------------------
@@ -93,7 +89,7 @@ def d182_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-touched; the bigram model join (d44's shape) runs on
     vocab²-bounded rows. H(Y) uses the log2(N) - sum(c*log2 c)/N
     form so both engines evaluate the identical expression tree."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(tokens("text")).alias("w"))
     uc = tok.groupBy("source", "w").agg(F.count("*").alias("c"))
     un = uc.groupBy("source").agg(
@@ -209,7 +205,7 @@ def d183_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     words approach Poisson (VMR ~ 1). The per-source top-k is a
     WindowGroupLimit over the vocab-bounded stat table — k rows per
     partition ship, never a source's vocabulary."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     dc = (
         d.select("source", "doc_id", F.explode(tokens("text")).alias("w"))
         .groupBy("source", "doc_id", "w")

@@ -19,7 +19,7 @@ Reference scope: beyond-reference LLM-data-curation surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketch
@@ -27,10 +27,6 @@ from ..operators.text import portable_hash60_sql
 from ..sources.readers import load_table
 from .registry import spark_query
 from .wave48 import _est_sql
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +83,7 @@ def d185_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream aggregate runs on the group table, and the k-threshold
     fan-out is a 3-row broadcast. At 100 TB the QI-group table is the
     only shuffle and is bounded by the QI domain."""
-    q = _t(spark, sf_dir, "customer").select(
+    q = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
         F.floor(F.col("c_acctbal") / _QI_BUCKET)
@@ -229,9 +225,9 @@ def d186_join_cardinality_estimate(
             "actual_rows",
         )
 
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     legs = leg("customer_orders", cust, "c_custkey", orders,
                "o_custkey").unionByName(
         leg("orders_lineitem", orders, "o_orderkey", li, "l_orderkey")
@@ -356,7 +352,7 @@ def d187_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     here are audit-only). The inclusion-exclusion intersection is
     computed from the ROUNDED per-source estimates so both engines
     combine identical doubles."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     srcs = (
         docs.select("source")
         .distinct()

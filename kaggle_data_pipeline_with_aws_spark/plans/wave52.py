@@ -32,13 +32,8 @@ from ..operators import sketch
 from ..operators.text import portable_hash60_sql
 from ..sources.readers import load_table
 from .registry import spark_query
-from .wave48 import _est_sql
 
 _M = sketch.HLL_M
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +126,7 @@ def d188_incremental_agg_merge(
     only the new partition at 100 TB."""
     from ..operators.text import portable_hash60
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "ts",
         F.round(F.col("value") * 1000000.0).cast("long").alias("v6"),
@@ -325,7 +320,7 @@ def d189_length_token_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over the ≤ 10x10 integer contingency table."""
     from ..operators.text import token_count
 
-    b = _t(spark, sf_dir, "documents").select(
+    b = load_table(spark, sf_dir, "documents").select(
         F.least(
             (F.col("n_chars").cast("long") / _MI_XW).cast("long"),
             F.lit(_MI_B - 1).cast("long"),
@@ -448,7 +443,7 @@ def d190_purged_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     first test event, whose minimum must clear the embargo in exact
     microseconds. One scan labels; all audits run on user-bounded
     aggregate tables."""
-    lab = _t(spark, sf_dir, "events").select(
+    lab = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         F.when(

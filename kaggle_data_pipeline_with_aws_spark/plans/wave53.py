@@ -28,10 +28,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d191 — declarative expectation suite.
 # ---------------------------------------------------------------------------
@@ -113,11 +109,11 @@ def d191_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the key); nothing here is more than a map-side-partial
     aggregate, so the whole gate costs a read of each table at any
     scale — which is why contracts run on every load."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    ev = _t(spark, sf_dir, "events")
-    docs = _t(spark, sf_dir, "documents")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    ev = load_table(spark, sf_dir, "events")
+    docs = load_table(spark, sf_dir, "documents")
 
     def one(df, name, tbl, viol_expr):
         return df.agg(
@@ -257,7 +253,7 @@ def d192_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — streams fine at any scale); everything after runs on
     the event-type x event-type count table. Same log2(N)-sum(c*log2
     c)/N expression tree in both engines (the d182 discipline)."""
-    seq = _t(spark, sf_dir, "events").select(
+    seq = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.lag("event_type")
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
@@ -360,7 +356,7 @@ def d193_attribution_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta join); per-conversion ranks and counts are windows over
     conversion-bounded partitions. Linear credits are exact rationals
     1/k summed and rounded once."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         "user_id",

@@ -26,10 +26,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d194 — CUSUM drift monitor (exact-integer prefix-scan form).
 # ---------------------------------------------------------------------------
@@ -95,7 +91,7 @@ def d194_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     telemetry costs one corpus collapse plus windows over ~365
     rows."""
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(
             F.sum(
@@ -237,7 +233,7 @@ def d195_conformal_calibration(
     an oracle-checkable number. One scan fits (map-side partial
     sums), one scores; the only ordered work runs on the
     distinct-residual table."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("n_chars").cast("long").alias("x"),
         token_count("text").alias("y"),

@@ -27,10 +27,6 @@ from .registry import spark_query
 from .wave47 import _BOOT_T, _boot_w_case
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d196 — PR-curve threshold selection for MinHash dedup.
 # ---------------------------------------------------------------------------
@@ -235,7 +231,7 @@ def d197_stratified_bootstrap(
     partitions. Per-group uncertainty is what a mixture-rebalancing
     decision (d60/d128) actually needs — a source with a wide
     interval shouldn't drive the mix."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
     x = docs.withColumn(

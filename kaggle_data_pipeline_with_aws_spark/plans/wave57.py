@@ -29,10 +29,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # d199 — modularity of the tight clustering on the loose pair graph.
 # ---------------------------------------------------------------------------
@@ -252,7 +248,7 @@ def d200_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis, and the pair join is bucket-keyed over sources x buckets
     rows — never over documents."""
     b = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy(
             "source",
             (F.col("n_chars").cast("long") / _W1_BUCKET)

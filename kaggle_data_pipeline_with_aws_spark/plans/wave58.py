@@ -75,10 +75,6 @@ _F_SITE = len(_SUBS)
 _F_SFX = _F_SITE * _N_SITES
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _host() -> Column:
     """Host from the ``huri`` column (one shared hash, wave-41 rule:
     quotient slices use integer DIV — 60 bits exceed double's exact
@@ -146,7 +142,7 @@ def d201_psl_join_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r,) for r in PSL_RULES_V1], "rule string"
     )
     docs = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn(
             "huri",
@@ -233,7 +229,7 @@ def d207_psl_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r,) for r in PSL_RULES_V1], "rule string"
     )
     docs = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn(
             "huri",

@@ -41,10 +41,6 @@ _L = U.MAX_PIECE_LEN
 _Q = U.QUANT
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # oracle generators — one string builder per algorithm stage
 # ---------------------------------------------------------------------------
@@ -230,7 +226,7 @@ def d202_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤(150+alphabet)-row vocab rides in as a literal prob map) plus the
     piece-keyed integer-sum shuffle — no per-round broadcast, no
     word-keyed pivot exchange, no materialized lattice-edge table."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     out = U.unigram_train(docs, rounds=_ROUNDS, top_k=_TOPK)
     return out.select(
         "piece", "qc", F.round("p", 9).alias("p")
@@ -290,7 +286,7 @@ def d203_unigram_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rises as EM sharpens the piece distribution; the flattening point
     is where extra rounds stop paying (d167's compression-curve role,
     likelihood flavor)."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     wt = U.word_types_truncated(docs).localCheckpoint()
     vocab_rows = U.collect_vocab(
         U.seed_vocab(U.candidate_pieces(wt), _TOPK)
@@ -384,7 +380,7 @@ def d206_unigram_prune_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-piece likelihood loss; the lattice/M-step machinery and its
     bit-exact determinism contract are unchanged
     (operators/unigram.py)."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     wt = U.word_types_truncated(docs).localCheckpoint()
     vocab_rows = U.train_rows(wt, _ROUNDS, _TOPK)
     pruned = U.prune_rows(vocab_rows, _PRUNE_TO)

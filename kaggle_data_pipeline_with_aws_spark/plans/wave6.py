@@ -20,10 +20,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q67 — nation-pair trade matrix (TPC-H Q7 shape): revenue between
 # distinct (supplier nation, customer nation) pairs per order year.
@@ -50,13 +46,15 @@ def q67_nation_trade_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality negated and BOTH nation dimensions kept (two broadcast
     copies of the 25-row nation table). One fact pass, one shuffle on
     the (nation, nation, year) aggregation key."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -114,12 +112,14 @@ def q68_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan, customer join keyed on the fact's custkey, nation
     broadcast. The global top-20 ranks the customer-sized aggregate
     (rounded first) — never the line-level rows."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", "l_extendedprice", "l_discount")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_nationkey"
+    )
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     agg = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -164,16 +164,16 @@ def q69_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one line-level shuffle; the HAVING prunes to the few hundred
     qualifying orders BEFORE any join, so orders/customer join against
     a tiny filtered set (broadcast-eligible at any scale)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("tq"))
         .filter(F.col("tq") > _Q69_MIN_QTY)
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         big.join(o, big["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -212,10 +212,10 @@ def q70_disjunctive_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand/size side of each disjunct references only part columns, so
     Catalyst derives `p_brand IN (...)` + size bounds and PUSHES them
     into the part scan — the broadcast build side is pre-shrunk."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (
         (F.col("p_brand") == "Brand#1")
         & F.col("p_size").between(1, 15)
@@ -271,15 +271,15 @@ def q71_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row broadcast, the recent-buyer key set anti-joins on custkey
     (one shuffle of keys only), and nation broadcasts. At 100 TB the
     date filter prunes the orders scan before any distinct."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cutoff = F.lit("2000-01-01 00:00:00").cast("timestamp_ntz")
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0)
         .agg(F.avg("c_acctbal").alias("ab"))
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= cutoff)
         .select("o_custkey")
         .distinct()
@@ -330,7 +330,7 @@ def q72_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized probabilities. The lag shuffles events once on user_id;
     the transition matrix is |event types|² rows, and its row totals
     join back broadcast."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -385,7 +385,7 @@ def d74_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one partial-agg'd shuffle of symbol pairs (alphabet², tiny), and
     the top-20 ranks the aggregate. Each BPE training round at corpus
     scale is exactly this plan re-run over the re-segmented stream."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(text.tokens("text")).alias("t")).filter(
         F.length("t") >= 2
     )
@@ -434,7 +434,7 @@ def d75_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristic classifier in the pipeline needs. The predictor is a
     narrow map (d05's marker argmax), the label lives on the same row,
     so the whole audit is one |langs|²-row aggregation."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     pred = text.language_id(d)
     return (
         pred.join(d.select("doc_id", "lang"), "doc_id")
@@ -516,7 +516,7 @@ def d77_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct + count), 1-row total broadcast back, ratio filter. The
     output is stopword-list-sized; at corpus scale this is the cheap
     pre-pass that feeds q57's BM25 idf and d04's quality scoring."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = (
         d.select("doc_id", F.explode(text.tokens("text")).alias("term"))
         .filter(F.col("term") != "")
@@ -566,7 +566,7 @@ def d78_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator broadcast back, allocation = floor (NOT round — IEEE
     half-even at .5 boundaries is not engine-portable). Feeds d26/d68:
     this computes HOW MANY to take per stratum; those take them."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.stddev_samp(F.col("n_chars").cast("double")).alias("sd"),
@@ -619,7 +619,7 @@ def d79_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered-array size — no explode, no shuffle at all until the
     (already doc-sized) result. The blocklist is a literal array in
     codegen; a real deployment broadcasts it the same way."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     hits = F.size(
         F.filter(
             text.tokens("text"),
@@ -653,7 +653,7 @@ def s07_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the applyInPandasWithState operator (streaming/stateful.py)
     reaches the same totals via the state store — against THIS
     registered plan, multi-micro-batch, on the driver testdata."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 6).alias(

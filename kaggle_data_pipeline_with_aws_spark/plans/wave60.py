@@ -1,6 +1,6 @@
 """Round-9 wave 60 — snapshot/time-travel table face (round-8 verdict
 #4: the versioned-table semantic tying MERGE (q81), compaction
-(``sinks.compact_parquet``) and the CDC diff (q60) together):
+(``VersionedTable.commit_compact``) and the CDC diff (q60) together):
 
 - q114 — time-travel reads: three committed versions of a per-customer
   spend table (bootstrap overwrite → append increment → full rewrite),
@@ -55,10 +55,6 @@ _SPEND_SQL = "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
 _RESUM_SQL = "CAST(round(sum(CAST(spend AS DECIMAL(18,2))), 2) AS DOUBLE)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _spend(orders: DataFrame) -> DataFrame:
     return orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count("*").cast("long").alias("n_orders"),
@@ -73,7 +69,7 @@ def _staged_table(spark: SparkSession, sf_dir: str) -> VersionedTable:
     commits every wave-60 query reads. A new temp root per run: the
     queries test the LOG protocol, not artifact reuse (the staged
     states are tiny per-customer aggregates)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c1 = F.lit(_CUT1).cast("timestamp")
     c2 = F.lit(_CUT2).cast("timestamp")
     vt = VersionedTable(spark, _fresh_root("vtab-"))

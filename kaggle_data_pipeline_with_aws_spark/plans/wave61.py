@@ -38,13 +38,9 @@ _ROUNDS = 3
 _TOPK = 5
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter((F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI))
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
@@ -52,7 +48,7 @@ def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _N_ENTRY)
         .select(F.col("vec_id").alias("node"))
     )
@@ -149,7 +145,7 @@ def d204_nsw_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nsw.nsw_beam_search(
         _queries(spark, sf_dir),
         _mutual_knn_edges(spark, sf_dir).select("node_a", "node_b"),
-        _embs(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings"),
         _entries(spark, sf_dir),
         beam=_BEAM,
         rounds=_ROUNDS,
@@ -210,7 +206,7 @@ def d205_nsw_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving a raw mutual-kNN graph — the number this row puts against
     d153's IVF probe-sweep recalls."""
     queries = _queries(spark, sf_dir)
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     visited = nsw.search_visited(
         queries,
         _mutual_knn_edges(spark, sf_dir).select("node_a", "node_b"),

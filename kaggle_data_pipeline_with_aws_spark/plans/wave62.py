@@ -43,10 +43,6 @@ from .wave60 import (
 _DEL_THRESH = 600_000.0
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q117 — compaction invariance through the log.
 # ---------------------------------------------------------------------------
@@ -134,7 +130,7 @@ def q118_versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     boundary, the additive-evolution contract every lakehouse format
     guarantees (and the log's per-commit schema records make
     auditable)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c1 = F.lit(_CUT1).cast("timestamp")
     c2 = F.lit(_CUT2).cast("timestamp")
 
@@ -224,7 +220,7 @@ def q119_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     key and joins back to the final state for per-class spend. One
     full-outer shuffle for the MERGE, one for the diff; the log
     supplies isolation (v0 stays readable) around q81's exact plan."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c1 = F.lit(_CUT1).cast("timestamp")
     c2 = F.lit(_CUT2).cast("timestamp")
     vt = VersionedTable(spark, _fresh_root("vtab-merge-"))

@@ -45,13 +45,9 @@ _ROUNDS = 3
 _TOPK = 5
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter((F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI))
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
@@ -59,7 +55,7 @@ def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _N_ENTRY)
         .select(F.col("vec_id").alias("node"))
     )
@@ -213,7 +209,7 @@ def d208_nsw_augmented_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nsw.nsw_beam_search(
         _queries(spark, sf_dir),
         augmented_knn_edges(spark, sf_dir).select("node_a", "node_b"),
-        _embs(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings"),
         _entries(spark, sf_dir),
         beam=_BEAM,
         rounds=_ROUNDS,
@@ -268,7 +264,7 @@ def d209_nsw_augmented_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored volume still query-bounded (entries + rounds × beam ×
     degree, corpus-size-independent)."""
     queries = _queries(spark, sf_dir)
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     visited = nsw.search_visited(
         queries,
         augmented_knn_edges(spark, sf_dir).select("node_a", "node_b"),

@@ -55,10 +55,6 @@ _Q = U.QUANT
 _BPE_ROUNDS = 8
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _vc_chain(src: str) -> str:
     """Nested-subquery chain over a wide lattice row: v0..v{_W} (max-
     product scores), c0..c{_W} (argmax piece counts), vbest, cbest —
@@ -181,7 +177,7 @@ def d210_unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum. Corpus touched once (the word-type histogram); encode
     itself is vocab-broadcast + one pivot — the same 100 TB shape as
     the trainer."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     # ONE corpus pass: the truncated histogram derives from the full
     # one word-type-side (round-11 optimization — previously both
     # histograms re-exploded the corpus).
@@ -329,7 +325,7 @@ def d211_tokenizer_compression_compare(
     tokenizer — so the comparison stays honest when the corpus
     outgrows the lattice (identical to the truncated basis until it
     does)."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = load_table(spark, sf_dir, "documents").select("text")
     # ONE corpus pass (round-11): full histogram checkpointed, the
     # truncated basis derived word-type-side.
     wt_full = U.word_types_full(docs).localCheckpoint()

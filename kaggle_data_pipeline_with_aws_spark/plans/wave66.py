@@ -41,10 +41,6 @@ from .wave60 import _RESUM_SQL, _SPEND_SQL, _fresh_root, _spend
 _N_SLICES = 4  # q120 custkey quartiles
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q120 — custkey-range clustering + range-probe skipping.
 # ---------------------------------------------------------------------------
@@ -88,7 +84,7 @@ def q120_file_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1/1/2 of 4) and the scanned rows' values. The staging boundary is
     a literal function of max(custkey), so every engine states the
     same quartiles."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     maxck = orders.agg(F.max("o_custkey").alias("m")).collect()[0].m
     b = (maxck + 1) // 4
     vt = VersionedTable(spark, _fresh_root("vtab-skip-"))
@@ -191,7 +187,7 @@ def q121_time_sliced_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     on them is exact in every engine). A one-slice probe opens 1 of 6
     files, a straddling probe 2 — the log decides before any footer is
     read. Value identity and the skip counts are both oracle-pinned."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -294,7 +290,7 @@ def q122_log_checkpointed_snapshot(
     identity against the oracle's direct statement. At production
     commit rates this is what keeps metadata reads constant as the log
     grows."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )

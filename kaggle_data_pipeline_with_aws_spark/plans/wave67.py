@@ -42,10 +42,6 @@ _N_SHARDS = 4
 _SHARD = 1
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _shard_col() -> F.Column:
     return F.pmod(
         portable_hash(
@@ -61,11 +57,11 @@ def _shard_sql() -> str:
 
 
 def _filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(_shard_col() == _SHARD)
+    return load_table(spark, sf_dir, "embeddings").filter(_shard_col() == _SHARD)
 
 
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(
+    return load_table(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI)
     )
 
@@ -147,7 +143,7 @@ def d212_ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk_fixed_centroids(
         _filtered(spark, sf_dir),
         _queries(spark, sf_dir),
-        _embs(spark, sf_dir).filter(F.col("vec_id") < _N_CENTS),
+        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _N_CENTS),
         k=_K,
         n_probe=_N_PROBE,
     )
@@ -205,7 +201,7 @@ def d213_ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered-corpus-sized per query, the d205/d209 audit discipline."""
     filtered = _filtered(spark, sf_dir).localCheckpoint()
     queries = _queries(spark, sf_dir)
-    cents = _embs(spark, sf_dir).filter(F.col("vec_id") < _N_CENTS)
+    cents = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _N_CENTS)
     # One corpus assignment + one query probing, each checkpointed
     # (round 11, guide §2.4 — the wave-69 substrate discipline): the
     # IVF top-k AND the candidate-count restatement previously each

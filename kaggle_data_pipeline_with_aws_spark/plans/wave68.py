@@ -42,10 +42,11 @@ from pyspark.sql.types import (
 )
 
 from ..operators.txnlog import VersionedTable
+from ..sources.readers import load_table
 from ..streaming import dsv2_source
 from ..streaming.cdc_source import TxnLogStream
 from .registry import spark_query
-from .wave60 import _CUT1, _CUT2, _fresh_root, _spend, _t
+from .wave60 import _CUT1, _CUT2, _fresh_root, _spend
 from .wave64 import _s15_oracle
 
 _BATCH_SCHEMA = StructType(
@@ -73,7 +74,7 @@ def _batch_agg(df: DataFrame) -> tuple[int, float]:
 def _commit_stages(spark: SparkSession, sf_dir: str):
     """The wave-60 commit sequence as deferred thunks, so the stream
     face can interleave them with batch progress."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c1 = F.lit(_CUT1).cast("timestamp")
     c2 = F.lit(_CUT2).cast("timestamp")
     return [

@@ -56,10 +56,6 @@ _N_SHARDS = 4
 _SHARD = 1
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _shard_col() -> F.Column:
     return F.pmod(
         portable_hash(
@@ -75,11 +71,11 @@ def _shard_sql() -> str:
 
 
 def _filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(_shard_col() == _SHARD)
+    return load_table(spark, sf_dir, "embeddings").filter(_shard_col() == _SHARD)
 
 
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(
+    return load_table(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI)
     )
 
@@ -96,7 +92,7 @@ def _substrate(
     ``qcells.filter(__crank <= n)`` — previously the counting pass and
     each ``ivf_topk_fixed_centroids`` call re-assigned corpus and
     queries from scratch (3-4 assignment passes per query plan)."""
-    cents = _embs(spark, sf_dir).filter(F.col("vec_id") < _N_CENTS)
+    cents = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _N_CENTS)
     assigned = (
         similarity.ivf_cells_fixed_centroids(
             _filtered(spark, sf_dir), cents, 1, "neighbor_id", "__cv"

@@ -13,13 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.text import HASH_MOD, portable_hash, portable_hash_sql
+from ..operators.text import portable_hash, portable_hash_sql
 from ..sources.readers import load_table
 from .registry import spark_query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +47,7 @@ def q73_value_trend_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's closed form of the same sums."""
     from ..functions.scalars import epoch_micros
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # center at 2024-01-01 so the OLS normal equations don't cancel
     # catastrophically on epoch-sized abscissae (x becomes 0..30 days)
     x = (epoch_micros("ts") - F.lit(1_704_067_200_000_000)).cast(
@@ -98,7 +94,7 @@ def q74_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts with event_id tiebreak — engine-deterministic); the open row's
     valid_to is NULL. One shuffle on the key; no self-join, which is
     the naive O(n²)-per-key SCD2 build this replaces."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -157,7 +153,7 @@ def s08_late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterated over candidate delays."""
     from ..functions.scalars import epoch_micros
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     jitter = (
         F.pmod(
             portable_hash(
@@ -236,7 +232,7 @@ def d80_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     against itself."""
     from ..operators.similarity import cosine_vectorized
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     s = e.filter(
         F.pmod(
             portable_hash(
@@ -298,7 +294,7 @@ def d81_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused form): count_distinct/null-sum/min/max per column in a single
     groupBy-less agg, then an Expand (stack) unpivots to long format —
     6 rows out, one scan in, regardless of table width×depth."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     aggs = []
     for c in _D81_COLS:
         aggs += [

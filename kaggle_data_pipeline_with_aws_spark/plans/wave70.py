@@ -68,10 +68,6 @@ _ROUNDS = 4
 _TOPK = 5
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _upper_sql() -> str:
     expr = "'hl|' || CAST(vec_id AS VARCHAR)"
     return f"({portable_hash_sql(expr)} % {_SAMPLE_MOD}) = 0"
@@ -79,7 +75,7 @@ def _upper_sql() -> str:
 
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter((F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI))
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
@@ -101,7 +97,7 @@ def _layer0_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(cos, 6) — carried through so the layer-0 search seeds its
     visited set from it instead of re-joining the embedding table
     (operators/nsw.py::search_visited_from's pre-scored arm)."""
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     upper_entry = (
         embs.filter(_upper_pred())
         .select(F.col("vec_id").alias("node"))
@@ -130,7 +126,7 @@ def _base_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nsw.search_visited_from(
         _queries(spark, sf_dir),
         augmented_knn_edges(spark, sf_dir).select("node_a", "node_b"),
-        _embs(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings"),
         _layer0_entries(spark, sf_dir),
         beam=_BEAM,
         rounds=_ROUNDS,
@@ -386,7 +382,7 @@ def d217_nsw_layered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flat random entries leave behind as the corpus grows — the
     HNSW argument, measured."""
     queries = _queries(spark, sf_dir)
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     uvis = nsw.search_visited(
         queries,
         _upper_edges(spark, sf_dir),

@@ -55,10 +55,6 @@ _SHARD = 1
 _LABEL = 3
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q123 — compound (multi-column) data skipping.
 # ---------------------------------------------------------------------------
@@ -114,7 +110,7 @@ def q123_compound_stats_skipping(
     bound. The one-cell probe opens 1 of 6 files, the slice band 4,
     the half band 2 — all decided from log metadata, values and skip
     counts both oracle-pinned."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     maxck = orders.agg(F.max("o_custkey").alias("m")).collect()[0].m
     b = (maxck + 1) // 2
     h1 = orders.filter(
@@ -177,12 +173,8 @@ def q123_compound_stats_skipping(
 # d218 — three-tier adaptive filtered search (base probe → escalated
 # probe → filtered-brute fallback).
 # ---------------------------------------------------------------------------
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _harsh_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(
+    return load_table(spark, sf_dir, "embeddings").filter(
         (_shard_col() == _SHARD) & (F.col("label") == _LABEL)
     )
 
@@ -192,7 +184,7 @@ def _harsh_sql() -> str:
 
 
 def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embs(spark, sf_dir).filter(
+    return load_table(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") >= _Q_LO) & (F.col("vec_id") < _Q_HI)
     )
 
@@ -206,7 +198,7 @@ def _substrate218(
     counting levels, both probe rankings, and the brute tier derive
     from these two tables (round-11, guide §2.4; previously 4
     assignment passes per query plan)."""
-    cents = _embs(spark, sf_dir).filter(F.col("vec_id") < _N_CENTS)
+    cents = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _N_CENTS)
     assigned = (
         similarity.ivf_cells_fixed_centroids(
             _harsh_filtered(spark, sf_dir), cents, 1,

@@ -45,16 +45,12 @@ _TOPK = 5
 _RERANK = 20
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _dim_bounds(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     """Per-dimension corpus [min, max] — the 64-double SQ8 'codebook'
     (one aggregate over posexploded dims; dimension-count-sized, the
     vocab-fence pattern)."""
     rows = (
-        _embs(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select(F.posexplode("embedding").alias("i", "x"))
         .groupBy("i")
         .agg(
@@ -108,7 +104,7 @@ def _sq8_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     los_l, his_l = _dim_bounds(spark, sf_dir)
     los = F.array(*[F.lit(float(v)) for v in los_l])
     his = F.array(*[F.lit(float(v)) for v in his_l])
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     # Norms are a per-SIDE property, so they are computed in the
     # projections BELOW the cross join — once per corpus row / once
     # per query row — instead of twice per candidate pair (round-11,
@@ -165,7 +161,7 @@ def _sq8_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("qrk") <= _RERANK)
         .select("query_id", "neighbor_id", "cos_sq8")
     )
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     exact = (
         cand.join(
             embs.select(
@@ -332,7 +328,7 @@ def d220_ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq8_top = _sq8_reranked(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    embs = _embs(spark, sf_dir)
+    embs = load_table(spark, sf_dir, "embeddings")
     exact = similarity.brute_force_topk(
         embs,
         embs.filter(

@@ -54,10 +54,6 @@ _DEL2 = "spend > 3000000.0"
 _RESUM = "CAST(round(sum(CAST(spend AS DECIMAL(18,2))), 2) AS DOUBLE)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _q127_oracle() -> str:
     state = """
       SELECT '{label}' AS state, CAST(count(*) AS BIGINT) AS n_rows,
@@ -108,7 +104,7 @@ def q127_deletion_vector_delete(
     Surviving aggregates, vectored-file counts, and cumulative
     deleted-row counts are all derived by the oracle from the same
     predicates."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     spend = _spend(orders).localCheckpoint()
     vt = VersionedTable(spark, _fresh_root("vtab-dv-"))
     for g in range(4):
@@ -189,7 +185,7 @@ def q128_incremental_view_maintenance(
     updates with recompute-grade answers. Decimal accumulation makes
     the incremental sum exact (order-independent), so the proof is a
     hash match, not a tolerance."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c1 = F.lit(_CUT1).cast("timestamp")
     c2 = F.lit(_CUT2).cast("timestamp")
     src = VersionedTable(spark, _fresh_root("vtab-ivm-src-"))

@@ -15,10 +15,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q75 — complex event processing: view → click → purchase sequences
 # per user, each step within 2 hours of the previous (the
@@ -54,7 +50,7 @@ def q75_event_sequence_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (view, click, purchase) triple with end-to-end latency."""
     from ..functions.scalars import epoch_micros
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def face(et: str, idc: str, tsc: str) -> DataFrame:
         return ev.filter(F.col("event_type") == et).select(
@@ -119,7 +115,7 @@ def q76_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     running total windows over the day-sized table only — never a
     distinct-over-growing-prefix, which is quadratic. The audience
     curve per event type is the growth-dashboard staple."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("event_type", "user_id").agg(
         F.min(F.to_date("ts")).alias("first_day")
     )
@@ -168,7 +164,7 @@ def q77_join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, TakeOrdered top-10. Run before any big keyed join; a
     skew_factor in the hundreds is the signal to salt
     (operators/skew.py) or let AQE split that key."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     freq = o.groupBy(F.col("o_custkey").alias("key")).agg(
         F.count("*").cast("long").alias("n")
     )
@@ -245,7 +241,7 @@ def d82_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as text_ops
     from ..operators.renumber import contiguous_row_number
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(text_ops.tokens("text")).alias("term")
     ).filter(F.col("term") != "")

@@ -15,10 +15,6 @@ from ..sources.readers import load_table
 from .registry import spark_query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q78 — month-over-month revenue growth per nation (the BI growth-rate
 # staple: lag over an aggregated series).
@@ -46,11 +42,11 @@ def q78_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (nations × months rows), so the growth calculation is free
     at any fact scale. First month per nation is NULL growth, exactly
     like the SQL."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     monthly = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -101,7 +97,7 @@ def q79_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, skew-free by construction (the key's cardinality equals
     the order count, not the catalog). The pair aggregate shuffles
     once; the top-25 is TakeOrdered over integer counts."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     basket = li.distinct()
     a = basket.select(
         F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("part_1")
@@ -151,7 +147,7 @@ def d83_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join membership flag against the keeper set, then one
     conditional aggregate per source. The keeper set join is keyed on
     doc_id; the text never shuffles twice."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     keep = d.groupBy("text").agg(F.min("doc_id").alias("keep_id"))
     flagged = d.join(
         keep.select(F.col("keep_id").alias("doc_id"), F.lit(1).alias("kept")),
@@ -203,7 +199,7 @@ def d84_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     away from the physical layout), the audit a shard-sized aggregate.
     Hash sharding is what keeps training shards balanced without a
     global sort — this query is the check that it actually did."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     shard = F.pmod(
         portable_hash(
             F.concat(F.lit("shard-"), F.col("doc_id").cast("string"))
@@ -257,7 +253,7 @@ def d85_translation_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     from .corpus_stats import d53_translation_candidates
 
     cand = d53_translation_candidates(spark, sf_dir)
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     lens = d.select(
         "doc_id",
         F.size(
@@ -320,7 +316,7 @@ def s09_event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     3σ rule run over a table with one row per hour — driver-cheap at
     any event volume, and the exact batch face of a foreachBatch
     alerting stage."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count("*").cast("long").alias("n_events")
     )

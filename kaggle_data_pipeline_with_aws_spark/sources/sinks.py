@@ -55,18 +55,20 @@ def upsert_keyed(
     by the incoming row (MongoDB ``_id`` semantics — a replayed batch
     converges instead of duplicating). One atomic commit: the first
     write appends, later ones MERGE with every non-key column taken
-    from the update. Duplicate keys within ``updates`` keep one row."""
+    from the update. Duplicate keys within ``updates`` keep one row,
+    deterministically: the max of (non-key columns, keys) per key."""
     table = VersionedTable(spark, table_dir)
-    updates = updates.dropDuplicates(key_cols)
+    values = [c for c in updates.columns if c not in key_cols]
+    updates = (
+        updates.groupBy(*key_cols)
+        .agg(F.max(F.struct(*values, *key_cols)).alias("__s"))
+        .select(*[F.col(f"__s.{c}").alias(c) for c in updates.columns])
+    )
     if table.current_version() == -1:
         table.commit(updates)
         return
     table.commit_merge(
-        updates,
-        key_cols,
-        when_matched={
-            c: F.col(f"s.{c}") for c in updates.columns if c not in key_cols
-        },
+        updates, key_cols, when_matched={c: F.col(f"s.{c}") for c in values}
     )
 
 
@@ -180,57 +182,6 @@ def with_notification(
         return wrapped
 
     return deco
-
-
-# ---------------------------------------------------------------------------
-# Table maintenance — small-file compaction.
-# ---------------------------------------------------------------------------
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files.
-
-    Weekly micro-batch ingest (the reference's cadence) accretes many
-    small files per cycle; at scale the scan cost becomes dominated by
-    file-open overhead and tiny row groups kill both parallel split
-    points and min/max pruning. Compaction = read → repartition to
-    ceil(bytes/target) → atomic directory swap. With ``sort_cols`` the
-    rewrite range-partitions + sorts, restoring clustering so min/max
-    stats prune again (the zone-map effect).
-
-    Returns the new file count. Atomicity: written to a sibling temp
-    dir, then swapped via rename — readers never see a half-written
-    table (same guarantee the reference got from S3 object PUT).
-    """
-    import math
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    out = (
-        df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-        if sort_cols
-        else df.repartition(n)
-    )
-    tmp = path.rstrip("/") + ".__compacting__"
-    out.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return len(
-        [f for f in os.listdir(path) if f.endswith(".parquet")]
-    )
 
 
 def write_training_shards(

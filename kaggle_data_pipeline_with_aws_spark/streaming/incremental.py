@@ -34,11 +34,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..functions.scalars import epoch_micros
 from ..operators import flatten
+from ..operators.txnlog import VersionedTable
 from ..schemas import CRICSHEET_MATCH_SCHEMA
+from ..sources.sinks import upsert_keyed
 
 
 def read_match_stream(
@@ -91,10 +92,6 @@ def stream_extract(
     ``query.awaitTermination()`` (AvailableNow terminates after
     draining the backlog).
     """
-    # Imported here: a module-level import change would mark every
-    # streaming face in this module changed for tools/proof_audit.py.
-    from ..operators.txnlog import VersionedTable
-
     raw = read_match_stream(spark, landing_dir, max_files_per_trigger)
 
     matchwise_out = VersionedTable(spark, os.path.join(out_dir, "matchwise"))
@@ -385,58 +382,23 @@ def stream_merge_sink(
     checkpoint_dir: str,
     keys: list[str],
 ) -> StreamingQuery:
-    """Streaming CDC upsert into a keyed parquet table: every
-    micro-batch MERGEs into the target via ``merge_upsert`` (matched →
-    update to the batch's values, not-matched → insert, everything
-    else carried), then atomically swaps the table directory.
+    """Streaming CDC upsert into a keyed transaction-logged table: every
+    micro-batch commits through ``sources.sinks.upsert_keyed`` — one
+    atomic MERGE (matched → update to the batch's values, not-matched
+    → insert, everything else carried); the first batch creates the
+    table. Read it with ``VersionedTable(spark, target_path).snapshot()``.
 
     This is the foreachBatch deployment of q81's MERGE face (T7's
     exactly-once composes with it: the checkpoint guarantees each
     input file feeds exactly one batch, and the MERGE is idempotent
     per key for replayed batches carrying identical values). Within a
-    batch, duplicate keys collapse to the LAST row by a deterministic
-    tiebreak before merging, mirroring the reference's
-    last-write-wins Mongo upsert (utils.py:74-89).
-
-    At scale the target would be a Delta/Iceberg table whose MERGE
-    does the same one-full-outer-join shape with file-level pruning;
-    the parquet-swap keeps the sandbox dependency-free while driving
-    the identical plan.
+    batch, duplicate keys collapse to one row by a deterministic
+    tiebreak (``upsert_keyed``'s max per key), standing in for the
+    reference's last-write-wins Mongo upsert (utils.py:74-89).
     """
-    import os
-    import shutil
-
-    from ..operators.ledger import merge_upsert
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # last-write-wins within the batch (deterministic tiebreak)
-        w_cols = [c for c in batch.columns if c not in keys]
-        dedup = batch.groupBy(*keys).agg(
-            *[F.max(F.struct(*w_cols, *keys)).alias("__s")]
-        )
-        batch = dedup.select(
-            *[F.col(f"__s.{c}").alias(c) for c in [*keys, *w_cols]]
-        )
-        if os.path.isdir(target_path):
-            target = spark.read.parquet(target_path)
-            merged = merge_upsert(
-                target,
-                batch,
-                keys,
-                when_matched={
-                    c: F.col(f"s.{c}") for c in batch.columns if c not in keys
-                },
-            )
-        else:
-            merged = batch
-        tmp = target_path.rstrip("/") + ".__merging__"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_path.rstrip("/") + ".__old__"
-        if os.path.isdir(target_path):
-            os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
+        upsert_keyed(batch.sparkSession, target_path, batch, keys)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from kaggle_data_pipeline_with_aws_spark.operators import text
 from kaggle_data_pipeline_with_aws_spark.plans import corpus_stats
 from kaggle_data_pipeline_with_aws_spark.plans.registry import QUERIES, load_all
+from kaggle_data_pipeline_with_aws_spark.sources.readers import load_table
 
 load_all()
 
@@ -184,7 +185,7 @@ def test_orders_above_customer_avg_replay(spark):
     assert rows
     assert all(r["o_totalprice"] > r["cust_avg"] for r in rows)
     # replay: recompute per-customer averages by groupBy and compare keys
-    orders = corpus_stats._t(spark, SF, "orders")
+    orders = load_table(spark, SF, "orders")
     avgs = {
         r["o_custkey"]: (r["a"], r["n"])
         for r in orders.groupBy("o_custkey")
@@ -227,7 +228,7 @@ def test_intersect_is_subset_of_both_years(spark):
         r["o_custkey"] for r in QUERIES["q42_retained_customers"](spark, SF).collect()
     }
     assert retained
-    orders = corpus_stats._t(spark, SF, "orders")
+    orders = load_table(spark, SF, "orders")
     y95 = {
         r["o_custkey"]
         for r in orders.filter(_F.year("o_orderdate") == 1995)
@@ -250,7 +251,7 @@ def test_attribution_faces_partition_clicks(spark):
     unattributed = {
         r["left_id"] for r in QUERIES["s05_unattributed_clicks"](spark, SF).collect()
     }
-    events = corpus_stats._t(spark, SF, "events")
+    events = load_table(spark, SF, "events")
     clicks = {
         r["event_id"]
         for r in events.filter(_F.col("event_type") == "click").collect()
@@ -276,7 +277,7 @@ def test_funnel_monotone_and_ordering(spark, monkeypatch):
         rows,
         "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE, props STRING",
     ).withColumn("ts", F.to_timestamp("ts"))
-    monkeypatch.setattr(corpus_stats, "_t", lambda s, d, n: df)
+    monkeypatch.setattr(corpus_stats, "load_table", lambda s, d, n: df)
     got = {r["stage"]: r["n_users"] for r in corpus_stats.q43_event_funnel(spark, SF).collect()}
     assert got == {"view": 2, "click": 1, "purchase": 1}
 
@@ -349,7 +350,7 @@ def test_set_ops_partition_1995_customers(spark):
 
     retained = {r["o_custkey"] for r in QUERIES["q42_retained_customers"](spark, SF).collect()}
     churned = {r["o_custkey"] for r in QUERIES["q44_churned_customers"](spark, SF).collect()}
-    orders = corpus_stats._t(spark, SF, "orders")
+    orders = load_table(spark, SF, "orders")
     y95 = {
         r["o_custkey"]
         for r in orders.filter(_F.year("o_orderdate") == 1995)
@@ -401,7 +402,7 @@ def test_ewma_hand_computed(spark, monkeypatch):
         rows,
         "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE, props STRING",
     ).withColumn("ts", F.to_timestamp("ts"))
-    monkeypatch.setattr(corpus_stats, "_t", lambda s, d, n: df)
+    monkeypatch.setattr(corpus_stats, "load_table", lambda s, d, n: df)
     out = {r["event_id"]: r["ewma"] for r in corpus_stats.q46_ewma_values(spark, SF).collect()}
     # [1]: 1.0; [1,2]: (1*0.5+2)/1.5; [1,2,4]: ((0.5+2)*0.5+4)/1.75
     assert out[1] == 1.0
@@ -425,7 +426,7 @@ def test_json_extraction_replay(spark):
         r["event_type"]: (r["n_events"], r["sum_k"])
         for r in QUERIES["q48_json_payload_stats"](spark, SF).collect()
     }
-    ev = corpus_stats._t(spark, SF, "events").select("event_type", "props").collect()
+    ev = load_table(spark, SF, "events").select("event_type", "props").collect()
     expected = {}
     for r in ev:
         n, s = expected.get(r["event_type"], (0, 0))
@@ -439,7 +440,7 @@ def test_unpivot_round_trips_wide_measures(spark):
     assert len(rows) == 3 * len(statuses)
     long = {(r["o_orderstatus"], r["measure"]): r["value"] for r in rows}
     # n_orders measure must reconcile with a direct count
-    orders = corpus_stats._t(spark, SF, "orders")
+    orders = load_table(spark, SF, "orders")
     counts = {
         r["o_orderstatus"]: r["n"]
         for r in orders.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()
@@ -518,7 +519,7 @@ def test_pareto_frontier_matches_bruteforce(spark):
     assert got
     orders = [
         (r["o_orderkey"], r["o_orderdate"], r["o_totalprice"])
-        for r in corpus_stats._t(spark, SF, "orders").collect()
+        for r in load_table(spark, SF, "orders").collect()
     ]
     # brute-force dominance: (earlier-or-equal date, higher-or-equal
     # price, strictly better in one)
@@ -604,7 +605,7 @@ def test_rolling_median_within_window_bounds(spark, monkeypatch):
         rows,
         "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE, props STRING",
     ).withColumn("ts", F.to_timestamp("ts"))
-    monkeypatch.setattr(corpus_stats, "_t", lambda s, d, n: df)
+    monkeypatch.setattr(corpus_stats, "load_table", lambda s, d, n: df)
     out = {
         r["event_id"]: r["rolling_median"]
         for r in corpus_stats.q53_rolling_median(spark, SF).collect()
@@ -661,7 +662,7 @@ def test_cohort_retention_week0_covers_all_users(spark):
     rows = QUERIES["q54_cohort_retention"](spark, SF).collect()
     assert rows
     assert all(r["week_offset"] >= 0 for r in rows)
-    ev = corpus_stats._t(spark, SF, "events")
+    ev = load_table(spark, SF, "events")
     n_users = ev.select("user_id").distinct().count()
     # every user is active in their own first week
     week0 = sum(r["n_active"] for r in rows if r["week_offset"] == 0)
@@ -687,7 +688,7 @@ def test_autocorrelation_bounds_and_trending_signal(spark, monkeypatch):
         rows,
         "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE, props STRING",
     ).withColumn("ts", F.to_timestamp("ts"))
-    monkeypatch.setattr(corpus_stats, "_t", lambda s, d, n: df)
+    monkeypatch.setattr(corpus_stats, "load_table", lambda s, d, n: df)
     (r,) = corpus_stats.q55_value_autocorrelation(spark, SF).collect()
     assert (r["n_pairs"], r["lag1_corr"]) == (14, 1.0)
 

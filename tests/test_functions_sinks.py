@@ -78,6 +78,14 @@ def test_upsert_keyed_idempotent_and_updates_win(spark, tmp_path):
         (r.id, r.val) for r in VersionedTable(spark, table).snapshot().collect()
     ) == [(1, "a"), (2, "B2"), (3, "c")]
 
+    # duplicate key in one batch → the max of (val, id) wins, not the
+    # first row
+    v3 = spark.createDataFrame([(4, "d"), (4, "e")], "id INT, val STRING")
+    sinks.upsert_keyed(spark, table, v3, ["id"])
+    assert sorted(
+        (r.id, r.val) for r in VersionedTable(spark, table).snapshot().collect()
+    ) == [(1, "a"), (2, "B2"), (3, "c"), (4, "e")]
+
 
 def test_with_notification_success_and_failure():
     events: list[tuple[str, str]] = []
@@ -161,27 +169,6 @@ def test_mongo_document_store_fails_clearly_without_connector(spark):
 
     with _pytest.raises(RuntimeError, match="mongo-spark-connector"):
         MongoDocumentStore(spark, "mongodb://localhost", "db")
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from kaggle_data_pipeline_with_aws_spark.sources.sinks import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    # 40 tiny files
-    spark.range(4000).selectExpr("id", "id % 7 AS k").repartition(
-        40
-    ).write.parquet(path)
-    import os as _os
-
-    before = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
-    assert before >= 30
-    n = compact_parquet(spark, path, target_file_bytes=1 << 30, sort_cols=["id"])
-    assert n < before and n >= 1
-    got = spark.read.parquet(path)
-    assert got.count() == 4000
-    assert got.agg({"id": "sum"}).collect()[0][0] == sum(range(4000))
 
 
 def test_kaggle_publish_artifact_shape(spark, tmp_path):

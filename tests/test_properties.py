@@ -144,15 +144,15 @@ def test_ewma_stays_within_window_bounds(spark_session, values):
         "event_id LONG, ts STRING, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     ).withColumn("ts", F.to_timestamp("ts"))
-    orig = corpus_stats._t
-    corpus_stats._t = lambda s, d, n: df
+    orig = corpus_stats.load_table
+    corpus_stats.load_table = lambda s, d, n: df
     try:
         out = {
             r["event_id"]: r["ewma"]
             for r in corpus_stats.q46_ewma_values(spark_session, "ignored").collect()
         }
     finally:
-        corpus_stats._t = orig
+        corpus_stats.load_table = orig
     for i in range(len(values)):
         window = values[max(0, i - 4) : i + 1]
         assert min(window) - 1e-6 <= out[i] <= max(window) + 1e-6, (i, window, out[i])

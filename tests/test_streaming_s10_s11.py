@@ -128,9 +128,13 @@ def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
     """s12/T7: a keyed stream MERGEs into a parquet table per
     micro-batch — later files update existing keys and insert new
     ones, replays do not duplicate."""
+    from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
     from kaggle_data_pipeline_with_aws_spark.streaming.incremental import (
         stream_merge_sink,
     )
+
+    def read_target():
+        return VersionedTable(spark, target).snapshot()
 
     src = str(tmp_path / "src")
     target = str(tmp_path / "target")
@@ -154,7 +158,7 @@ def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
         spark.readStream.schema(schema).json(src), target, ckpt, ["user_id"]
     )
     q.awaitTermination()
-    t1 = {r["user_id"]: r["value"] for r in spark.read.parquet(target).collect()}
+    t1 = {r["user_id"]: r["value"] for r in read_target().collect()}
     assert t1 == {1: 1.0, 2: 2.0}
 
     # second landing: update key 2, insert key 3; key 1 untouched
@@ -169,9 +173,9 @@ def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
         spark.readStream.schema(schema).json(src), target, ckpt, ["user_id"]
     )
     q.awaitTermination()
-    t2 = {r["user_id"]: r["value"] for r in spark.read.parquet(target).collect()}
+    t2 = {r["user_id"]: r["value"] for r in read_target().collect()}
     assert t2 == {1: 1.0, 2: 20.0, 3: 3.0}
-    assert spark.read.parquet(target).count() == 3
+    assert read_target().count() == 3
 
     # replay with the same checkpoint: nothing reprocessed
     q = stream_merge_sink(
@@ -179,5 +183,5 @@ def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
     )
     q.awaitTermination()
     assert {
-        r["user_id"]: r["value"] for r in spark.read.parquet(target).collect()
+        r["user_id"]: r["value"] for r in read_target().collect()
     } == t2

@@ -6,13 +6,10 @@ substrate removed)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
+from kaggle_data_pipeline_with_aws_spark.operators import knn_substrate, similarity
 from kaggle_data_pipeline_with_aws_spark.plans.registry import QUERIES, load_all
-
-sys.path.insert(0, "/root/repo/tools")
 
 load_all()
 
@@ -34,6 +31,11 @@ def test_graph_consumer_plan_scans_the_artifact(spark, name):
         assert marker not in plan, f"{name} re-derives the kNN edges ({marker})"
 
 
+@pytest.fixture(scope="module")
+def built_substrate(spark):
+    knn_substrate.mutual_knn_edges(spark, SF)
+
+
 @pytest.mark.parametrize(
     "query,module",
     [
@@ -41,24 +43,26 @@ def test_graph_consumer_plan_scans_the_artifact(spark, name):
         ("d132_bfs_hops", "plans.wave30"),
     ],
 )
-def test_checkpointing_consumers_source_from_the_substrate(query, module):
+def test_checkpointing_consumers_source_from_the_substrate(
+    spark, built_substrate, monkeypatch, query, module
+):
     """d122/d132 eagerly localCheckpoint their edges, so the executed
-    plan can't show the lineage; assert at the reference-graph level
-    instead: their plan functions reach the substrate reader and have
-    NO direct reference into the IVF machinery (operators.similarity)
-    — the only path there is through knn_substrate.build_edges_plan,
-    i.e. the one-time builder."""
-    import proof_audit as pa
+    plan can't show the lineage; check behaviour instead: with the
+    substrate built and the IVF kernel disabled, each query still
+    collects and reads its edges through the substrate reader."""
+    assert QUERIES[query].__module__.endswith(module)
 
-    graph = pa._RefGraph()
-    fn = QUERIES[query]
-    root = (fn.__module__, fn.__name__)
-    direct = graph.edges[root]
-    assert not any(
-        m.endswith("operators.similarity") for m, _ in direct
-    ), f"{query} calls the IVF machinery directly"
-    closure = graph.closure({root})
-    assert any(
-        m.endswith("operators.knn_substrate") and s == "mutual_knn_edges"
-        for m, s in closure
-    ), f"{query} does not reach the substrate reader"
+    def no_ivf(*args, **kwargs):
+        raise AssertionError(f"{query} re-derives the kNN edges")
+
+    calls = []
+    reader = knn_substrate.mutual_knn_edges
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return reader(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "ivf_topk_fixed_centroids_grouped", no_ivf)
+    monkeypatch.setattr(knn_substrate, "mutual_knn_edges", spy)
+    QUERIES[query](spark, SF).collect()
+    assert calls, f"{query} does not read the substrate"

@@ -15,7 +15,7 @@ Q = registry.QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def _embs(spark):
+def _vectors(spark):
     return {
         e["vec_id"]: np.array(e["embedding"], dtype=np.float64)
         for e in load_table(spark, SF, "embeddings").collect()
@@ -24,7 +24,7 @@ def _embs(spark):
 
 def test_d110_matches_bruteforce_semdedup(spark):
     rows = {r["vec_id"]: r for r in Q["d110_semdedup"](spark, SF).collect()}
-    embs = _embs(spark)
+    embs = _vectors(spark)
     cents = {cid: embs[cid] for cid in range(16)}
 
     def cos(a, b):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from kaggle_data_pipeline_with_aws_spark.operators import text_substrate
 from kaggle_data_pipeline_with_aws_spark.plans import registry, wave33
+from kaggle_data_pipeline_with_aws_spark.sources.readers import load_table
 
 registry.load_all()
 SF = "/root/testdata/sf0.001"
@@ -60,7 +61,7 @@ def test_d142_no_near_dup_pair_crosses_splits(spark):
     comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), "component"
     )
-    docs = wave33._t(spark, SF, "documents").select("doc_id")
+    docs = load_table(spark, SF, "documents").select("doc_id")
     clustered = docs.join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("cluster_id")
     )
@@ -96,7 +97,7 @@ def test_d142_no_near_dup_pair_crosses_splits(spark):
 
 def test_d142_split_shares_cover_all_docs(spark):
     rows = registry.QUERIES["d142_cluster_safe_split"](spark, SF).collect()
-    n_docs = wave33._t(spark, SF, "documents").count()
+    n_docs = load_table(spark, SF, "documents").count()
     assert sum(r["n_docs"] for r in rows) == n_docs
     assert sum(r["n_clusters"] for r in rows) > 0
     assert math.isclose(sum(r["doc_share"] for r in rows), 1.0, abs_tol=1e-4)

@@ -19,7 +19,7 @@ def test_d143_flags_synthetic_looping_text(spark, monkeypatch):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(rows)], "doc_id LONG, text STRING"
     )
-    monkeypatch.setattr(wave34, "_t", lambda s, d, n: df)
+    monkeypatch.setattr(wave34, "load_table", lambda s, d, n: df)
     out = {
         r["doc_id"]: r
         for r in registry.QUERIES["d143_intra_doc_repetition"](

@@ -109,7 +109,7 @@ def test_d82_decile_formula_matches_ntile_at_uneven_n(spark, monkeypatch):
             [(i, " ".join(f"w{j}" for j in range(i % 7 + 3))) for i in range(n)],
             "doc_id LONG, text STRING",
         )
-        monkeypatch.setattr(wave8, "_t", lambda s, d, name: docs)
+        monkeypatch.setattr(wave8, "load_table", lambda s, d, name: docs)
         got = {
             r["decile"]: r["n_docs"]
             for r in wave8.d82_perplexity_buckets(spark, "ignored").collect()

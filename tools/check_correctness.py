@@ -1,13 +1,14 @@
-"""Local mirror of the driver's correctness gate.
+"""Oracle correctness sweep.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given scale factor, then compares:
+DuckDB at the given scale factor, then compares (``compare`` — the same
+check tier-1 runs over every query at sf0.001 in tests/test_entry.py):
 
 - row count
 - column-name set
 - result TYPES (Spark ``df.dtypes`` vs DuckDB ``DESCRIBE``, canonically
-  mapped — catches HUGEINT-vs-BIGINT drift that the driver's typed hash
-  fails on even when values are identical; see tools/check_types.py)
+  mapped — catches HUGEINT-vs-BIGINT drift that a typed hash of the
+  results fails on even when values are identical)
 - order-insensitive values (columns sorted by name, rows sorted; floats
   compared both exactly and with 1e-9 relative tolerance so we can see
   whether a mismatch is real or summation-order ulps)
@@ -18,11 +19,54 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
+import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# (column names, canonical type per column, rows)
+Result = tuple[list[str], dict[str, str], list[tuple]]
+
+
+def canon_duck(t: str) -> str:
+    """DuckDB type string -> canonical (matching Spark simpleString)."""
+    t = t.strip()
+    m = re.match(r"^(.*)\[\]$", t)
+    if m:
+        return f"array<{canon_duck(m.group(1))}>"
+    u = t.upper()
+    if u.startswith("DECIMAL"):
+        return u.replace("DECIMAL", "decimal").replace(" ", "")
+    mapping = {
+        "BIGINT": "bigint",
+        "INTEGER": "int",
+        "SMALLINT": "smallint",
+        "TINYINT": "tinyint",
+        "HUGEINT": "decimal(38,0)",  # Arrow decimal128(38,0)
+        "UBIGINT": "uint64",
+        "DOUBLE": "double",
+        "FLOAT": "float",
+        "REAL": "float",
+        "VARCHAR": "string",
+        "DATE": "date",
+        "TIMESTAMP": "timestamp",
+        "TIMESTAMP WITH TIME ZONE": "timestamp",
+        "BOOLEAN": "boolean",
+        "BLOB": "binary",
+    }
+    return mapping.get(u, u.lower())
+
+
+def canon_spark(t: str) -> str:
+    t = t.replace(" ", "")
+    # CORRECTNESS_r01 showed timestamp_ntz hashes identically to DuckDB
+    # TIMESTAMP (q07/q08/q16/q17 were green), so the ntz distinction is
+    # not a drift.
+    if t == "timestamp_ntz":
+        return "timestamp"
+    return t
 
 
 def _row_sort_key(t: tuple):
@@ -77,22 +121,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
-
     import __spark_entry__ as entry_mod
     from kaggle_data_pipeline_with_aws_spark.session import get_spark
 
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    from kaggle_data_pipeline_with_aws_spark.sources.readers import TABLES
-
-    import os
-
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # Spark directory-per-table layout
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    con = duck_connect(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -102,77 +135,103 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
+            s_res = spark_result(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(s_rows)} rows ({time.time()-t0:.1f}s)")
-            continue
         try:
-            res = con.execute(oracles[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
+            d_res = duck_result(con, oracles[name])
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
             continue
-        ok = True
-        notes = []
-        if sorted(s_cols) != sorted(d_cols):
-            ok = False
-            notes.append(f"schema spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        else:
-            from check_types import canon_duck, canon_spark
-
-            s_types = {c: canon_spark(t) for c, t in sdf.dtypes}
-            d_desc = con.execute(f"DESCRIBE {oracles[name]}").fetchall()
-            d_types = {r[0]: canon_duck(r[1]) for r in d_desc}
-            tdiffs = [
-                f"{c}: spark={s_types[c]} duck={d_types[c]}"
-                for c in sorted(s_types)
-                if s_types[c] != d_types.get(c)
-            ]
-            if tdiffs:
-                ok = False
-                notes.append("types " + "; ".join(tdiffs))
-        if len(s_rows) != len(d_rows):
-            ok = False
-            notes.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
-        if ok:
-            sn, _ = normalize(s_rows, s_cols)
-            dn, _ = normalize(d_rows, d_cols)
-            n_exact_bad = n_approx_bad = 0
-            first_bad = None
-            for sr, dr in zip(sn, dn):
-                for sv, dv in zip(sr, dr):
-                    exact, approx = values_equal(sv, dv)
-                    if not exact:
-                        n_exact_bad += 1
-                        if first_bad is None:
-                            first_bad = (sv, dv)
-                    if not approx:
-                        n_approx_bad += 1
-            if n_approx_bad:
-                ok = False
-                notes.append(
-                    f"{n_approx_bad} values differ beyond tolerance, first={first_bad}"
-                )
-            elif n_exact_bad:
-                notes.append(
-                    f"WARN {n_exact_bad} float ulp-level diffs (first={first_bad})"
-                )
+        ok, notes = compare(s_res, d_res)
         status = "OK   " if ok else "FAIL "
-        print(f"{status}{name}: {len(s_rows)} rows ({time.time()-t0:.1f}s) {'; '.join(notes)}")
+        print(f"{status}{name}: {len(s_res[2])} rows ({time.time()-t0:.1f}s) {'; '.join(notes)}")
         if not ok:
             failures.append(name)
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
     return 1 if failures else 0
+
+
+def duck_connect(sf_dir: str):
+    """A DuckDB connection with one view per engine table of ``sf_dir``."""
+    import duckdb
+
+    from kaggle_data_pipeline_with_aws_spark.sources.readers import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):  # Spark directory-per-table layout
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
+def duck_result(con, sql: str) -> Result:
+    res = con.execute(sql)
+    cols = [d[0] for d in res.description]
+    rows = res.fetchall()
+    desc = con.execute(f"DESCRIBE {sql}").fetchall()
+    return cols, {r[0]: canon_duck(r[1]) for r in desc}, rows
+
+
+def spark_result(sdf) -> Result:
+    rows = [tuple(r) for r in sdf.collect()]
+    return sdf.columns, {c: canon_spark(t) for c, t in sdf.dtypes}, rows
+
+
+def compare(spark_res: Result, duck_res: Result) -> tuple[bool, list[str]]:
+    """(ok, notes): column set, canonical types, row count, then values
+    order-insensitively within 1e-9. Ulp-level float differences inside
+    the tolerance stay ok and leave a WARN note."""
+    s_cols, s_types, s_rows = spark_res
+    d_cols, d_types, d_rows = duck_res
+    ok = True
+    notes = []
+    if sorted(s_cols) != sorted(d_cols):
+        ok = False
+        notes.append(f"schema spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    else:
+        tdiffs = [
+            f"{c}: spark={s_types[c]} duck={d_types[c]}"
+            for c in sorted(s_types)
+            if s_types[c] != d_types.get(c)
+        ]
+        if tdiffs:
+            ok = False
+            notes.append("types " + "; ".join(tdiffs))
+    if len(s_rows) != len(d_rows):
+        ok = False
+        notes.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if ok:
+        sn, _ = normalize(s_rows, s_cols)
+        dn, _ = normalize(d_rows, d_cols)
+        n_exact_bad = n_approx_bad = 0
+        first_bad = None
+        for sr, dr in zip(sn, dn):
+            for sv, dv in zip(sr, dr):
+                exact, approx = values_equal(sv, dv)
+                if not exact:
+                    n_exact_bad += 1
+                    if first_bad is None:
+                        first_bad = (sv, dv)
+                if not approx:
+                    n_approx_bad += 1
+        if n_approx_bad:
+            ok = False
+            notes.append(
+                f"{n_approx_bad} values differ beyond tolerance, first={first_bad}"
+            )
+        elif n_exact_bad:
+            notes.append(
+                f"WARN {n_exact_bad} float ulp-level diffs (first={first_bad})"
+            )
+    return ok, notes
 
 
 if __name__ == "__main__":
