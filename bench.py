@@ -68,98 +68,11 @@ def main() -> None:
     )
     if warm_dir:
         for name in names:
-            try:
-                qs[name](spark, warm_dir).count()
-            except Exception:
-                pass
+            qs[name](spark, warm_dir).count()
         # Drop warm-up-scale cached frames (several plans cache()
         # intermediates) so the timed passes don't measure under the
         # memory/GC pressure of stale sf0.01 blocks.
         spark.catalog.clearCache()
-
-    # Fixed-cost calibration probe (round-6, VERDICT #3): a constant-
-    # size JVM-side aggregation — spark.range is independent of sf and
-    # of every operator in this repo — timed with the same min-of-3
-    # discipline as the queries. Its value moves ONLY with box state
-    # (CPU contention, GC pressure, thermals), never with code or data
-    # changes, so a reader of the BENCH series alone can separate
-    # whole-session band elevation from a real regression: divide any
-    # query's time by (calibration_sec / a reference round's
-    # calibration_sec) before comparing across rounds. r05's d06/d42
-    # datapoints are the motivating case (band-elevated ~1.3x with no
-    # code change — see BENCH_SCALING.md "Late-round bench variance
-    # band").
-    def _calibrate() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            spark.range(0, 200_000_000, 1, 32).selectExpr(
-                "sum(id * 2 + 1) AS s"
-            ).collect()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    _calibrate()  # untimed warm-up of the probe's own codegen path
-    calibration = _calibrate()
-
-    # Second, SHUFFLE-BOUND calibration probe (round-11 verdict #2):
-    # the pure-CPU probe above is a single codegen stage and is blind
-    # to scheduler/exchange contention — in the round-11 driver window
-    # it moved +5% while untouched broadcast-join queries inflated
-    # 50-100%. This probe pays one fixed-size round-robin exchange +
-    # a keyed aggregation exchange (the shape the contention mode
-    # actually hits), constant in sf and in every operator here.
-    # Additions-only: the JSON gains `calibration_shuffle_sec`; the
-    # CPU probe, its band, and all existing fields are unchanged.
-    def _calibrate_shuffle() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            (
-                spark.range(0, 2_000_000, 1, 32)
-                .repartition(32)
-                .selectExpr("id % 1024 AS k")
-                .groupBy("k")
-                .count()
-                .selectExpr("sum(count) AS s")
-                .collect()
-            )
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    _calibrate_shuffle()  # untimed warm-up
-    calibration_shuffle = _calibrate_shuffle()
-
-    # Idle reference band for this box: a calibration outside it means
-    # the box was NOT idle, so the run's numbers carry a whole-session
-    # band elevation — warn (never fail) so a loaded box can't silently
-    # pollute the BENCH series (round-6 verdict #5).
-    #
-    # RE-BASED round 8 (verdict #5): five idle runs at round-8 HEAD
-    # read 0.088-0.125 — the box drifts between rounds (r6 idle:
-    # 0.107-0.138; r7: 0.070-0.076), so the band tracks the current
-    # regime rather than a stale one. The cross-round normalization
-    # constant stays 0.12 (it is a fixed unit, not a property of the
-    # band): divide by (calibration_sec / 0.12) on BOTH sides of any
-    # cross-round comparison.
-    CAL_BAND = (0.085, 0.130)
-    calibration_warning = None
-    if calibration > CAL_BAND[1]:
-        calibration_warning = (
-            f"calibration {calibration}s above idle band "
-            f"{CAL_BAND[0]}-{CAL_BAND[1]}s: box busier than the idle "
-            f"reference (times pessimistic) — normalize by "
-            f"(calibration_sec / 0.12) before comparing across rounds"
-        )
-    elif calibration < CAL_BAND[0]:
-        calibration_warning = (
-            f"calibration {calibration}s below idle band "
-            f"{CAL_BAND[0]}-{CAL_BAND[1]}s: box faster than the idle "
-            f"reference (times flattering) — normalize by "
-            f"(calibration_sec / 0.12) before comparing across rounds"
-        )
-    if calibration_warning:
-        print(f"# WARNING: {calibration_warning}", file=sys.stderr)
 
     # Three timed passes, per-query MIN: a single pass is hostage to
     # whatever else the machine is doing in that instant (GC, another
@@ -186,14 +99,6 @@ def main() -> None:
     # inflating the headline metric the rounds are judged on.
     total = round(sum(v for k, v in timings.items() if k in HEADLINE), 3)
     extras = round(sum(v for k, v in timings.items() if k not in HEADLINE), 3)
-    # Calibration-normalized series (round-10 verdict #5): the raw
-    # headline numbers move with box state (closing-run calibrations
-    # bounced 0.117-0.315 in round 10); dividing by
-    # (calibration_sec / 0.12) — 0.12 being the fixed cross-round
-    # normalization unit documented above — gives a column readable
-    # round-over-round without manual normalization. Raw stays the
-    # primary metric; normalized is the comparison column.
-    cal_factor = calibration / 0.12 if calibration > 0 else 1.0
     print(
         json.dumps(
             {
@@ -202,15 +107,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "extras_total": extras,
-                "calibration_sec": calibration,
-                "calibration_shuffle_sec": calibration_shuffle,
-                "normalized_total": round(total / cal_factor, 3),
-                "extras_total_normalized": round(extras / cal_factor, 3),
-                **(
-                    {"calibration_warning": calibration_warning}
-                    if calibration_warning
-                    else {}
-                ),
                 "sf": sf,
             }
         )

@@ -9,12 +9,11 @@ registry per the round-4 verdict). At 100 TB you would run the edge
 builder ONCE as a writer job and point every graph query at the
 resulting parquet table; this module is that exact idiom scaled down.
 
-Since round 6 the store mechanics (content-addressed version-keyed
-paths, atomic publication, crashed-writer rebuild, concurrent-race
-handling, unusable-store fallback, configurable root URI via
-``$SPARK_GRAFT_SUBSTRATE_ROOT``) live in the shared
-``operators/substrate_store.py`` — the same contract now also serving
-the ranked-shingle and MinHash-signature artifacts
+The store mechanics (content-addressed version-keyed paths, publication
+as a transaction-log commit, concurrent-race handling, configurable
+root URI via ``$SPARK_GRAFT_SUBSTRATE_ROOT``) live in the shared
+``operators/substrate_store.py`` — the same contract also serving the
+ranked-shingle and MinHash-signature artifacts
 (operators/text_substrate.py). This module keeps the builder plan and
 the artifact identity:
 
@@ -25,13 +24,9 @@ the artifact identity:
   (``similarity.ivf_topk_fixed_centroids_grouped``) — bit-identical
   values, ~10× less build wall at 10×.
 - ``_VERSION`` is part of the path: bump it whenever the builder plan
-  changes so a stale artifact from an older plan can never be read.
-  Note the round-6 store generalization DID move the path: the dataset
-  token now hashes the dataset's listing fingerprint alongside its
-  location (md5(path + '|' + fingerprint) vs the round-5 md5(path)),
-  so round-5 artifacts became unreachable and were rebuilt on first
-  use; the orphans are collected by ``substrate_store.
-  prune_superseded`` (keep-latest-N per family/dataset, grace-windowed).
+  or the artifact's storage layout changes, so a stale artifact can
+  never be read. Superseded artifacts are collected by
+  ``substrate_store.prune_superseded``.
 
 Reference scope: the reference pipeline has no graph substrate — this
 is part of the beyond-reference LLM-data-curation surface the brief
@@ -50,7 +45,8 @@ from . import similarity, substrate_store
 # baked into the artifact path so stale materializations are unreachable.
 # v2: within-cell scoring moved into the cell tasks (grouped kernel) —
 # values are bit-identical to v1, but the rule is any plan change bumps.
-_VERSION = "v2"
+# v3: published as a transaction-logged table.
+_VERSION = "v3"
 
 
 def build_edges_plan(embs: DataFrame) -> DataFrame:
@@ -84,10 +80,6 @@ def build_edges_plan(embs: DataFrame) -> DataFrame:
     )
 
 
-def edges_artifact_path(sf_dir: str) -> str:
-    return substrate_store.artifact_path("knn_edges", _VERSION, sf_dir)
-
-
 # ---------------------------------------------------------------------------
 # Connectivity-augmented graph (round-9 verdict #2): the raw mutual
 # graph fragments (d205 measured recall@5 ≈ 0.2 — the beam search
@@ -101,7 +93,7 @@ def edges_artifact_path(sf_dir: str) -> str:
 # wider K (degree floor K per node by construction — no node is
 # isolated), symmetrized, never mutual-filtered.
 # ---------------------------------------------------------------------------
-_VERSION_AUG = "v1"
+_VERSION_AUG = "v2"  # v2: transaction-logged table
 AUG_K = 20  # per-node degree floor (each node's top-20, bidirectional)
 AUG_N_PROBE = 3
 
@@ -151,7 +143,7 @@ def augmented_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # read many (at 100 TB the upper layer is corpus/8 — building it per
 # query run would repay the whole point).
 # ---------------------------------------------------------------------------
-_VERSION_UPPER = "v1"
+_VERSION_UPPER = "v2"  # v2: transaction-logged table
 UPPER_SAMPLE_MOD = 8
 UPPER_K = 8
 UPPER_N_PROBE = 2
@@ -211,8 +203,8 @@ def mutual_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller per (dataset, plan version) pays one builder job; everyone
     after reads a narrow 3-column parquet scan, so the BFS/k-core/
     triangle queries' lineage starts at the edge list instead of at
-    the embedding table. Store mechanics (atomic publish, races,
-    fallback) are substrate_store's contract.
+    the embedding table. Store mechanics (publication, races, GC) are
+    substrate_store's contract.
     """
     return substrate_store.materialize_once(
         spark,

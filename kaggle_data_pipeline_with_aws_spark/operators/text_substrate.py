@@ -7,7 +7,7 @@ re-exploded and re-ranked the 3-gram shingle table (at 10× that is a
 d07/d108/d115 each re-signed the corpus with the same 32-hash MinHash.
 This module materializes the two intermediates ONCE through
 ``operators/substrate_store.py`` (content-addressed, version-keyed,
-atomic publish, direct-plan fallback) and re-expresses the consumers
+published as a transaction-log commit) and re-expresses the consumers
 on top — the same build-once idiom the round-5 verdict graded "done"
 for the kNN graph family, applied to its own round-6 directive for
 the PPJoin family.
@@ -33,9 +33,10 @@ never all-pairs), and ``lsh_pairs`` mirrors ``dedup.minhash_lsh_pairs``
 pinned by tests at sf0.001/sf0.01; the standalone forms stay in
 operators/dedup.py as the semantic twins and for one-shot callers.
 
-Scale notes: the artifacts are parquet tables a cluster deployment
-would build as writer jobs (store root configurable to any Hadoop-FS
-URI via ``$SPARK_GRAFT_SUBSTRATE_ROOT``). Consumers' lineage starts at
+Scale notes: the artifacts are transaction-logged parquet tables
+(``operators/txnlog.py``) a cluster deployment would build as writer
+jobs (store root configurable to any Hadoop-FS URI via
+``$SPARK_GRAFT_SUBSTRATE_ROOT``). Consumers' lineage starts at
 a narrow columnar scan instead of at the raw corpus: the explode, the
 document-frequency groupBy, and the rank window are paid once per
 (dataset, version) instead of once per query per run.
@@ -50,10 +51,11 @@ from ..sources.readers import load_table
 from . import dedup, substrate_store
 from .dedup import LSH_BANDS, LSH_ROWS, NUM_HASHES, _int_ceil
 
-# Bump when the respective builder plan changes — versions are baked
-# into the artifact path, so stale materializations are unreachable.
-_SHINGLE_VERSION = "v1"  # distinct 3-gram shingles, PPJoin-ranked
-_SIG_VERSION = "v1"  # portable 32-hash MinHash signatures
+# Bump when the respective builder plan or the storage layout changes —
+# versions are baked into the artifact path, so stale materializations
+# are unreachable. v2 everywhere: published as transaction-logged tables.
+_SHINGLE_VERSION = "v2"  # distinct 3-gram shingles, PPJoin-ranked
+_SIG_VERSION = "v2"  # portable 32-hash MinHash signatures
 
 
 def ranked_shingles_plan(docs: DataFrame) -> DataFrame:
@@ -101,7 +103,7 @@ def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Components artifact version (round 7). The builder is the iterative
 # min-label fixpoint over the LSH pair list — bump on any change to
 # either the banding semantics or the component rule.
-_COMP_VERSION = "v1"
+_COMP_VERSION = "v2"
 
 
 def lsh_components(

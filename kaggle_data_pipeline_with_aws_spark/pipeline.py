@@ -107,9 +107,10 @@ def run_incremental(
         # them from both tables but STILL ledger-mark their files below —
         # a permanently-corrupt file must not be retried forever (the
         # reference would crash its per-file Lambda and retry on every
-        # cycle). n_corrupt reports them to the caller/notifier.
+        # cycle). n_corrupt reports them to the caller/notifier; its
+        # count is the one job that materialises the cache.
         raw = scanned.filter(F.col("info").isNotNull())
-        n_corrupt = scanned.count() - raw.count()
+        n_corrupt = scanned.filter(F.col("info").isNull()).count()
         try:
             new_matches = flatten.matchwise(raw)
             new_deliveries = flatten.composite_delivery_key(

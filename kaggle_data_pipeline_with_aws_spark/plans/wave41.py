@@ -182,7 +182,7 @@ def _base_cte() -> str:
     )"""
 
 
-_DM_VERSION = "v3"  # v3: + path section segment (round 8)
+_DM_VERSION = "v4"  # v3: + path section segment; v4: transaction-logged table
 
 
 def _domain_map_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

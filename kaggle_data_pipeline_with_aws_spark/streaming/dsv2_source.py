@@ -422,11 +422,9 @@ def register(spark) -> bool:
     """Idempotently register the source; False when the runtime lacks
     the python DataSource API (callers fall back to the driver-side
     ``TxnLogStream`` tailer — same batch semantics, proven equal by
-    s16's fallback arm)."""
+    s16's fallback arm). On a runtime that has the API, a registration
+    failure raises."""
     if not HAVE_DSV2:
         return False
-    try:
-        spark.dataSource.register(TxnLogDataSource)
-    except Exception:
-        return False
+    spark.dataSource.register(TxnLogDataSource)
     return True

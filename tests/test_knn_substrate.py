@@ -12,6 +12,7 @@ from kaggle_data_pipeline_with_aws_spark.operators import (
     knn_substrate,
     substrate_store,
 )
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 from kaggle_data_pipeline_with_aws_spark.plans import registry
 from kaggle_data_pipeline_with_aws_spark.sources.readers import load_table
 
@@ -19,9 +20,14 @@ registry.load_all()
 SF = "/root/testdata/sf0.001"
 
 
+def _edges_path(spark, sf: str = SF) -> str:
+    return substrate_store.artifact_path(
+        spark, "knn_edges", knn_substrate._VERSION, sf
+    )
+
+
 def _fresh_artifact(spark):
-    path = knn_substrate.edges_artifact_path(SF)
-    substrate_store._MEMO.discard(path)
+    path = _edges_path(spark)
     shutil.rmtree(path, ignore_errors=True)
     return path
 
@@ -43,63 +49,27 @@ def test_substrate_matches_direct_plan(spark):
 
 
 def test_substrate_builds_once(spark):
-    """Second call reads the published artifact — no rebuild."""
+    """Later calls read the published table — no second commit."""
     path = _fresh_artifact(spark)
     knn_substrate.mutual_knn_edges(spark, SF).count()
-    marker = os.path.join(path, "_SUCCESS")
-    assert os.path.exists(marker)
-    mtime = os.path.getmtime(marker)
-    # second call: memo hit, artifact untouched
+    table = VersionedTable(spark, path)
+    assert table.current_version() == 0
     knn_substrate.mutual_knn_edges(spark, SF).count()
-    assert os.path.getmtime(marker) == mtime
-    # even with the process memo cleared (a NEW process), the artifact
-    # is reused, not rebuilt
-    substrate_store._MEMO.discard(path)
-    knn_substrate.mutual_knn_edges(spark, SF).count()
-    assert os.path.getmtime(marker) == mtime
+    assert table.current_version() == 0
+    assert len(os.listdir(os.path.join(path, "data"))) == 1
 
 
 def test_substrate_artifact_is_version_and_dataset_keyed(spark):
-    p1 = knn_substrate.edges_artifact_path("/root/testdata/sf0.001")
-    p2 = knn_substrate.edges_artifact_path("/root/testdata/sf0.01")
+    p1 = _edges_path(spark, SF)
+    p2 = _edges_path(spark, os.path.join(os.path.dirname(SF), "sf0.01"))
     assert p1 != p2
     assert knn_substrate._VERSION in os.path.basename(p1)
 
 
-def test_unwritable_store_falls_back_to_direct_plan(spark, monkeypatch):
-    """If the artifact can't be written, the reader serves the direct
-    deterministic plan — correctness never depends on the cache."""
-    _fresh_artifact(spark)
-
-    orig = knn_substrate.build_edges_plan
-    calls = {"n": 0}
-
-    def counting(embs):
-        calls["n"] += 1
-        df = orig(embs)
-
-        class _W:
-            def __getattr__(self, item):
-                return getattr(df, item)
-
-            @property
-            def write(self):
-                raise OSError("read-only store")
-
-        return _W() if calls["n"] == 1 else df
-
-    monkeypatch.setattr(knn_substrate, "build_edges_plan", counting)
-    df = knn_substrate.mutual_knn_edges(spark, SF)
-    assert df.count() > 0
-    assert calls["n"] == 2  # write attempt failed -> direct plan served
-    # and the failure was not memoized as a published artifact
-    assert knn_substrate.edges_artifact_path(SF) not in substrate_store._MEMO
-
-
 def test_corrupt_artifact_is_rebuilt(spark):
-    """A directory without _SUCCESS (crashed writer) is replaced."""
+    """A directory with no committed log entry (a builder that died
+    before its commit) is an empty table: the next call publishes."""
     path = _fresh_artifact(spark)
-    os.makedirs(path, exist_ok=True)  # corrupt: exists, no _SUCCESS
-    df = knn_substrate.mutual_knn_edges(spark, SF)
-    assert df.count() > 0
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    os.makedirs(path)
+    assert knn_substrate.mutual_knn_edges(spark, SF).count() > 0
+    assert VersionedTable(spark, path).current_version() == 0

@@ -1,9 +1,7 @@
-"""Substrate-store version GC (round-6 verdict #3): superseded
-artifact versions are pruned keep-latest-N per (family, dataset
-basename) behind a grace window, with the same race discipline as the
-publish path — the active artifact and other datasets' artifacts are
-never touched, young entries get a grace window, foreign names are
-left alone."""
+"""Substrate-store version GC: superseded artifact tables are pruned
+keep-latest-N per (family, dataset basename) behind a grace window —
+the active table and other datasets' tables are never touched, young
+entries get a grace window, foreign names are left alone."""
 
 from __future__ import annotations
 
@@ -16,6 +14,7 @@ from kaggle_data_pipeline_with_aws_spark.operators import (
     substrate_store,
     text_substrate,
 )
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,20 +23,16 @@ SF = "/root/testdata/sf0.001"
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "substrate")
     monkeypatch.setenv("SPARK_GRAFT_SUBSTRATE_ROOT", root)
-    substrate_store._MEMO.clear()
-    yield root
-    substrate_store._MEMO.clear()
+    return root
 
 
 def _publish(spark, fam_dir: str, name: str, age_sec: float = 0.0) -> str:
-    """Drop a fake published artifact (parquet-ish dir with _SUCCESS)
-    and optionally back-date its mtime."""
+    """Drop a fake published table (a one-entry log) and optionally
+    back-date its mtime."""
     path = os.path.join(fam_dir, name)
-    os.makedirs(path)
-    with open(os.path.join(path, "_SUCCESS"), "w"):
-        pass
-    with open(os.path.join(path, "part-00000.parquet"), "w") as f:
-        f.write("x")
+    os.makedirs(os.path.join(path, "_txn"))
+    with open(os.path.join(path, "_txn", "00000000.json"), "w") as f:
+        f.write("{}")
     if age_sec:
         old = time.time() - age_sec
         os.utime(path, (old, old))
@@ -110,114 +105,12 @@ def test_prune_groups_by_dataset_basename(spark, store_root):
     assert not os.path.exists(a)  # same group as active, over budget
 
 
-def test_prune_collects_stale_tmp_and_crashed_writers(spark, store_root):
-    fam = os.path.join(store_root, "fam")
-    os.makedirs(fam)
-    tmp = os.path.join(fam, "v1-sf0.001-aaaaaaaaaa.tmp-123-deadbeef")
-    os.makedirs(tmp)
-    crashed = os.path.join(fam, "v1-sf0.001-bbbbbbbbbb")
-    os.makedirs(crashed)  # no _SUCCESS
-    for p in (tmp, crashed):
-        old = time.time() - 7200
-        os.utime(p, (old, old))
-    fresh_tmp = os.path.join(fam, "v1-sf0.001-cccccccccc.tmp-456-cafebabe")
-    os.makedirs(fresh_tmp)  # in-flight builder: young, must survive
-    substrate_store.prune_superseded(
-        spark, "fam", keep=2, min_age_ms=3_600_000
-    )
-    assert not os.path.exists(tmp)
-    assert not os.path.exists(crashed)
-    assert os.path.exists(fresh_tmp)
-
-
 def test_prune_leaves_foreign_names_alone(spark, store_root):
     fam = os.path.join(store_root, "fam")
     os.makedirs(fam)
     foreign = _publish(spark, fam, "some_other_layout", age_sec=7200)
     substrate_store.prune_superseded(spark, "fam", keep=1, min_age_ms=0)
     assert os.path.exists(foreign)
-
-
-def test_prune_leaves_foreign_names_without_success_alone(
-    spark, store_root
-):
-    """Round-7 ADVICE: the crashed-writer branch must NOT collect an
-    old entry the store never published just because it lacks
-    _SUCCESS — deletion is gated on the name parsing as store-owned
-    (directly, or as the stem of a builder tmp dir)."""
-    fam = os.path.join(store_root, "fam")
-    os.makedirs(fam)
-    old = time.time() - 7200
-    foreign_dir = os.path.join(fam, "user_scratch_dir")  # no _SUCCESS
-    os.makedirs(foreign_dir)
-    os.utime(foreign_dir, (old, old))
-    foreign_file = os.path.join(fam, "notes.txt")  # plain file
-    with open(foreign_file, "w") as f:
-        f.write("keep me")
-    os.utime(foreign_file, (old, old))
-    foreign_tmp = os.path.join(fam, "user_scratch.tmp-1-abc")
-    os.makedirs(foreign_tmp)  # tmp-suffixed but stem not store layout
-    os.utime(foreign_tmp, (old, old))
-    owned_crashed = os.path.join(fam, "v1-sf0.001-aaaaaaaaaa")
-    os.makedirs(owned_crashed)  # store-owned, no _SUCCESS: collected
-    os.utime(owned_crashed, (old, old))
-    deleted = substrate_store.prune_superseded(
-        spark, "fam", keep=1, min_age_ms=3_600_000
-    )
-    assert os.path.exists(foreign_dir)
-    assert os.path.exists(foreign_file)
-    assert os.path.exists(foreign_tmp)
-    assert not os.path.exists(owned_crashed)
-    assert deleted == [owned_crashed]
-
-
-def test_memoized_read_survives_peer_gc(spark, store_root):
-    """Round-7 ADVICE (medium): after a peer process prunes an
-    artifact this process has memoized, the next materialize_once
-    call must rebuild (or degrade) instead of raising on the deleted
-    path."""
-    import shutil
-
-    calls = {"n": 0}
-
-    def plan():
-        calls["n"] += 1
-        return spark.range(5).withColumnRenamed("id", "v")
-
-    df1 = substrate_store.materialize_once(
-        spark, "memo_fam", "v1", SF, plan
-    )
-    assert df1.count() == 5
-    path = substrate_store.artifact_path("memo_fam", "v1", SF, spark)
-    assert path in substrate_store._MEMO
-    # simulate a peer's prune_superseded removing the artifact
-    shutil.rmtree(path)
-    df2 = substrate_store.materialize_once(
-        spark, "memo_fam", "v1", SF, plan
-    )
-    assert df2.count() == 5, "memoized path not recovered after peer GC"
-    assert os.path.exists(os.path.join(path, "_SUCCESS")), "not rebuilt"
-
-
-def test_fingerprint_memo_expires(monkeypatch, tmp_path):
-    """Round-7 ADVICE: _FPRINT_MEMO entries expire, so an in-place
-    dataset regeneration is observed within a process (after the TTL)
-    instead of serving the pre-regeneration token forever."""
-    ds = tmp_path / "ds"
-    ds.mkdir()
-    (ds / "a.parquet").write_text("one")
-    substrate_store._FPRINT_MEMO.clear()
-    fp1 = substrate_store._dataset_fingerprint(None, str(ds))
-    (ds / "b.parquet").write_text("two")  # in-place regeneration
-    # memo still fresh: same digest served
-    assert substrate_store._dataset_fingerprint(None, str(ds)) == fp1
-    # force expiry
-    key = str(ds)
-    digest, _exp = substrate_store._FPRINT_MEMO[key]
-    substrate_store._FPRINT_MEMO[key] = (digest, 0.0)
-    fp2 = substrate_store._dataset_fingerprint(None, str(ds))
-    assert fp2 != fp1, "regenerated dataset not observed after TTL"
-    substrate_store._FPRINT_MEMO.clear()
 
 
 def test_prune_missing_family_is_noop(spark, store_root):
@@ -237,9 +130,9 @@ def test_materialize_once_prunes_superseded_versions(spark, store_root):
     assert n > 0
     assert not os.path.exists(stale), "superseded version not collected"
     current = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
+        spark, "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
     )
-    assert os.path.exists(os.path.join(current, "_SUCCESS"))
+    assert VersionedTable(spark, current).current_version() == 0
 
 
 def test_prune_never_deletes_active_even_when_over_budget(spark, store_root):

@@ -1,7 +1,7 @@
-"""Shared shingle/MinHash-signature substrate (round-6 directive #4)
-plus the generic store's cluster-shape guarantees (directive #6):
-configurable root URI, cross-dataset isolation, concurrent-builder
-race, crashed-writer rebuild, unusable-store fallback."""
+"""Shared shingle/MinHash-signature substrate plus the generic store's
+cluster-shape guarantees: configurable root URI, cross-dataset
+isolation, concurrent-builder race, uncommitted-writer invisibility,
+and an unusable root raising instead of falling back."""
 
 from __future__ import annotations
 
@@ -10,12 +10,14 @@ import shutil
 import threading
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from kaggle_data_pipeline_with_aws_spark.operators import (
     dedup,
     substrate_store,
     text_substrate,
 )
+from kaggle_data_pipeline_with_aws_spark.operators.txnlog import VersionedTable
 from kaggle_data_pipeline_with_aws_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -25,15 +27,21 @@ SF = "/root/testdata/sf0.001"
 def store_root(tmp_path, monkeypatch):
     root = str(tmp_path / "substrate")
     monkeypatch.setenv("SPARK_GRAFT_SUBSTRATE_ROOT", root)
-    # the memo caches (root-inclusive) published paths; keep tests
-    # hermetic across fixtures
-    substrate_store._MEMO.clear()
-    yield root
-    substrate_store._MEMO.clear()
+    return root
 
 
 def _rows(df):
     return {tuple(r) for r in df.collect()}
+
+
+def _shingles_path(spark, sf: str) -> str:
+    return substrate_store.artifact_path(
+        spark, "ranked_shingles", text_substrate._SHINGLE_VERSION, sf
+    )
+
+
+def _commit_dirs(path: str) -> list[str]:
+    return os.listdir(os.path.join(path, "data"))
 
 
 # ---------------------------------------------------------------------------
@@ -96,32 +104,22 @@ def test_consumer_plan_reads_artifact_not_window(spark, store_root):
 def test_store_root_env_var_and_file_uri(spark, tmp_path, monkeypatch):
     """The root is any Hadoop-FS URI: a plain path and an explicit
     file:// URI both publish and serve."""
-    substrate_store._MEMO.clear()
     plain = str(tmp_path / "plain_root")
     monkeypatch.setenv("SPARK_GRAFT_SUBSTRATE_ROOT", plain)
     n1 = text_substrate.ranked_shingles(spark, SF).count()
-    assert os.path.exists(
-        os.path.join(
-            substrate_store.artifact_path(
-                "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
-            ),
-            "_SUCCESS",
-        )
-    )
+    table = VersionedTable(spark, _shingles_path(spark, SF))
+    assert table.current_version() == 0
 
-    substrate_store._MEMO.clear()
     uri = "file://" + str(tmp_path / "uri_root")
     monkeypatch.setenv("SPARK_GRAFT_SUBSTRATE_ROOT", uri)
-    path = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
-    )
+    path = _shingles_path(spark, SF)
     assert path.startswith("file://")
     n2 = text_substrate.ranked_shingles(spark, SF).count()
     assert n1 == n2 > 0
+    assert VersionedTable(spark, path).current_version() == 0
     assert os.path.exists(
         os.path.join(str(tmp_path / "uri_root"), "ranked_shingles")
     )
-    substrate_store._MEMO.clear()
 
 
 def test_concurrent_builders_different_datasets_never_cross(
@@ -137,12 +135,8 @@ def test_concurrent_builders_different_datasets_never_cross(
         os.path.join(SF, "documents.parquet"),
         str(other / "documents.parquet"),
     )
-    p1 = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
-    )
-    p2 = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, str(other)
-    )
+    p1 = _shingles_path(spark, SF)
+    p2 = _shingles_path(spark, str(other))
     assert p1 != p2
 
     results: dict[str, int] = {}
@@ -160,17 +154,20 @@ def test_concurrent_builders_different_datasets_never_cross(
     t1.join(), t2.join()
     assert not errs
     assert results["a"] == results["b"] > 0  # same bytes, two artifacts
-    assert os.path.exists(os.path.join(p1, "_SUCCESS"))
-    assert os.path.exists(os.path.join(p2, "_SUCCESS"))
+    for p in (p1, p2):
+        assert VersionedTable(spark, p).current_version() == 0
+        assert len(_commit_dirs(p)) == 1
     fam = os.path.join(store_root, "ranked_shingles")
     assert sorted(os.listdir(fam)) == sorted(
         [os.path.basename(p1), os.path.basename(p2)]
-    ), "stray temp/cross-contaminated entries in the store"
+    ), "cross-contaminated entries in the store"
 
 
 def test_concurrent_builders_same_dataset_one_winner(spark, store_root):
     """Two racing builders for the SAME artifact: both serve identical
-    results, exactly one published artifact remains, no temp litter."""
+    results, and the table holds exactly one committed version backed
+    by one commit directory (the loser skips its commit and reclaims
+    its files)."""
     results: list[int] = []
     errs: list[Exception] = []
 
@@ -186,12 +183,10 @@ def test_concurrent_builders_same_dataset_one_winner(spark, store_root):
     assert not errs
     assert len(set(results)) == 1 and results[0] > 0
     fam = os.path.join(store_root, "ranked_shingles")
-    entries = os.listdir(fam)
-    assert len(entries) == 1 and ".tmp-" not in entries[0]
-    art = os.path.join(fam, entries[0])
-    assert os.path.exists(os.path.join(art, "_SUCCESS"))
-    # no stray subdirectory from the rename race landed inside
-    assert not [e for e in os.listdir(art) if ".tmp-" in e]
+    assert len(os.listdir(fam)) == 1
+    path = _shingles_path(spark, SF)
+    assert VersionedTable(spark, path).current_version() == 0
+    assert len(_commit_dirs(path)) == 1
 
 
 def test_in_place_dataset_regeneration_changes_the_artifact(
@@ -201,64 +196,51 @@ def test_in_place_dataset_regeneration_changes_the_artifact(
     artifact: the token hashes the dataset's listing fingerprint
     (name/size/mtime), so the rewritten dataset resolves to a new
     artifact path and rebuilds."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     ds = tmp_path / "regen_sf"
     ds.mkdir()
     target = str(ds / "documents.parquet")
     shutil.copy(os.path.join(SF, "documents.parquet"), target)
-    p1 = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, str(ds)
-    )
+    p1 = _shingles_path(spark, str(ds))
     n1 = text_substrate.ranked_shingles(spark, str(ds)).count()
-    assert os.path.exists(os.path.join(p1, "_SUCCESS")) and n1 > 0
+    assert VersionedTable(spark, p1).current_version() == 0 and n1 > 0
 
     # regenerate in place: half the corpus, same file name
     tbl = pq.read_table(target)
     pq.write_table(tbl.slice(0, tbl.num_rows // 2), target)
-    # fingerprints are computed once per process; a NEW process (the
-    # real regeneration scenario) starts empty — model that here
-    substrate_store._FPRINT_MEMO.clear()
-    substrate_store._MEMO.clear()
 
-    p2 = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, str(ds)
-    )
+    p2 = _shingles_path(spark, str(ds))
     assert p2 != p1, "regenerated dataset resolved to the stale artifact"
     n2 = text_substrate.ranked_shingles(spark, str(ds)).count()
     assert 0 < n2 < n1  # rebuilt from the smaller corpus
-    assert os.path.exists(os.path.join(p2, "_SUCCESS"))
-    del pa  # (imported for the parquet round-trip only)
+    assert VersionedTable(spark, p2).current_version() == 0
 
 
 def test_crashed_writer_is_rebuilt(spark, store_root):
-    path = substrate_store.artifact_path(
-        "ranked_shingles", text_substrate._SHINGLE_VERSION, SF
-    )
-    os.makedirs(path)  # a directory without _SUCCESS = crashed writer
-    with open(os.path.join(path, "part-junk.parquet"), "w") as f:
+    """A builder that died after writing data files but before its log
+    entry left nothing a reader can see: the next call publishes."""
+    path = _shingles_path(spark, SF)
+    junk = os.path.join(path, "data", "c-crashed")
+    os.makedirs(junk)
+    with open(os.path.join(junk, "part-junk.parquet"), "w") as f:
         f.write("not parquet")
-    n = text_substrate.ranked_shingles(spark, SF).count()
-    assert n > 0
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(path, "part-junk.parquet"))
+    docs = load_table(spark, SF, "documents")
+    want = text_substrate.ranked_shingles_plan(docs).count()
+    assert text_substrate.ranked_shingles(spark, SF).count() == want > 0
+    assert VersionedTable(spark, path).current_version() == 0
 
 
-def test_unusable_store_falls_back_to_direct_plan(spark, monkeypatch, tmp_path):
-    """Root under a regular FILE: every mkdir/write fails; the consumer
-    must still produce the correct result from the direct plan."""
-    substrate_store._MEMO.clear()
+def test_unusable_store_raises(spark, monkeypatch, tmp_path):
+    """Root under a regular FILE: the table cannot be created, and the
+    consumer fails loudly instead of serving an uncached plan."""
     blocker = tmp_path / "not_a_dir"
     blocker.write_text("file, not dir")
     monkeypatch.setenv(
         "SPARK_GRAFT_SUBSTRATE_ROOT", str(blocker / "unreachable")
     )
-    docs = load_table(spark, SF, "documents")
-    want = _rows(dedup.ngram_jaccard_pairs(docs, threshold=0.8))
-    got = _rows(text_substrate.jaccard_pairs(spark, SF, threshold=0.8))
-    assert got == want and got
-    substrate_store._MEMO.clear()
+    with pytest.raises(Py4JJavaError):
+        text_substrate.jaccard_pairs(spark, SF, threshold=0.8)
 
 
 def test_lsh_components_match_standalone(spark, store_root):
