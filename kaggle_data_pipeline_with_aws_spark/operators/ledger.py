@@ -9,13 +9,18 @@ per-file boolean flags are upserted after each extraction branch
 a streaming-watermark property.
 
 Spark realization: a ``VersionedTable`` (operators/txnlog.py) for the
-state, a left-anti join for detection, and one append commit per cycle
-for the upsert. Commits publish atomically, so a crash at any point
-leaves either the whole cycle's ledger rows or none of them.
+state, a driver-side set difference for detection, and one append
+commit per cycle for the upsert. Commits publish atomically, so a crash
+at any point leaves either the whole cycle's ledger rows or none of
+them.
 
-Scale: the ledger has one row per *file* — millions of rows at 100 TB,
-comfortably broadcastable; the anti-join broadcasts the ledger, never
-shuffles the candidate set.
+Scale: the ledger has one row per *file* — millions of rows at 100 TB.
+Detection is a driver-side set difference: the ledger's ``file_name``
+column, collected in one job, is subtracted from the landing listing
+the driver already holds. A broadcast anti-join would collect the same
+column to the driver. The upsert's rows are a one-partition literal
+frame built in the JVM, so each cycle adds one small ledger file and
+starts no Python worker.
 """
 
 from __future__ import annotations
@@ -45,22 +50,15 @@ def read_ledger(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def detect_new_files(
-    candidates: DataFrame, ledger: DataFrame, limit: int | None = None
-) -> DataFrame:
-    """P5/J2/P9: candidates not yet in the ledger, oldest-name-first,
-    capped at ``limit`` per cycle (reference THRESHOLD=10,
-    ``download...py:115``).
-
-    ``candidates`` needs a ``file_name`` column. Left-anti join against
-    the broadcast ledger reproduces the set-membership check without
-    collecting anything to the driver.
-    """
-    fresh = candidates.join(
-        F.broadcast(ledger.select("file_name")), "file_name", "left_anti"
-    )
-    if limit is not None:
-        fresh = fresh.orderBy("file_name").limit(limit)
-    return fresh
+    candidates: list[str], ledger: DataFrame, limit: int | None = None
+) -> list[str]:
+    """P5/J2/P9: candidate file names not yet in the ledger,
+    oldest-name-first, capped at ``limit`` per cycle (reference
+    THRESHOLD=10, ``download...py:115``) — the reference's
+    set-membership check, with the ledger's names collected in one
+    job."""
+    seen = {r[0] for r in ledger.select("file_name").collect()}
+    return sorted(set(candidates) - seen)[:limit]
 
 
 def merge_upsert(
@@ -119,14 +117,17 @@ def merge_upsert(
 
 
 def upsert_status(
-    spark: SparkSession, state_dir: str, file_names: DataFrame
+    spark: SparkSession, state_dir: str, file_names: list[str]
 ) -> None:
     """K4/T7: mark ``file_names`` as extracted by both branches, in one
-    append commit. The caller passes only names the ledger lacks
-    (``detect_new_files``) and commits after both silver tables, so a
-    file is ledgered once, and only when its rows are in silver."""
+    append commit of one file. The caller passes only names the ledger
+    lacks (``detect_new_files``) and commits after both silver tables,
+    so a file is ledgered once, and only when its rows are in silver."""
+    rows = spark.range(1, numPartitions=1).select(
+        F.explode(F.array(*[F.lit(n) for n in file_names])).alias("file_name")
+    )
     _ledger_table(spark, state_dir).commit(
-        file_names.select(
+        rows.select(
             "file_name",
             F.lit(True).alias(MATCHWISE_FLAG),
             F.lit(True).alias(DELIVERYWISE_FLAG),

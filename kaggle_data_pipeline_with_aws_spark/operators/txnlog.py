@@ -69,9 +69,12 @@ retry, so an append racing a merge is either merged in or the merge
 fails loudly — never silently clobbered.
 
 Scale notes: the log is metadata (KB per commit — file paths and
-counts, never data); snapshot reads hand Spark an explicit file list,
-so partition pruning / predicate pushdown on the scan work unchanged
-(a table with deletion vectors additionally anti-joins the scan
+counts, never data); snapshot reads hand Spark an explicit file list
+AND the schema the log entry records, so planning a read opens no
+parquet footer and runs no schema-inference job (only
+``snapshot(merge_schema=True)`` infers, because it must union the
+footers); partition pruning / predicate pushdown on the scan work
+unchanged (a table with deletion vectors additionally anti-joins the scan
 against the broadcast DV position set — ``commit_delete_where``);
 ``read_incremental`` turns an append-only table into a CDC source
 reading ONLY the files added in the version window (the streaming
@@ -84,7 +87,9 @@ file stats) at a version — Delta's ``_last_checkpoint`` idea — and
 every read starts from the latest checkpoint at-or-below its version,
 so a 10⁵-commit table reads like a 10-commit one (q122 pins both the
 replay-plan arithmetic and value identity across the checkpoint
-boundary).
+boundary). A read lists ``_txn`` once and replays the checkpoint plus
+tail once (``_replay``) for its live set, schema, stats, bloom and
+deletion-vector pointers together.
 """
 
 from __future__ import annotations
@@ -93,6 +98,7 @@ import hashlib
 import json
 import re
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -145,6 +151,19 @@ def _bounds_comparable(bound, lo_rec, hi_rec) -> bool:
     if isinstance(bound, str):
         return isinstance(lo_rec, str) and isinstance(hi_rec, str)
     return False
+
+
+@dataclass
+class _State:
+    """The table at one version, from one replay of the checkpoint at
+    or below it plus the log entries after it."""
+
+    live: list[str]  # sorted
+    schema: StructType | None  # None for an empty log
+    stats: dict[str, dict]
+    bloom: dict[str, dict]
+    dv: dict[str, dict]
+    txn: dict[str, int]
 
 
 class CommitConflictError(RuntimeError):
@@ -211,29 +230,23 @@ class VersionedTable:
         out.write(bytearray(text.encode("utf-8")))
         out.close()
 
-    def _entry_names(self) -> list[str]:
-        """Committed entry file names (``NNNNNNNN.json``), sorted.
-        Listing only — no content reads."""
+    def _list_log(self) -> tuple[list[str], list[int]]:
+        """(committed entry file names ``NNNNNNNN.json``, checkpoint
+        versions), both sorted, from ONE listing of ``_txn`` — no
+        content reads."""
         if not self._fs.exists(self._P(self.log_dir)):
-            return []
-        return sorted(
-            name
-            for st in self._fs.listStatus(self._P(self.log_dir))
-            if _ENTRY_RE.match(name := st.getPath().getName())
-        )
+            return [], []
+        names: list[str] = []
+        checkpoints: list[int] = []
+        for st in self._fs.listStatus(self._P(self.log_dir)):
+            name = st.getPath().getName()
+            if _ENTRY_RE.match(name):
+                names.append(name)
+            elif _CHECKPOINT_RE.match(name):
+                checkpoints.append(int(name[4:12]))
+        return sorted(names), sorted(checkpoints)
 
     # -- checkpoints -----------------------------------------------------
-    def _checkpoint_versions(self) -> list[int]:
-        """Versions with a published checkpoint, ascending (listing
-        only)."""
-        if not self._fs.exists(self._P(self.log_dir)):
-            return []
-        return sorted(
-            int(name[4:12])
-            for st in self._fs.listStatus(self._P(self.log_dir))
-            if _CHECKPOINT_RE.match(name := st.getPath().getName())
-        )
-
     def checkpoint(self, version: int | None = None) -> int:
         """Materialize the replayed state at ``version`` (default:
         head) into ``_txn/chk-NNNNNNNN.json`` — Delta's
@@ -249,14 +262,15 @@ class VersionedTable:
         path = f"{self.log_dir}/chk-{v:08d}.json"
         if self._fs.exists(self._P(path)):
             return v
+        st = self._replay(v)
         state = {
             "version": v,
-            "live": self.live_files(v),
-            "schema": self._schema_at(v).json(),
-            "stats": self.file_stats(v),
-            "bloom": self.file_blooms(v),
-            "dv": self.file_dvs(v),
-            "txn": self.txn_versions(v),
+            "live": st.live,
+            "schema": st.schema.json(),
+            "stats": st.stats,
+            "bloom": st.bloom,
+            "dv": st.dv,
+            "txn": st.txn,
         }
         tmp = f"{self.log_dir}/.tmp-{uuid.uuid4().hex}"
         self._write_small(tmp, json.dumps(state))
@@ -271,19 +285,23 @@ class VersionedTable:
     def _read_checkpoint(self, v: int) -> dict:
         return json.loads(self._read_small(f"{self.log_dir}/chk-{v:08d}.json"))
 
+    def _read_plan(self, version: int | None) -> tuple[int | None, int]:
+        """(checkpoint version at or below the read or None, version
+        read) for a read at ``version``, from one listing. Versions
+        past the head clamp to it."""
+        names, checkpoints = self._list_log()
+        head = int(names[-1][:8]) if names else -1
+        if version is not None:
+            head = min(version, head)
+        base = max((c for c in checkpoints if c <= head), default=None)
+        return base, head
+
     def replay_plan(self, version: int | None = None) -> tuple[int | None, int]:
         """(checkpoint version used, tail entries replayed) for a read
         at ``version`` — the observability hook q122 pins. None = full
         replay (no checkpoint at or below the requested version).
-        Versions past the head clamp to it, matching what the actual
-        read (``_base_and_tail``) does."""
-        head = self.current_version()
-        if version is not None:
-            head = min(version, head)
-        base = max(
-            (c for c in self._checkpoint_versions() if c <= head),
-            default=None,
-        )
+        Versions past the head clamp to it, as the read does."""
+        base, head = self._read_plan(version)
         return base, head - (base if base is not None else -1)
 
     def _tail_entries(self, after: int, through: int) -> list[dict]:
@@ -300,7 +318,7 @@ class VersionedTable:
         therefore means external corruption and raises loudly rather
         than silently truncating history."""
         out = []
-        for n in self._entry_names():
+        for n in self._list_log()[0]:
             path = f"{self.log_dir}/{n}"
             text = self._read_small(path)
             try:
@@ -318,7 +336,7 @@ class VersionedTable:
         """Latest committed version, -1 for an empty table — resolved
         from the listing alone (no entry reads), so pollers tail the
         log cheaply."""
-        names = self._entry_names()
+        names = self._list_log()[0]
         return int(names[-1][:8]) if names else -1
 
     # -- commit --------------------------------------------------------
@@ -449,9 +467,7 @@ class VersionedTable:
                 ]
             by_file = {
                 r["f"]: r
-                for r in self.spark.read.parquet(
-                    *[f"{self.root}/{a}" for a in added]
-                )
+                for r in self._read(added, df.schema)
                 .groupBy(F.input_file_name().alias("f"))
                 .agg(*aggs)
                 .collect()
@@ -492,9 +508,7 @@ class VersionedTable:
         if bloom_col and added:
             from .text import portable_hash
 
-            back = self.spark.read.parquet(
-                *[f"{self.root}/{a}" for a in added]
-            ).select(
+            back = self._read(added, df.schema).select(
                 F.input_file_name().alias("f"),
                 F.col(bloom_col).cast("string").alias("v"),
             )
@@ -595,13 +609,7 @@ class VersionedTable:
         """Writer-app → highest committed ``txn_version`` at
         ``version`` (checkpoint-based like ``file_stats``) — the
         idempotence high-water marks transactional writers check."""
-        ck, tail = self._base_and_tail(version)
-        txns: dict[str, int] = dict(ck.get("txn", {})) if ck else {}
-        for e in tail:
-            for app, v in e.get("txn", {}).items():
-                if txns.get(app, -1) < v:
-                    txns[app] = v
-        return txns
+        return self._replay(version).txn
 
     def last_txn_version(self, app: str) -> int:
         """Highest ``txn_version`` committed by ``app`` (-1 when the
@@ -654,78 +662,104 @@ class VersionedTable:
         )
 
     # -- reads ---------------------------------------------------------
-    def _base_and_tail(
-        self, version: int | None
-    ) -> tuple[dict | None, list[dict]]:
-        """(checkpoint state or None, tail entries after it) for a read
-        at ``version`` — the O(tail) read path. Versions past the head
-        clamp to the head (matching the replay semantics of the
-        pre-checkpoint implementation)."""
-        head = self.current_version()
-        if version is not None:
-            head = min(version, head)
-        if head < 0:
-            return None, []
-        base = max(
-            (c for c in self._checkpoint_versions() if c <= head),
-            default=None,
+    def _replay(self, version: int | None) -> _State:
+        """The table's state at ``version`` (default: head): the latest
+        checkpoint at or below it, then the add/remove actions of the
+        tail entries after it, applied in order — the O(tail) read
+        path."""
+        base, head = self._read_plan(version)
+        ck = self._read_checkpoint(base) if base is not None else {}
+        tail = self._tail_entries(base if base is not None else -1, head)
+        live: set[str] = set(ck.get("live", ()))
+        stats: dict[str, dict] = dict(ck.get("stats", {}))
+        bloom: dict[str, dict] = dict(ck.get("bloom", {}))
+        dv: dict[str, dict] = dict(ck.get("dv", {}))
+        txn: dict[str, int] = dict(ck.get("txn", {}))
+        for e in tail:
+            live.difference_update(e["remove"])
+            live.update(e["add"])
+            for rel in e["remove"]:
+                stats.pop(rel, None)
+                bloom.pop(rel, None)
+                dv.pop(rel, None)
+            est, ebl = e.get("stats", {}), e.get("bloom", {})
+            for rel in e["add"]:
+                stats[rel] = est.get(rel, {})
+                if rel in ebl:
+                    bloom[rel] = ebl[rel]
+                else:
+                    bloom.pop(rel, None)
+            # a delete's per-file pointer REPLACES the file's previous
+            # one (its sidecar carries the merged position set)
+            dv.update(e.get("dv", {}))
+            for app, v in e.get("txn", {}).items():
+                if txn.get(app, -1) < v:
+                    txn[app] = v
+        schema_json = tail[-1]["schema"] if tail else ck.get("schema")
+        return _State(
+            live=sorted(live),
+            schema=(
+                StructType.fromJson(json.loads(schema_json))
+                if schema_json is not None
+                else None
+            ),
+            stats=stats,
+            bloom=bloom,
+            dv=dv,
+            txn=txn,
         )
-        ck = self._read_checkpoint(base) if base is not None else None
-        return ck, self._tail_entries(base if base is not None else -1, head)
 
     def live_files(self, version: int | None = None) -> list[str]:
         """Replay add/remove actions through ``version`` (default:
         head) → the live file set, sorted for determinism. Reads the
         latest checkpoint at-or-below the version plus only the tail
         entries after it."""
-        ck, tail = self._base_and_tail(version)
-        live: set[str] = set(ck["live"]) if ck else set()
-        for e in tail:
-            live.difference_update(e["remove"])
-            live.update(e["add"])
-        return sorted(live)
+        return self._replay(version).live
 
-    def _schema_at(self, version: int | None) -> StructType | None:
-        ck, tail = self._base_and_tail(version)
-        if tail:
-            return StructType.fromJson(json.loads(tail[-1]["schema"]))
-        if ck:
-            return StructType.fromJson(json.loads(ck["schema"]))
-        return None
+    def _read(
+        self,
+        files: list[str],
+        schema: StructType,
+        dvs: dict[str, dict] | None = None,
+    ) -> DataFrame:
+        """A parquet scan of ``files`` (root-relative) with ``schema``,
+        the one the log records: Spark plans it without opening a
+        footer, so no inference job runs. Rows that ``dvs`` (file →
+        deletion-vector pointer) mark dead are filtered out. No files
+        read as an empty frame of ``schema``."""
+        assert schema is not None, f"read of an empty log under {self.root!r}"
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        df = self.spark.read.schema(schema).parquet(
+            *[f"{self.root}/{f}" for f in files]
+        )
+        dvs = dvs or {}
+        return self._apply_dvs(df, {f: dvs[f] for f in files if f in dvs})
 
     def snapshot(
         self, version: int | None = None, merge_schema: bool = False
     ) -> DataFrame:
         """The table AS OF ``version`` (default: latest) — a plain
-        parquet scan of exactly the live files, so pushdown and
-        pruning behave like any parquet read. ``merge_schema`` unions
-        the live files' schemas (schema evolution: columns added by a
-        later commit read as NULL on earlier files)."""
-        files = self.live_files(version)
-        if not files:
-            schema = self._schema_at(version)
-            assert schema is not None, "snapshot of an empty log"
-            return self.spark.createDataFrame([], schema)
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return self._apply_dvs(
-            reader.parquet(*[f"{self.root}/{f}" for f in files]), version
-        )
+        parquet scan of exactly the live files, with the logged schema,
+        so pushdown and pruning behave like any parquet read and
+        planning it runs no Spark job. ``merge_schema`` instead unions
+        the live files' footer schemas (schema evolution: columns added
+        by a later commit read as NULL on earlier files)."""
+        st = self._replay(version)
+        if merge_schema and st.live:
+            return self._apply_dvs(
+                self.spark.read.option("mergeSchema", "true").parquet(
+                    *[f"{self.root}/{f}" for f in st.live]
+                ),
+                st.dv,
+            )
+        return self._read(st.live, st.schema, st.dv)
 
     def file_stats(self, version: int | None = None) -> dict[str, dict]:
         """Live-file → recorded column stats at ``version`` (files
         committed without ``stats_cols`` map to ``{}`` — unprunable).
         Checkpoint-based like ``live_files``."""
-        ck, tail = self._base_and_tail(version)
-        stats: dict[str, dict] = dict(ck["stats"]) if ck else {}
-        for e in tail:
-            for rel in e["remove"]:
-                stats.pop(rel, None)
-            est = e.get("stats", {})
-            for rel in e["add"]:
-                stats[rel] = est.get(rel, {})
-        return stats
+        return self._replay(version).stats
 
     @staticmethod
     def _dv_key_of(rel: str) -> str:
@@ -749,28 +783,16 @@ class VersionedTable:
         file's previous pointer (the sidecar it points at carries the
         merged position set); a removed file drops its DV.
         Checkpoint-based like ``file_stats``."""
-        ck, tail = self._base_and_tail(version)
-        dvs: dict[str, dict] = dict(ck.get("dv", {})) if ck else {}
-        for e in tail:
-            for rel in e["remove"]:
-                dvs.pop(rel, None)
-            for rel, meta in e.get("dv", {}).items():
-                dvs[rel] = meta
-        return dvs
+        return self._replay(version).dv
 
-    def _apply_dvs(
-        self, df: DataFrame, version: int | None
-    ) -> DataFrame:
+    def _apply_dvs(self, df: DataFrame, dvs: dict[str, dict]) -> DataFrame:
         """Filter out rows a deletion vector marks dead: one broadcast
         anti-join of the scan (keyed by file + row position, from the
-        parquet reader's ``_metadata`` columns) against the version's
-        merged DV position set. A table without DVs pays nothing (the
+        parquet reader's ``_metadata`` columns) against the merged DV
+        position set of ``dvs``. A table without DVs pays nothing (the
         plan is untouched); with DVs the join side is
         deleted-rows-sized metadata, broadcast — never a shuffle of
         the data."""
-        dvs = self.file_dvs(version)
-        if not dvs:
-            return df
         pairs: list[tuple[str, int]] = []
         for rel, meta in dvs.items():
             side = json.loads(
@@ -826,13 +848,12 @@ class VersionedTable:
         )
         for _ in range(_MAX_COMMIT_ATTEMPTS):
             base = self.current_version()
-            live = self.live_files(base)
+            st = self._replay(base)
+            live = st.live
             if not live:
                 raise ValueError("delete from an empty table")
             scan = (
-                self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in live]
-                )
+                self._read(live, st.schema)
                 .withColumn("__dv_key", self._dv_key_col())
                 .withColumn("__dv_pos", F.col("_metadata.row_index"))
             )
@@ -842,7 +863,7 @@ class VersionedTable:
                 .agg(F.collect_list("__dv_pos").alias("ps"))
                 .collect()
             )
-            existing = self.file_dvs(base)
+            existing = st.dv
             key2rel = {self._dv_key_of(rel): rel for rel in live}
             dv_map: dict[str, dict] = {}
             for r in hits:
@@ -865,7 +886,7 @@ class VersionedTable:
                     json.dumps({"positions": sorted(newps)}),
                 )
                 dv_map[rel] = {"index": side_rel, "n": len(newps)}
-            schema_json = self._schema_at(base).json()
+            schema_json = st.schema.json()
 
             def build(version: int) -> dict:
                 return {
@@ -893,18 +914,7 @@ class VersionedTable:
         """Live-file → bloom-index pointer (``{col, index}``) at
         ``version``; files committed without ``bloom_col`` are absent
         (always admitted). Checkpoint-based like ``file_stats``."""
-        ck, tail = self._base_and_tail(version)
-        blooms: dict[str, dict] = dict(ck.get("bloom", {})) if ck else {}
-        for e in tail:
-            for rel in e["remove"]:
-                blooms.pop(rel, None)
-            ebl = e.get("bloom", {})
-            for rel in e["add"]:
-                if rel in ebl:
-                    blooms[rel] = ebl[rel]
-                else:
-                    blooms.pop(rel, None)
-        return blooms
+        return self._replay(version).bloom
 
     def bloom_admitted_files(
         self, col: str, value, version: int | None = None
@@ -918,11 +928,13 @@ class VersionedTable:
         wrong answers, the exact filter finishes inside the scan. Cost:
         one small sidecar read per bloom-indexed live file (index
         bytes, never data bytes)."""
-        live = self.live_files(version)
-        blooms = self.file_blooms(version)
+        st = self._replay(version)
+        return self._bloom_admitted(st, col, value), len(st.live)
+
+    def _bloom_admitted(self, st: _State, col: str, value) -> list[str]:
         admitted: list[str] = []
-        for rel in live:
-            meta = blooms.get(rel)
+        for rel in st.live:
+            meta = st.bloom.get(rel)
             if meta is None or meta["col"] != col:
                 admitted.append(rel)
                 continue
@@ -936,7 +948,7 @@ class VersionedTable:
             }
             if probe <= posset:
                 admitted.append(rel)
-        return admitted, len(live)
+        return admitted
 
     def snapshot_bloom(
         self, col: str, value, version: int | None = None
@@ -947,19 +959,39 @@ class VersionedTable:
         filtered inside the kept files). At scale this is the
         difference between opening every file of an unclustered table
         and opening the one file holding the key."""
-        files, _total = self.bloom_admitted_files(col, value, version)
-        if not files:
-            schema = self._schema_at(version)
-            assert schema is not None, "bloom snapshot of an empty log"
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self._apply_dvs(
-                self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in files]
-                ),
-                version,
-            )
-        return df.filter(F.col(col) == F.lit(value))
+        st = self._replay(version)
+        files = self._bloom_admitted(st, col, value)
+        return self._read(files, st.schema, st.dv).filter(
+            F.col(col) == F.lit(value)
+        )
+
+    @staticmethod
+    def _pruned(stats: dict[str, dict], bounds: dict[str, tuple]) -> list[str]:
+        """Files of ``stats`` whose recorded [min, max] can intersect
+        EVERY ``col: (lo, hi)`` bound, sorted. A file WITHOUT stats for
+        a column, or whose stats do not share a total order with the
+        bound (``_bounds_comparable``), is kept for that column:
+        skipping is only legal when the log can prove non-overlap."""
+        kept: list[str] = []
+        for rel in sorted(stats):
+            for col, (lo, hi) in bounds.items():
+                rng = stats[rel].get(col)
+                if rng is None or rng[0] is None or rng[1] is None:
+                    continue
+                fmin, fmax = rng
+                if (
+                    lo is not None
+                    and _bounds_comparable(lo, fmin, fmax)
+                    and fmax < lo
+                ) or (
+                    hi is not None
+                    and _bounds_comparable(hi, fmin, fmax)
+                    and fmin > hi
+                ):
+                    break
+            else:
+                kept.append(rel)
+        return kept
 
     def pruned_files(
         self, col: str, lo, hi, version: int | None = None
@@ -973,26 +1005,7 @@ class VersionedTable:
         a total order with the recorded stats (numeric-vs-numeric,
         str-vs-str — ``_bounds_comparable``) also keeps the file: a
         cross-type comparison proves nothing (round-10 ADVICE)."""
-        stats = self.file_stats(version)
-        kept: list[str] = []
-        for rel in sorted(stats):
-            rng = stats[rel].get(col)
-            if rng is None or rng[0] is None or rng[1] is None:
-                kept.append(rel)
-                continue
-            fmin, fmax = rng
-            if (
-                lo is not None
-                and _bounds_comparable(lo, fmin, fmax)
-                and fmax < lo
-            ) or (
-                hi is not None
-                and _bounds_comparable(hi, fmin, fmax)
-                and fmin > hi
-            ):
-                continue
-            kept.append(rel)
-        return kept, len(stats)
+        return self.pruned_files_ranges({col: (lo, hi)}, version)
 
     def pruned_files_ranges(
         self, bounds: dict[str, tuple], version: int | None = None
@@ -1003,11 +1016,8 @@ class VersionedTable:
         its bound — the Delta/Iceberg compound data-skipping decision
         (per-column necessary conditions intersect). Unknown stats or
         cross-type bounds keep the file, per ``pruned_files``."""
-        kept, total = None, 0
-        for col, (lo, hi) in bounds.items():
-            files, total = self.pruned_files(col, lo, hi, version)
-            kept = set(files) if kept is None else kept & set(files)
-        return sorted(kept or ()), total
+        stats = self._replay(version).stats
+        return self._pruned(stats, bounds), len(stats)
 
     def snapshot_pruned_ranges(
         self, bounds: dict[str, tuple], version: int | None = None
@@ -1016,18 +1026,8 @@ class VersionedTable:
         ``pruned_files_ranges`` keeps, then apply every exact bound
         (stats prove necessity only; parquet row-group pushdown
         finishes inside the kept files)."""
-        files, _total = self.pruned_files_ranges(bounds, version)
-        if not files:
-            schema = self._schema_at(version)
-            assert schema is not None, "pruned snapshot of an empty log"
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self._apply_dvs(
-                self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in files]
-                ),
-                version,
-            )
+        st = self._replay(version)
+        df = self._read(self._pruned(st.stats, bounds), st.schema, st.dv)
         for col, (lo, hi) in bounds.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= lo)
@@ -1044,38 +1044,21 @@ class VersionedTable:
         parquet row-group pushdown finishes the job inside the kept
         files). At scale this is the difference between touching the
         whole table and touching the matching files' bytes."""
-        files, _total = self.pruned_files(col, lo, hi, version)
-        if not files:
-            schema = self._schema_at(version)
-            assert schema is not None, "pruned snapshot of an empty log"
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self._apply_dvs(
-                self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in files]
-                ),
-                version,
-            )
-        if lo is not None:
-            df = df.filter(F.col(col) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(col) <= hi)
-        return df
+        return self.snapshot_pruned_ranges({col: (lo, hi)}, version)
 
     def read_incremental(self, v0: int, v1: int) -> DataFrame:
         """Rows in files ADDED in versions (v0, v1] — the append-only
-        CDC fast path (reads only the delta's bytes). For commits that
-        also removed files (rewrites), pair with ``row_diff``."""
-        added: list[str] = []
-        for e in self._tail_entries(v0, min(v1, self.current_version())):
-            added.extend(e["add"])
-        if not added:
-            schema = self._schema_at(v1)
-            assert schema is not None, "incremental read of an empty log"
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(
-            *[f"{self.root}/{f}" for f in sorted(added)]
+        CDC fast path (reads only the delta's bytes), with the schema
+        at ``v1``. For commits that also removed files (rewrites), pair
+        with ``row_diff``."""
+        tail = self._tail_entries(v0, min(v1, self.current_version()))
+        added = sorted(f for e in tail for f in e["add"])
+        schema = (
+            StructType.fromJson(json.loads(tail[-1]["schema"]))
+            if tail
+            else self._replay(v1).schema
         )
+        return self._read(added, schema)
 
     def row_diff(
         self, v0: int, v1: int, keys: list[str]
@@ -1243,18 +1226,29 @@ class VersionedTable:
           read basis (readers start from it), whatever the version
           retention says.
         """
+        # DV sidecars follow VERSION retention (not file lifetime): a
+        # superseded sidecar is still the read basis of older
+        # versions, so it is deletable only once no retained version
+        # (nor the latest checkpoint) references it — the same floor
+        # data files get.
         head = self.current_version()
         keep: set[str] = set()
+        keep_dv: set[str] = set()
         for v in range(max(0, head - retain_versions + 1), head + 1):
-            keep.update(self.live_files(v))
-        cks = self._checkpoint_versions()
+            st = self._replay(v)
+            keep.update(st.live)
+            keep_dv.update(m["index"] for m in st.dv.values())
+        cks = self._list_log()[1]
         if cks:
-            keep.update(self._read_checkpoint(cks[-1])["live"])
+            ck = self._read_checkpoint(cks[-1])
+            keep.update(ck["live"])
+            keep_dv.update(m["index"] for m in ck.get("dv", {}).values())
+        entries = self.entries()
         now_ms = self._jvm.java.lang.System.currentTimeMillis()
         deleted = []
         all_files: set[str] = set()
         bloom_index: dict[str, str] = {}
-        for e in self.entries():
+        for e in entries:
             all_files.update(e["add"])
             for rel, meta in e.get("bloom", {}).items():
                 bloom_index[rel] = meta["index"]
@@ -1277,25 +1271,8 @@ class VersionedTable:
                 # the data file cleared the age floor)
                 self._fs.delete(self._P(f"{self.root}/{side}"), False)
                 deleted.append(side)
-        # DV sidecars follow VERSION retention (not file lifetime): a
-        # superseded sidecar is still the read basis of older
-        # versions, so it is deletable only once no retained version
-        # (nor the latest checkpoint) references it — the same floor
-        # data files get.
-        keep_dv: set[str] = set()
-        for v in range(max(0, head - retain_versions + 1), head + 1):
-            keep_dv.update(
-                m["index"] for m in self.file_dvs(v).values()
-            )
-        if cks:
-            keep_dv.update(
-                m["index"]
-                for m in self._read_checkpoint(cks[-1])
-                .get("dv", {})
-                .values()
-            )
         all_dv: set[str] = set()
-        for e in self.entries():
+        for e in entries:
             all_dv.update(
                 m["index"] for m in e.get("dv", {}).values()
             )

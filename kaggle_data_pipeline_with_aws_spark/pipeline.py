@@ -25,6 +25,14 @@ each published atomically, and the ledger commits last. A cycle killed
 at any point leaves its files unledgered, so the next cycle takes them
 again; the silver appends drop keys the table already holds, so the
 rerun converges to the rows an uninterrupted run would have written.
+
+Cost: the weekly cron runs each cycle in a fresh process, so a cycle
+pays for every Spark job and plan shape it launches. Detection is a
+driver-side set difference over the landing listing; the cycle builds
+no DataFrame from a Python list, so it starts no Python worker; table
+reads take their schema from the log, so they run no inference job;
+and the numbered matches are checkpointed once, then read by both CSVs
+and the version notes instead of renumbering three times.
 """
 
 from __future__ import annotations
@@ -61,15 +69,10 @@ class PipelineResult:
     n_corrupt: int = 0
 
 
-def list_candidate_files(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """S2/P4: enumerate *.json files in the landing zone as a DataFrame
-    (the reference walks the extracted zip dir, download...py:88-92)."""
-    names = [
-        f for f in sorted(os.listdir(landing_dir)) if f.endswith(".json")
-    ]
-    return spark.createDataFrame(
-        [(n,) for n in names], "file_name STRING"
-    )
+def list_candidate_files(landing_dir: str) -> list[str]:
+    """S2/P4: the *.json file names in the landing zone, sorted (the
+    reference walks the extracted zip dir, download...py:88-92)."""
+    return sorted(f for f in os.listdir(landing_dir) if f.endswith(".json"))
 
 
 def run_incremental(
@@ -83,16 +86,12 @@ def run_incremental(
     """One cycle of the weekly pipeline: detect-new → extract both tables →
     mark ledger → rematerialize the full published dataset."""
     ledger = read_ledger(spark, state_dir)
-    candidates = list_candidate_files(spark, landing_dir)
-    new_files = detect_new_files(candidates, ledger, limit=max_files_per_cycle)
-    new_names = [r["file_name"] for r in new_files.collect()]
+    new_names = detect_new_files(
+        list_candidate_files(landing_dir), ledger, limit=max_files_per_cycle
+    )
     n_corrupt = 0
 
     if new_names:
-        # The collected names, so the ledger commit does not rerun detection.
-        new_files_local = spark.createDataFrame(
-            [(n,) for n in new_names], "file_name STRING"
-        )
         paths = [os.path.join(landing_dir, n) for n in new_names]
         # T3: one scan, two consumers — cache the parsed documents so the
         # matchwise and deliverywise branches don't each re-read the
@@ -125,7 +124,7 @@ def run_incremental(
                 f"{state_dir}/silver_deliverywise",
                 ["composite_delivery_key"],
             )
-            upsert_status(spark, state_dir, new_files_local)
+            upsert_status(spark, state_dir, new_names)
         finally:
             scanned.unpersist()
 
@@ -134,7 +133,11 @@ def run_incremental(
         spark, f"{state_dir}/silver_deliverywise"
     ).snapshot()
 
-    numbered = matchwise_numbered(matches)
+    # One row per match, renumbered once: both CSVs and the caller's
+    # version notes read the checkpoint. Its blocks are freed when the
+    # result is dropped, where a .cache() would hold them until
+    # unpersisted.
+    numbered = matchwise_numbered(matches).localCheckpoint()
     published = deliverywise_published(deliveries, numbered)
     write_sorted_csv(
         numbered,

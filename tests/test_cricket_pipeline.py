@@ -170,6 +170,51 @@ def test_incremental_pipeline_and_ledger(spark, landing, tmp_path):
     assert notes["notes"].startswith("Updated till the match between ")
 
 
+def test_steady_state_cycle_cost(spark, landing, tmp_path, monkeypatch):
+    """The second cycle of ten files builds no DataFrame from Python
+    data (so it starts no Python worker), launches at most 26 Spark
+    jobs, and adds one ledger file. Snapshot reads of its three tables
+    run no job, and their logged schema is the one Spark would infer
+    from the files."""
+    from pyspark.sql import SparkSession
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    run_incremental(spark, landing, state, out, max_files_per_cycle=10)
+    sc = spark.sparkContext
+
+    def jobs_under(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def no_python_frames(*args, **kwargs):
+        raise AssertionError("the cycle built a DataFrame from Python data")
+
+    def second_cycle():
+        r = run_incremental(spark, landing, state, out, max_files_per_cycle=10)
+        return r, version_notes(r.matchwise)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_frames)
+    (result, notes), n_jobs = jobs_under("cycle-cost-second", second_cycle)
+    monkeypatch.undo()
+    assert result.n_new_files == 10 and result.matchwise.count() == 20
+    assert notes["notes"].startswith("Updated till the match between ")
+    assert n_jobs <= 26
+    ledger = VersionedTable(spark, f"{state}/file_status")
+    assert ledger.history()[-1]["n_added"] == 1
+
+    for name in ("silver_matchwise", "silver_deliverywise", "file_status"):
+        table = VersionedTable(spark, f"{state}/{name}")
+        snap, n_jobs = jobs_under(f"cycle-cost-{name}", table.snapshot)
+        assert n_jobs == 0, name
+        files = [f"{table.root}/{f}" for f in table.live_files()]
+        assert snap.schema == spark.read.parquet(*files).schema, name
+
+
 class _Crash(Exception):
     pass
 
@@ -247,8 +292,7 @@ def test_candidate_listing_filters_non_json(spark, landing, tmp_path):
     d.mkdir()
     (d / "1.json").write_text("{}")
     (d / "readme.txt").write_text("x")
-    got = [r["file_name"] for r in list_candidate_files(spark, str(d)).collect()]
-    assert got == ["1.json"]
+    assert list_candidate_files(str(d)) == ["1.json"]
 
 
 def test_corrupt_file_excluded_but_ledger_marked(spark, tmp_path):

@@ -646,6 +646,25 @@ def test_delete_where_filters_without_rewriting_files(spark):
     assert len(dvs) == 2 and all(m["n"] == 5 for m in dvs.values())
 
 
+def test_snapshot_with_dvs_runs_no_job_and_keeps_file_schema(spark):
+    """A snapshot is planned from the log alone: no footer-inference
+    job, even with a deletion vector to apply, and the logged schema
+    is the one Spark would infer from the files."""
+    vt = _dv_vt(spark)
+    vt.commit_delete_where("k % 2 = 0")
+    sc = spark.sparkContext
+    sc.setJobGroup("txnlog-snapshot-read", "snapshot read")
+    try:
+        snap = vt.snapshot()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("txnlog-snapshot-read") == []
+    files = [f"{vt.root}/{f}" for f in vt.live_files()]
+    assert snap.schema == spark.read.parquet(*files).schema
+    assert sorted(r.k for r in snap.collect()) == list(range(1, 20, 2))
+
+
 def test_delete_time_travel_sees_predelete_rows(spark):
     vt = _dv_vt(spark)
     vt.commit_delete_where("k < 15")
