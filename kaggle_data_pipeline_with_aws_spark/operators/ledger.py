@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import FILE_STATUS_SCHEMA
-from .txnlog import VersionedTable
+from .txnlog import VersionedTable, empty_frame
 
 MATCHWISE_FLAG = "matchwise_data_extraction_status"
 DELIVERYWISE_FLAG = "deliverywise_data_extraction_status"
@@ -42,10 +42,12 @@ def _ledger_table(spark: SparkSession, state_dir: str):
 
 
 def read_ledger(spark: SparkSession, state_dir: str) -> DataFrame:
-    """S5: ledger scan. Returns an empty typed frame when no state exists."""
+    """S5: ledger scan. Returns an empty typed frame when no state
+    exists; it is planned in the JVM, so a first cycle starts no Python
+    worker either."""
     table = _ledger_table(spark, state_dir)
     if table.current_version() == -1:
-        return spark.createDataFrame([], FILE_STATUS_SCHEMA)
+        return empty_frame(spark, FILE_STATUS_SCHEMA)
     return table.snapshot()
 
 

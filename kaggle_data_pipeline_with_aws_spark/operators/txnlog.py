@@ -29,24 +29,25 @@ other Hadoop FS URI, and the exact code path that runs locally runs
 against a cluster filesystem.
 
 Commit protocol (the Hadoop ``LogStore`` contract, as in Delta's OSS
-``HDFSLogStore``): the full entry is written and flushed to a HIDDEN
-temp name (``_txn/.tmp-<uuid>`` — readers never list dot-files), then
-published with ``FileContext.rename(tmp, final, Options.Rename.NONE)``
-— one atomic operation that BOTH claims the version slot (it raises
-``FileAlreadyExistsException`` when the slot is taken) and makes the
-complete entry visible. A concurrent reader therefore sees either no
-entry or the whole entry — never a zero-length or partial file — and a
-writer crash at any point leaves only an invisible temp. Multi-writer
-commits are optimistic: the loser of a slot race re-reads the log,
-recomputes its entry against the new head (overwrite removes re-resolve
-to the current live set), and retries the NEXT slot; data files are
-content-unique and immutable, so a retry never rewrites data.
+``HDFSLogStore``): every log file — entry or checkpoint — is published
+by ONE step, ``VersionedTable._publish``: the full document is written
+and flushed to a HIDDEN temp name (``_txn/.tmp-<uuid>`` — readers never
+list dot-files), then renamed with ``FileContext.rename(tmp, final,
+Options.Rename.NONE)`` — one atomic operation that BOTH claims the name
+(it raises ``FileAlreadyExistsException`` when the name is taken) and
+makes the complete document visible. A concurrent reader therefore sees
+either no entry or the whole entry — never a zero-length or partial
+file — and a writer crash at any point leaves only an invisible temp.
+Multi-writer commits are optimistic: the loser of a slot race re-reads
+the log, recomputes its entry against the new head (overwrite removes
+re-resolve to the current live set), and retries the NEXT slot; data
+files are content-unique and immutable, so a retry never rewrites data.
 
 Object-store note: S3 has no atomic rename — ``rename`` on ``s3a://``
 is copy+delete and the NONE check is not atomic. A production S3
-deployment swaps this module's publish step for a put-if-absent
-LogStore (S3 conditional PUT / DynamoDB coordination — the documented
-Delta S3 story). HDFS/ABFS-class stores implement the NONE check
+deployment swaps ``_publish`` for a put-if-absent write (S3
+conditional PUT / DynamoDB coordination — the documented Delta S3
+story). HDFS/ABFS-class stores implement the NONE check
 atomically server-side; on the LOCAL filesystem FileContext's
 rename-NONE is an exists-check followed by a rename (the
 DelegateToFileSystem default), so a cross-PROCESS slot race could in
@@ -64,9 +65,10 @@ no update is lost. Commits whose content WAS computed from a snapshot
 recorded read version, the stale result is NEVER committed — the
 low-level ``commit`` raises ``ConcurrentModificationError`` (the
 Delta OSS ConcurrentAppend/ConcurrentDeleteRead contract) and the
-high-level merge/compact wrappers RECOMPUTE against the new head and
-retry, so an append racing a merge is either merged in or the merge
-fails loudly — never silently clobbered.
+high-level merge/compact/delete wrappers RECOMPUTE against the new head
+through one bounded retry helper (``_recompute``), so an append racing
+a merge is either merged in or the merge fails loudly — never silently
+clobbered.
 
 Scale notes: the log is metadata (KB per commit — file paths and
 counts, never data); snapshot reads hand Spark an explicit file list
@@ -75,7 +77,8 @@ parquet footer and runs no schema-inference job (only
 ``snapshot(merge_schema=True)`` infers, because it must union the
 footers); partition pruning / predicate pushdown on the scan work
 unchanged (a table with deletion vectors additionally anti-joins the scan
-against the broadcast DV position set — ``commit_delete_where``);
+against the broadcast DV position set, a JSON scan of the sidecars —
+``commit_delete_where``);
 ``read_incremental`` turns an append-only table into a CDC source
 reading ONLY the files added in the version window (the streaming
 fast path — ``streaming/cdc_source.py`` tails it); ``row_diff`` is one
@@ -88,8 +91,10 @@ every read starts from the latest checkpoint at-or-below its version,
 so a 10⁵-commit table reads like a 10-commit one (q122 pins both the
 replay-plan arithmetic and value identity across the checkpoint
 boundary). A read lists ``_txn`` once and replays the checkpoint plus
-tail once (``_replay``) for its live set, schema, stats, bloom and
-deletion-vector pointers together.
+tail once (``replay_log``) for its live set, schema, stats, bloom and
+deletion-vector pointers together. The replay is IO-free — it takes the
+listing and a file reader — so the JVM-free DataSource
+(``streaming/dsv2_source.py``) runs the same fold over ``os`` reads.
 """
 
 from __future__ import annotations
@@ -99,6 +104,8 @@ import json
 import re
 import uuid
 from dataclasses import dataclass
+from functools import reduce
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -110,6 +117,10 @@ _DATA_DIR = "data"
 _ENTRY_RE = re.compile(r"^\d{8}\.json$")
 _CHECKPOINT_RE = re.compile(r"^chk-\d{8}\.json$")
 _MAX_COMMIT_ATTEMPTS = 64
+# Bloom index geometry: set bits per file filter and hash functions per
+# key. Each sidecar records both, so readers never assume them.
+BLOOM_BITS = 1 << 14
+BLOOM_K = 2
 
 
 def _stats_scalar(v):
@@ -166,6 +177,100 @@ class _State:
     txn: dict[str, int]
 
 
+def _parse_listing(names: Iterable[str]) -> tuple[list[int], list[int]]:
+    """(committed entry versions, checkpoint versions), both sorted,
+    from the file names of one ``_txn`` listing."""
+    entries: list[int] = []
+    checkpoints: list[int] = []
+    for name in names:
+        if _ENTRY_RE.match(name):
+            entries.append(int(name[:8]))
+        elif _CHECKPOINT_RE.match(name):
+            checkpoints.append(int(name[4:12]))
+    return sorted(entries), sorted(checkpoints)
+
+
+def read_plan(
+    names: Iterable[str], version: int | None
+) -> tuple[int | None, int]:
+    """(checkpoint version at or below the read or None, version
+    read) for a read at ``version`` (default: head), from one listing.
+    Versions past the head clamp to it; an empty log reads -1."""
+    entries, checkpoints = _parse_listing(names)
+    head = entries[-1] if entries else -1
+    if version is not None:
+        head = min(version, head)
+    base = max((c for c in checkpoints if c <= head), default=None)
+    return base, head
+
+
+def _fold(ck: dict, tail: list[dict]) -> _State:
+    """A checkpoint document (``{}`` for none) plus the log entries
+    after it, applied in order: the table's state at the last entry."""
+    live: set[str] = set(ck.get("live", ()))
+    stats: dict[str, dict] = dict(ck.get("stats", {}))
+    bloom: dict[str, dict] = dict(ck.get("bloom", {}))
+    dv: dict[str, dict] = dict(ck.get("dv", {}))
+    txn: dict[str, int] = dict(ck.get("txn", {}))
+    for e in tail:
+        live.difference_update(e["remove"])
+        live.update(e["add"])
+        for rel in e["remove"]:
+            stats.pop(rel, None)
+            bloom.pop(rel, None)
+            dv.pop(rel, None)
+        est, ebl = e.get("stats", {}), e.get("bloom", {})
+        for rel in e["add"]:
+            stats[rel] = est.get(rel, {})
+            if rel in ebl:
+                bloom[rel] = ebl[rel]
+            else:
+                bloom.pop(rel, None)
+        # a delete's per-file pointer REPLACES the file's previous
+        # one (its sidecar carries the merged position set)
+        dv.update(e.get("dv", {}))
+        for app, v in e.get("txn", {}).items():
+            if txn.get(app, -1) < v:
+                txn[app] = v
+    schema_json = tail[-1]["schema"] if tail else ck.get("schema")
+    return _State(
+        live=sorted(live),
+        schema=(
+            StructType.fromJson(json.loads(schema_json))
+            if schema_json is not None
+            else None
+        ),
+        stats=stats,
+        bloom=bloom,
+        dv=dv,
+        txn=txn,
+    )
+
+
+def replay_log(
+    names: Iterable[str],
+    read: Callable[[str], dict],
+    version: int | None,
+) -> _State:
+    """The table's state at ``version`` (default: head) from one
+    ``_txn`` listing and ``read`` (a ``_txn`` file name → its parsed
+    JSON): the latest checkpoint at or below the version, then only the
+    entries after it — the O(tail) read path every reader shares."""
+    base, head = read_plan(names, version)
+    start = -1 if base is None else base
+    return _fold(
+        read(f"chk-{base:08d}.json") if base is not None else {},
+        [read(f"{v:08d}.json") for v in range(start + 1, head + 1)],
+    )
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of ``schema``, planned in the JVM as a scan of no
+    files, so collecting it starts no Python worker. Columns read as
+    nullable, as every snapshot's do."""
+    return spark.read.schema(schema).parquet()
+
+
 class CommitConflictError(RuntimeError):
     """Raised when a commit loses the version-slot race
     ``_MAX_COMMIT_ATTEMPTS`` times in a row (pathological contention —
@@ -213,9 +318,6 @@ class VersionedTable:
         self._rename_none[0] = jvm.org.apache.hadoop.fs.Options.Rename.NONE
 
     # -- log plumbing --------------------------------------------------
-    def _entry_path(self, version: int) -> str:
-        return f"{self.log_dir}/{version:08d}.json"
-
     def _read_small(self, path: str) -> str:
         """Full contents of a small metadata file via the Hadoop FS."""
         stream = self._fs.open(self._P(path))
@@ -230,21 +332,52 @@ class VersionedTable:
         out.write(bytearray(text.encode("utf-8")))
         out.close()
 
-    def _list_log(self) -> tuple[list[str], list[int]]:
-        """(committed entry file names ``NNNNNNNN.json``, checkpoint
-        versions), both sorted, from ONE listing of ``_txn`` — no
-        content reads."""
+    def _list_log(self) -> list[str]:
+        """File names in ``_txn`` from ONE listing — no content reads."""
         if not self._fs.exists(self._P(self.log_dir)):
-            return [], []
-        names: list[str] = []
-        checkpoints: list[int] = []
-        for st in self._fs.listStatus(self._P(self.log_dir)):
-            name = st.getPath().getName()
-            if _ENTRY_RE.match(name):
-                names.append(name)
-            elif _CHECKPOINT_RE.match(name):
-                checkpoints.append(int(name[4:12]))
-        return sorted(names), sorted(checkpoints)
+            return []
+        return [
+            st.getPath().getName()
+            for st in self._fs.listStatus(self._P(self.log_dir))
+        ]
+
+    def _read_log(self, name: str) -> dict:
+        """The parsed ``_txn`` file ``name``. The publish protocol makes
+        partial files unobservable; a malformed one therefore means
+        external corruption and raises loudly rather than silently
+        truncating history."""
+        path = f"{self.log_dir}/{name}"
+        text = self._read_small(path)
+        try:
+            return json.loads(text)
+        except ValueError as exc:
+            raise ValueError(
+                f"corrupt transaction-log entry {path!r} "
+                f"({len(text)} bytes) — the rename-NONE publish "
+                "protocol never produces partial entries, so this "
+                "file was damaged outside the protocol"
+            ) from exc
+
+    def _publish(self, name: str, text: str) -> bool:
+        """THE publish step: write ``text`` to a hidden temp, then
+        rename it onto ``_txn/name`` with rename-NONE, which claims the
+        name and makes the whole file visible in one atomic operation.
+        True when this call won the name; False when it was taken (the
+        temp is deleted)."""
+        tmp = f"{self.log_dir}/.tmp-{uuid.uuid4().hex}"
+        self._write_small(tmp, text)
+        try:
+            self._fc.rename(
+                self._P(tmp),
+                self._P(f"{self.log_dir}/{name}"),
+                self._rename_none,
+            )
+            return True
+        except Exception as exc:
+            self._fs.delete(self._P(tmp), False)
+            if "FileAlreadyExistsException" not in str(exc):
+                raise
+            return False
 
     # -- checkpoints -----------------------------------------------------
     def checkpoint(self, version: int | None = None) -> int:
@@ -252,15 +385,15 @@ class VersionedTable:
         head) into ``_txn/chk-NNNNNNNN.json`` — Delta's
         ``_last_checkpoint`` idea: readers start from the checkpoint's
         live set and replay only the entries AFTER it, so log reads
-        are O(tail), not O(history). Published with the same
-        rename-NONE protocol as entries (atomic, idempotent — a
-        checkpoint that already exists is simply kept: checkpoints are
-        pure functions of the immutable log prefix)."""
+        are O(tail), not O(history). Published by ``_publish`` like
+        entries (atomic, idempotent — a checkpoint that already exists
+        is simply kept: checkpoints are pure functions of the immutable
+        log prefix)."""
         v = self.current_version() if version is None else version
         if v < 0:
             raise ValueError("checkpoint of an empty log")
-        path = f"{self.log_dir}/chk-{v:08d}.json"
-        if self._fs.exists(self._P(path)):
+        name = f"chk-{v:08d}.json"
+        if self._fs.exists(self._P(f"{self.log_dir}/{name}")):
             return v
         st = self._replay(v)
         state = {
@@ -272,72 +405,37 @@ class VersionedTable:
             "dv": st.dv,
             "txn": st.txn,
         }
-        tmp = f"{self.log_dir}/.tmp-{uuid.uuid4().hex}"
-        self._write_small(tmp, json.dumps(state))
-        try:
-            self._fc.rename(self._P(tmp), self._P(path), self._rename_none)
-        except Exception as exc:
-            self._fs.delete(self._P(tmp), False)
-            if "FileAlreadyExistsException" not in str(exc):
-                raise
+        self._publish(name, json.dumps(state))
         return v
 
     def _read_checkpoint(self, v: int) -> dict:
-        return json.loads(self._read_small(f"{self.log_dir}/chk-{v:08d}.json"))
-
-    def _read_plan(self, version: int | None) -> tuple[int | None, int]:
-        """(checkpoint version at or below the read or None, version
-        read) for a read at ``version``, from one listing. Versions
-        past the head clamp to it."""
-        names, checkpoints = self._list_log()
-        head = int(names[-1][:8]) if names else -1
-        if version is not None:
-            head = min(version, head)
-        base = max((c for c in checkpoints if c <= head), default=None)
-        return base, head
+        return self._read_log(f"chk-{v:08d}.json")
 
     def replay_plan(self, version: int | None = None) -> tuple[int | None, int]:
         """(checkpoint version used, tail entries replayed) for a read
         at ``version`` — the observability hook q122 pins. None = full
         replay (no checkpoint at or below the requested version).
         Versions past the head clamp to it, as the read does."""
-        base, head = self._read_plan(version)
+        base, head = read_plan(self._list_log(), version)
         return base, head - (base if base is not None else -1)
 
     def _tail_entries(self, after: int, through: int) -> list[dict]:
         """Entries for versions in (after, through] — reads exactly the
         tail's files, never the whole log."""
         return [
-            json.loads(self._read_small(self._entry_path(v)))
+            self._read_log(f"{v:08d}.json")
             for v in range(after + 1, through + 1)
         ]
 
     def entries(self) -> list[dict]:
-        """All committed log entries in version order. The publish
-        protocol makes partial entries unobservable; a malformed entry
-        therefore means external corruption and raises loudly rather
-        than silently truncating history."""
-        out = []
-        for n in self._list_log()[0]:
-            path = f"{self.log_dir}/{n}"
-            text = self._read_small(path)
-            try:
-                out.append(json.loads(text))
-            except ValueError as exc:
-                raise ValueError(
-                    f"corrupt transaction-log entry {path!r} "
-                    f"({len(text)} bytes) — the rename-NONE publish "
-                    "protocol never produces partial entries, so this "
-                    "file was damaged outside the protocol"
-                ) from exc
-        return out
+        """All committed log entries in version order."""
+        return self._tail_entries(-1, self.current_version())
 
     def current_version(self) -> int:
         """Latest committed version, -1 for an empty table — resolved
         from the listing alone (no entry reads), so pollers tail the
         log cheaply."""
-        names = self._list_log()[0]
-        return int(names[-1][:8]) if names else -1
+        return read_plan(self._list_log(), None)[1]
 
     # -- commit --------------------------------------------------------
     def commit(
@@ -348,15 +446,15 @@ class VersionedTable:
         stats_cols: list[str] | None = None,
         read_version: int | None = None,
         bloom_col: str | None = None,
-        bloom_bits: int = 1 << 14,
-        bloom_k: int = 2,
         txn_app: str | None = None,
         txn_version: int | None = None,
     ) -> int:
         """Commit ``df`` as the next version. ``mode``: ``append``
         adds files; ``overwrite`` adds files and removes every
         previously-live file (logically — bytes stay for time
-        travel). Returns the committed version.
+        travel). Returns the committed version. The row count rides
+        on the write itself (an observed metric), so a plain commit
+        never re-reads the bytes it just wrote.
 
         Concurrency: losing a version-slot race re-reads the log and
         retries against the new head (optimistic, the Delta OSS
@@ -372,12 +470,10 @@ class VersionedTable:
 
         ``stats_cols``: record per-file min/max of these columns in
         the log entry (the Delta/Iceberg file-statistics idea) —
-        ``snapshot_pruned`` then skips files whose range cannot match
-        a predicate without opening them. One extra scan of the
-        just-written files, grouped by ``input_file_name`` (file-local
-        aggregation, no shuffle wider than files × columns). Only
-        order-preserving types (int/float/bool/str) are recorded —
-        see ``_stats_scalar``.
+        ``snapshot_pruned_ranges`` then skips files whose range cannot
+        match a predicate without opening them. Only order-preserving
+        types (int/float/bool/str) are recorded — see
+        ``_stats_scalar``.
 
         ``bloom_col``: additionally build a per-file Bloom filter over
         this high-cardinality column (the Delta bloom-filter-index
@@ -385,17 +481,20 @@ class VersionedTable:
         from the index alone, skipping files the filter proves cannot
         contain the key (min/max stats are useless for point probes on
         unclustered keys). Each file's filter is a SIDECAR file under
-        ``_txn_index/`` (its set-bit positions, ≤ ``bloom_bits`` ints);
+        ``_txn_index/`` (its set-bit positions, ≤ ``BLOOM_BITS`` ints);
         the log entry records only the pointer, so entries stay O(KB)
-        however many rows a file holds. Positions are ``bloom_k``
+        however many rows a file holds. Positions are ``BLOOM_K``
         portable md5 hashes of the key's decimal string form —
         engine-independent, so the DuckDB oracle rebuilds the identical
         filter; int/string keys only (floats have no canonical string
-        form and are rejected). One extra file-local aggregation over
-        the just-written files; the driver materializes only set-bit
-        positions (bounded by ``bloom_bits``), and at production scale
+        form and are rejected). The driver materializes only set-bit
+        positions (bounded by ``BLOOM_BITS``), and at production scale
         the sidecar write moves into the writing job — same protocol,
         no driver bytes.
+
+        Stats and bloom positions come from ONE aggregate over the
+        just-written files, grouped by file (file-local, no shuffle
+        wider than files × columns); a commit with neither pays none.
 
         ``txn_app``/``txn_version``: exactly-once transactional writes
         (Delta's ``txnAppId``/``txnVersion`` contract — the T7 face at
@@ -429,66 +528,58 @@ class VersionedTable:
                 )
         commit_rel = f"{_DATA_DIR}/c-{uuid.uuid4().hex[:12]}"
         commit_dir = f"{self.root}/{commit_rel}"
-        rows_added = 0
-        stats: dict[str, dict[str, list]] = {}
-        if not stats_cols:
-            # No per-file stats requested: the row count rides on the
-            # write action itself (an observed metric), so the commit
-            # never re-reads the bytes it just wrote — at production
-            # scale that second pass over the committed data was the
-            # whole cost of a plain append (round 11, guide §1/§6).
-            obs = Observation()
-            (
-                df.observe(obs, F.count(F.lit(1)).alias("rows"))
-                .write.mode("errorifexists")
-                .parquet(commit_dir)
-            )
-            rows_added = int(obs.get["rows"])
-        else:
-            df.write.mode("errorifexists").parquet(commit_dir)
+        obs = Observation()
+        (
+            df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode("errorifexists")
+            .parquet(commit_dir)
+        )
+        rows_added = int(obs.get["rows"])
         added = sorted(
             f"{commit_rel}/{name}"
             for st in self._fs.listStatus(self._P(commit_dir))
             if (name := st.getPath().getName()).endswith(".parquet")
         )
-        # ONE file-grouped pass over the just-written files carries the
-        # row count AND the per-file min/max stats (the bloom index,
-        # when requested, is a second pass — its exploded-positions
-        # aggregation has a different shape). Previously three separate
-        # jobs re-read the commit; stats-only commits pay one, and
-        # plain commits (no stats_cols) pay zero — their count is the
-        # observed metric above.
-        if stats_cols and added:
-            aggs = [F.count("*").alias("__n")]
+        stats: dict[str, dict[str, list]] = {}
+        bloom: dict[str, dict] = {}
+        if (stats_cols or bloom_col) and added:
+            aggs = []
             for c in stats_cols or []:
                 aggs += [
                     F.min(c).alias(f"min_{c}"),
                     F.max(c).alias(f"max_{c}"),
                 ]
+            if bloom_col:
+                from .text import portable_hash
+
+                v = F.col(bloom_col).cast("string")
+                positions = [
+                    portable_hash(F.concat(F.lit(f"blm{j}|"), v), BLOOM_BITS)
+                    for j in range(BLOOM_K)
+                ]
+                # the file's set bits: the union of each hash's positions
+                aggs.append(
+                    F.sort_array(
+                        reduce(F.array_union, map(F.collect_set, positions))
+                    ).alias("__bloom")
+                )
+            # file names are unique within the commit dir
             by_file = {
-                r["f"]: r
+                r["__f"]: r
                 for r in self._read(added, df.schema)
-                .groupBy(F.input_file_name().alias("f"))
+                .groupBy(F.col("_metadata.file_name").alias("__f"))
                 .agg(*aggs)
                 .collect()
             }
-            rows_added = sum(r["__n"] for r in by_file.values())
             for rel in added:
-                # input_file_name is a URI; match on the basename +
-                # commit dir (both unique within the commit)
-                row = next(
-                    (
-                        r
-                        for f, r in by_file.items()
-                        if f.rstrip("/").endswith(rel.split("/")[-1])
-                    ),
-                    None,
-                )
-                if row is not None and stats_cols:
-                    # NULL min/max (all-NULL file) records as [None,
-                    # None] — kept unprunable downstream; a column
-                    # whose type is not order-preserving in JSON is
-                    # dropped entirely (never wrongly skippable).
+                row = by_file.get(rel.split("/")[-1])
+                if row is None:
+                    continue  # an empty file: no stats, never indexed
+                # NULL min/max (all-NULL file) records as [None, None]
+                # — kept unprunable downstream; a column whose type is
+                # not order-preserving in JSON is dropped entirely
+                # (never wrongly skippable).
+                if stats_cols:
                     stats[rel] = {
                         c: [
                             _stats_scalar(row[f"min_{c}"]),
@@ -504,53 +595,22 @@ class VersionedTable:
                             or _stats_scalar(row[f"max_{c}"]) is not None
                         )
                     }
-        bloom: dict[str, dict] = {}
-        if bloom_col and added:
-            from .text import portable_hash
-
-            back = self._read(added, df.schema).select(
-                F.input_file_name().alias("f"),
-                F.col(bloom_col).cast("string").alias("v"),
-            )
-            pos_cols = [
-                portable_hash(
-                    F.concat(F.lit(f"blm{j}|"), F.col("v")), bloom_bits
-                )
-                for j in range(bloom_k)
-            ]
-            by_file = {
-                r["f"]: r["ps"]
-                for r in back.select(
-                    "f", F.explode(F.array(*pos_cols)).alias("pos")
-                )
-                .groupBy("f")
-                .agg(F.sort_array(F.collect_set("pos")).alias("ps"))
-                .collect()
-            }
-            for rel in added:
-                ps = next(
-                    (
-                        v
-                        for f, v in by_file.items()
-                        if f.rstrip("/").endswith(rel.split("/")[-1])
-                    ),
-                    None,
-                )
-                if ps is None:
-                    continue  # all-NULL or empty file: never indexed
-                side_rel = f"{_INDEX_DIR}/blm-{uuid.uuid4().hex[:12]}.json"
-                self._write_small(
-                    f"{self.root}/{side_rel}",
-                    json.dumps(
-                        {
-                            "col": bloom_col,
-                            "bits": bloom_bits,
-                            "k": bloom_k,
-                            "positions": [int(p) for p in ps],
-                        }
-                    ),
-                )
-                bloom[rel] = {"col": bloom_col, "index": side_rel}
+                if bloom_col:
+                    side_rel = (
+                        f"{_INDEX_DIR}/blm-{uuid.uuid4().hex[:12]}.json"
+                    )
+                    self._write_small(
+                        f"{self.root}/{side_rel}",
+                        json.dumps(
+                            {
+                                "col": bloom_col,
+                                "bits": BLOOM_BITS,
+                                "k": BLOOM_K,
+                                "positions": [int(p) for p in row["__bloom"]],
+                            }
+                        ),
+                    )
+                    bloom[rel] = {"col": bloom_col, "index": side_rel}
         schema_json = df.schema.json()
 
         def build(version: int) -> dict:
@@ -570,13 +630,13 @@ class VersionedTable:
 
         if txn_app is None:
             return self._publish_entry(build, read_version)
+
         # Transactional write (Delta's txnAppId/txnVersion contract):
         # the app's high-water mark is re-checked against the head the
         # publish is pinned to, so every lost slot race forces a
         # re-check — two writers replaying the same (app, version) can
         # never both land, whatever the interleaving.
-        for _ in range(_MAX_COMMIT_ATTEMPTS):
-            head = self.current_version()
+        def attempt(head: int) -> int:
             if self.last_txn_version(txn_app) >= txn_version:
                 # a concurrent replay already applied it AFTER this
                 # call wrote its files: reclaim the never-referenced
@@ -588,45 +648,33 @@ class VersionedTable:
                         self._P(f"{self.root}/{meta['index']}"), False
                     )
                 return head
-            try:
-                return self._publish_entry(
-                    build,
-                    read_version=(
-                        read_version if read_version is not None else head
-                    ),
-                )
-            except ConcurrentModificationError:
-                if read_version is not None:
-                    raise  # the caller's snapshot is stale: recompute
-                continue
-        raise CommitConflictError(
-            f"transactional commit under {self.root!r} lost the "
-            f"re-check race {_MAX_COMMIT_ATTEMPTS} times — "
-            "pathological contention"
-        )
+            return self._publish_entry(
+                build, head if read_version is None else read_version
+            )
 
-    def txn_versions(self, version: int | None = None) -> dict[str, int]:
-        """Writer-app → highest committed ``txn_version`` at
-        ``version`` (checkpoint-based like ``file_stats``) — the
-        idempotence high-water marks transactional writers check."""
-        return self._replay(version).txn
+        if read_version is not None:
+            # the caller's snapshot is stale once the head moves: a
+            # conflict propagates for the caller to recompute
+            return attempt(self.current_version())
+        return self._recompute(attempt, "transactional commit")
 
     def last_txn_version(self, app: str) -> int:
         """Highest ``txn_version`` committed by ``app`` (-1 when the
         app never wrote) — pair with ``commit(txn_app=...,
         txn_version=...)`` for exactly-once sinks: a replayed
         micro-batch whose version is at or below this mark is skipped
-        before any bytes are written."""
-        return self.txn_versions().get(app, -1)
+        before any bytes are written. Checkpoint-based like
+        ``file_stats``."""
+        return self._replay(None).txn.get(app, -1)
 
     def _publish_entry(self, build, read_version: int | None = None) -> int:
         """The slot-claim loop: resolve the next version, run
         ``build(version)`` to produce the entry (re-resolved per
         attempt, so state-dependent fields like overwrite removes see
-        the new head), publish via atomic rename-NONE. A transaction
-        carrying ``read_version`` raises
-        ``ConcurrentModificationError`` the moment the head is found
-        past it — the stale result is never committed."""
+        the new head), publish it. A transaction carrying
+        ``read_version`` raises ``ConcurrentModificationError`` the
+        moment the head is found past it — the stale result is never
+        committed."""
         for _ in range(_MAX_COMMIT_ATTEMPTS):
             version = self.current_version() + 1
             if read_version is not None and version != read_version + 1:
@@ -637,77 +685,37 @@ class VersionedTable:
                     "snapshot-derived result would drop the "
                     "interleaved commit (recompute and retry)"
                 )
-            entry = build(version)
-            tmp = f"{self.log_dir}/.tmp-{uuid.uuid4().hex}"
-            self._write_small(tmp, json.dumps(entry))
-            try:
-                # Atomic claim AND publish: rename-NONE raises when the
-                # slot is taken, and a reader sees the whole entry or
-                # nothing.
-                self._fc.rename(
-                    self._P(tmp),
-                    self._P(self._entry_path(version)),
-                    self._rename_none,
-                )
+            entry = json.dumps(build(version))
+            if self._publish(f"{version:08d}.json", entry):
                 return version
-            except Exception as exc:
-                self._fs.delete(self._P(tmp), False)
-                if "FileAlreadyExistsException" not in str(exc):
-                    raise
-                # lost the slot to a concurrent writer: retry against
-                # the new head (overwrite removes re-resolve there)
+            # lost the slot to a concurrent writer: retry against the
+            # new head (overwrite removes re-resolve there)
         raise CommitConflictError(
             f"lost the version-slot race {_MAX_COMMIT_ATTEMPTS} times "
             f"under {self.root!r} — pathological writer contention"
         )
 
+    def _recompute(self, attempt: Callable[[int], int], what: str) -> int:
+        """The read-recompute loop of every snapshot-dependent commit:
+        run ``attempt(head)`` against the current head; when it raises
+        ``ConcurrentModificationError`` (another commit landed first),
+        run it again against the new head — never publishing a result
+        computed from a stale snapshot."""
+        for _ in range(_MAX_COMMIT_ATTEMPTS):
+            try:
+                return attempt(self.current_version())
+            except ConcurrentModificationError:
+                continue
+        raise CommitConflictError(
+            f"{what} under {self.root!r} lost the read-recompute race "
+            f"{_MAX_COMMIT_ATTEMPTS} times — pathological contention"
+        )
+
     # -- reads ---------------------------------------------------------
     def _replay(self, version: int | None) -> _State:
-        """The table's state at ``version`` (default: head): the latest
-        checkpoint at or below it, then the add/remove actions of the
-        tail entries after it, applied in order — the O(tail) read
-        path."""
-        base, head = self._read_plan(version)
-        ck = self._read_checkpoint(base) if base is not None else {}
-        tail = self._tail_entries(base if base is not None else -1, head)
-        live: set[str] = set(ck.get("live", ()))
-        stats: dict[str, dict] = dict(ck.get("stats", {}))
-        bloom: dict[str, dict] = dict(ck.get("bloom", {}))
-        dv: dict[str, dict] = dict(ck.get("dv", {}))
-        txn: dict[str, int] = dict(ck.get("txn", {}))
-        for e in tail:
-            live.difference_update(e["remove"])
-            live.update(e["add"])
-            for rel in e["remove"]:
-                stats.pop(rel, None)
-                bloom.pop(rel, None)
-                dv.pop(rel, None)
-            est, ebl = e.get("stats", {}), e.get("bloom", {})
-            for rel in e["add"]:
-                stats[rel] = est.get(rel, {})
-                if rel in ebl:
-                    bloom[rel] = ebl[rel]
-                else:
-                    bloom.pop(rel, None)
-            # a delete's per-file pointer REPLACES the file's previous
-            # one (its sidecar carries the merged position set)
-            dv.update(e.get("dv", {}))
-            for app, v in e.get("txn", {}).items():
-                if txn.get(app, -1) < v:
-                    txn[app] = v
-        schema_json = tail[-1]["schema"] if tail else ck.get("schema")
-        return _State(
-            live=sorted(live),
-            schema=(
-                StructType.fromJson(json.loads(schema_json))
-                if schema_json is not None
-                else None
-            ),
-            stats=stats,
-            bloom=bloom,
-            dv=dv,
-            txn=txn,
-        )
+        """The table's state at ``version`` (default: head): one
+        listing, then ``replay_log`` over the checkpoint and tail."""
+        return replay_log(self._list_log(), self._read_log, version)
 
     def live_files(self, version: int | None = None) -> list[str]:
         """Replay add/remove actions through ``version`` (default:
@@ -729,7 +737,7 @@ class VersionedTable:
         read as an empty frame of ``schema``."""
         assert schema is not None, f"read of an empty log under {self.root!r}"
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         df = self.spark.read.schema(schema).parquet(
             *[f"{self.root}/{f}" for f in files]
         )
@@ -788,24 +796,31 @@ class VersionedTable:
     def _apply_dvs(self, df: DataFrame, dvs: dict[str, dict]) -> DataFrame:
         """Filter out rows a deletion vector marks dead: one broadcast
         anti-join of the scan (keyed by file + row position, from the
-        parquet reader's ``_metadata`` columns) against the merged DV
-        position set of ``dvs``. A table without DVs pays nothing (the
-        plan is untouched); with DVs the join side is
-        deleted-rows-sized metadata, broadcast — never a shuffle of
-        the data."""
-        pairs: list[tuple[str, int]] = []
-        for rel, meta in dvs.items():
-            side = json.loads(
-                self._read_small(f"{self.root}/{meta['index']}")
-            )
-            k = self._dv_key_of(rel)
-            pairs.extend((k, int(p)) for p in side["positions"])
-        if not pairs:
+        parquet reader's ``_metadata`` columns) against the DV position
+        sets of ``dvs``. Those are a JSON scan of the sidecars with an
+        explicit schema — planning reads nothing — each sidecar's name
+        mapped to its data file's key by one literal map. A table
+        without DVs pays nothing (the plan is untouched); with DVs the
+        join side is deleted-rows-sized metadata, broadcast — never a
+        shuffle of the data."""
+        if not dvs:
             return df
-        cols = df.columns
-        dv_df = self.spark.createDataFrame(
-            pairs, "__dv_key string, __dv_pos bigint"
+        sidecar_key = F.create_map(
+            *[
+                F.lit(x)
+                for rel, meta in dvs.items()
+                for x in (meta["index"].split("/")[-1], self._dv_key_of(rel))
+            ]
         )
+        dv_df = (
+            self.spark.read.schema("positions array<bigint>")
+            .json([f"{self.root}/{meta['index']}" for meta in dvs.values()])
+            .select(
+                sidecar_key[F.col("_metadata.file_name")].alias("__dv_key"),
+                F.explode("positions").alias("__dv_pos"),
+            )
+        )
+        cols = df.columns
         return (
             df.withColumn("__dv_key", self._dv_key_col())
             .withColumn("__dv_pos", F.col("_metadata.row_index"))
@@ -846,25 +861,21 @@ class VersionedTable:
         cond = (
             F.expr(condition) if isinstance(condition, str) else condition
         )
-        for _ in range(_MAX_COMMIT_ATTEMPTS):
-            base = self.current_version()
+
+        def attempt(base: int) -> int:
             st = self._replay(base)
-            live = st.live
-            if not live:
+            if not st.live:
                 raise ValueError("delete from an empty table")
-            scan = (
-                self._read(live, st.schema)
+            hits = (
+                self._read(st.live, st.schema)
                 .withColumn("__dv_key", self._dv_key_col())
                 .withColumn("__dv_pos", F.col("_metadata.row_index"))
-            )
-            hits = (
-                scan.filter(cond)
+                .filter(cond)
                 .groupBy("__dv_key")
                 .agg(F.collect_list("__dv_pos").alias("ps"))
                 .collect()
             )
-            existing = st.dv
-            key2rel = {self._dv_key_of(rel): rel for rel in live}
+            key2rel = {self._dv_key_of(rel): rel for rel in st.live}
             dv_map: dict[str, dict] = {}
             for r in hits:
                 rel = key2rel.get(r["__dv_key"])
@@ -874,7 +885,7 @@ class VersionedTable:
                         f"live set of {self.root!r}"
                     )
                 newps = {int(p) for p in r["ps"]}
-                old = existing.get(rel)
+                old = st.dv.get(rel)
                 if old is not None:
                     oldside = json.loads(
                         self._read_small(f"{self.root}/{old['index']}")
@@ -886,35 +897,22 @@ class VersionedTable:
                     json.dumps({"positions": sorted(newps)}),
                 )
                 dv_map[rel] = {"index": side_rel, "n": len(newps)}
-            schema_json = st.schema.json()
+            entry = {
+                "op": "delete",
+                "schema": st.schema.json(),
+                "add": [],
+                "remove": [],
+                "rows_added": 0,
+                "stats": {},
+                "bloom": {},
+                "dv": dv_map,
+            }
+            return self._publish_entry(
+                lambda version: {"version": version, **entry},
+                read_version=base,
+            )
 
-            def build(version: int) -> dict:
-                return {
-                    "version": version,
-                    "op": "delete",
-                    "schema": schema_json,
-                    "add": [],
-                    "remove": [],
-                    "rows_added": 0,
-                    "stats": {},
-                    "bloom": {},
-                    "dv": dv_map,
-                }
-
-            try:
-                return self._publish_entry(build, read_version=base)
-            except ConcurrentModificationError:
-                continue  # head moved: recompute positions against it
-        raise CommitConflictError(
-            f"delete under {self.root!r} lost the read-recompute race "
-            f"{_MAX_COMMIT_ATTEMPTS} times — pathological contention"
-        )
-
-    def file_blooms(self, version: int | None = None) -> dict[str, dict]:
-        """Live-file → bloom-index pointer (``{col, index}``) at
-        ``version``; files committed without ``bloom_col`` are absent
-        (always admitted). Checkpoint-based like ``file_stats``."""
-        return self._replay(version).bloom
+        return self._recompute(attempt, "delete")
 
     def bloom_admitted_files(
         self, col: str, value, version: int | None = None
@@ -922,7 +920,7 @@ class VersionedTable:
         """(files whose bloom filter admits ``col = value``, total live
         files) — the point-lookup skipping decision. A file without a
         bloom for ``col`` is always admitted (skipping only on proof,
-        the ``pruned_files`` contract); a file whose filter lacks any
+        the ``pruned_files_ranges`` contract); a file whose filter lacks any
         of the key's ``k`` bit positions provably does not contain the
         key and is skipped. False positives admit extra files — never
         wrong answers, the exact filter finishes inside the scan. Cost:
@@ -993,39 +991,31 @@ class VersionedTable:
                 kept.append(rel)
         return kept
 
-    def pruned_files(
-        self, col: str, lo, hi, version: int | None = None
-    ) -> tuple[list[str], int]:
-        """(files whose recorded [min, max] of ``col`` can intersect
-        [lo, hi], total live files) — the Delta/Iceberg data-skipping
-        decision, made from log metadata alone (no file opened). A
-        file WITHOUT stats for ``col`` is always kept: skipping is
-        only legal when the log can prove non-overlap. ``lo``/``hi``
-        of None are unbounded ends. A bound whose type does not share
-        a total order with the recorded stats (numeric-vs-numeric,
-        str-vs-str — ``_bounds_comparable``) also keeps the file: a
-        cross-type comparison proves nothing (round-10 ADVICE)."""
-        return self.pruned_files_ranges({col: (lo, hi)}, version)
-
     def pruned_files_ranges(
         self, bounds: dict[str, tuple], version: int | None = None
     ) -> tuple[list[str], int]:
         """Conjunctive multi-column skipping: (files whose recorded
         stats can intersect EVERY ``col: (lo, hi)`` bound, total live
-        files). A file skips when ANY column's range provably misses
-        its bound — the Delta/Iceberg compound data-skipping decision
-        (per-column necessary conditions intersect). Unknown stats or
-        cross-type bounds keep the file, per ``pruned_files``."""
+        files) — the Delta/Iceberg data-skipping decision, made from
+        log metadata alone (no file opened). A file skips when ANY
+        column's range provably misses its bound (per-column necessary
+        conditions intersect); ``lo``/``hi`` of None are unbounded
+        ends. A file without stats for a column, or whose stats do not
+        share a total order with the bound (numeric-vs-numeric,
+        str-vs-str — ``_bounds_comparable``), is kept: skipping is only
+        legal when the log can prove non-overlap (round-10 ADVICE)."""
         stats = self._replay(version).stats
         return self._pruned(stats, bounds), len(stats)
 
     def snapshot_pruned_ranges(
         self, bounds: dict[str, tuple], version: int | None = None
     ) -> DataFrame:
-        """Conjunctive-range snapshot read: scan only the files
-        ``pruned_files_ranges`` keeps, then apply every exact bound
-        (stats prove necessity only; parquet row-group pushdown
-        finishes inside the kept files)."""
+        """Range-predicate snapshot read through file skipping: scan
+        ONLY the files ``pruned_files_ranges`` keeps, then apply every
+        exact bound (stats prove necessity only; parquet row-group
+        pushdown finishes inside the kept files). At scale this is the
+        difference between touching the whole table and touching the
+        matching files' bytes."""
         st = self._replay(version)
         df = self._read(self._pruned(st.stats, bounds), st.schema, st.dv)
         for col, (lo, hi) in bounds.items():
@@ -1034,17 +1024,6 @@ class VersionedTable:
             if hi is not None:
                 df = df.filter(F.col(col) <= hi)
         return df
-
-    def snapshot_pruned(
-        self, col: str, lo, hi, version: int | None = None
-    ) -> DataFrame:
-        """Range-predicate snapshot read through file skipping: scan
-        ONLY the files ``pruned_files`` keeps, then apply the exact
-        predicate (the stats bound is necessary, not sufficient —
-        parquet row-group pushdown finishes the job inside the kept
-        files). At scale this is the difference between touching the
-        whole table and touching the matching files' bytes."""
-        return self.snapshot_pruned_ranges({col: (lo, hi)}, version)
 
     def read_incremental(self, v0: int, v1: int) -> DataFrame:
         """Rows in files ADDED in versions (v0, v1] — the append-only
@@ -1141,8 +1120,7 @@ class VersionedTable:
         clobbered. Single-writer behavior is unchanged."""
         from .ledger import merge_upsert
 
-        for _ in range(_MAX_COMMIT_ATTEMPTS):
-            base = self.current_version()
+        def attempt(base: int) -> int:
             merged = merge_upsert(
                 self.snapshot(base),
                 source,
@@ -1151,16 +1129,11 @@ class VersionedTable:
                 insert_values=insert_values,
                 delete_condition=delete_condition,
             )
-            try:
-                return self.commit(
-                    merged, mode="overwrite", op="merge", read_version=base
-                )
-            except ConcurrentModificationError:
-                continue  # head moved: recompute from the new snapshot
-        raise CommitConflictError(
-            f"merge under {self.root!r} lost the read-recompute race "
-            f"{_MAX_COMMIT_ATTEMPTS} times — pathological contention"
-        )
+            return self.commit(
+                merged, mode="overwrite", op="merge", read_version=base
+            )
+
+        return self._recompute(attempt, "merge")
 
     def commit_compact(self, target_files: int = 1) -> int:
         """OPTIMIZE as a committed version: rewrite the current live
@@ -1171,21 +1144,14 @@ class VersionedTable:
         Snapshot-dependent like ``commit_merge``: a concurrent commit
         between the snapshot read and the slot claim triggers a
         recompute against the new head, never a stale rewrite."""
-        for _ in range(_MAX_COMMIT_ATTEMPTS):
-            base = self.current_version()
-            snap = self.snapshot(base)
-            try:
-                return self.commit(
-                    snap.repartition(target_files),
-                    mode="overwrite",
-                    op="compact",
-                    read_version=base,
-                )
-            except ConcurrentModificationError:
-                continue
-        raise CommitConflictError(
-            f"compact under {self.root!r} lost the read-recompute race "
-            f"{_MAX_COMMIT_ATTEMPTS} times — pathological contention"
+        return self._recompute(
+            lambda base: self.commit(
+                self.snapshot(base).repartition(target_files),
+                mode="overwrite",
+                op="compact",
+                read_version=base,
+            ),
+            "compact",
         )
 
     def history(self) -> list[dict]:
@@ -1233,26 +1199,27 @@ class VersionedTable:
         # data files get.
         head = self.current_version()
         keep: set[str] = set()
-        keep_dv: set[str] = set()
         for v in range(max(0, head - retain_versions + 1), head + 1):
             st = self._replay(v)
             keep.update(st.live)
-            keep_dv.update(m["index"] for m in st.dv.values())
-        cks = self._list_log()[1]
+            keep.update(m["index"] for m in st.dv.values())
+        cks = _parse_listing(self._list_log())[1]
         if cks:
             ck = self._read_checkpoint(cks[-1])
             keep.update(ck["live"])
-            keep_dv.update(m["index"] for m in ck.get("dv", {}).values())
-        entries = self.entries()
-        now_ms = self._jvm.java.lang.System.currentTimeMillis()
-        deleted = []
-        all_files: set[str] = set()
+            keep.update(m["index"] for m in ck.get("dv", {}).values())
+        # every data file and DV sidecar any entry names, and the bloom
+        # sidecar that serves exactly one data file and dies with it
+        written: set[str] = set()
         bloom_index: dict[str, str] = {}
-        for e in entries:
-            all_files.update(e["add"])
+        for e in self.entries():
+            written.update(e["add"])
+            written.update(m["index"] for m in e.get("dv", {}).values())
             for rel, meta in e.get("bloom", {}).items():
                 bloom_index[rel] = meta["index"]
-        for rel in sorted(all_files - keep):
+        now_ms = self._jvm.java.lang.System.currentTimeMillis()
+        deleted = []
+        for rel in sorted(written - keep):
             p = self._P(f"{self.root}/{rel}")
             if not self._fs.exists(p):
                 continue
@@ -1266,26 +1233,6 @@ class VersionedTable:
             deleted.append(rel)
             side = bloom_index.get(rel)
             if side is not None:
-                # a bloom sidecar serves exactly one data file — it
-                # dies with it (same grace window: reached only after
-                # the data file cleared the age floor)
                 self._fs.delete(self._P(f"{self.root}/{side}"), False)
                 deleted.append(side)
-        all_dv: set[str] = set()
-        for e in entries:
-            all_dv.update(
-                m["index"] for m in e.get("dv", {}).values()
-            )
-        for side in sorted(all_dv - keep_dv):
-            p = self._P(f"{self.root}/{side}")
-            if not self._fs.exists(p):
-                continue
-            if (
-                min_age_ms > 0
-                and now_ms - self._fs.getFileStatus(p).getModificationTime()
-                < min_age_ms
-            ):
-                continue
-            self._fs.delete(p, False)
-            deleted.append(side)
         return deleted

@@ -1,13 +1,13 @@
 """Round-10 wave 66 — lakehouse tier 3: file-statistics data skipping
 (the Delta/Iceberg per-file min/max idea, now recorded in the
 transaction log by ``commit(stats_cols=…)`` and served by
-``snapshot_pruned``):
+``snapshot_pruned_ranges``):
 
 - q120 — range-clustered commits: the per-customer spend table lands
   as four append commits, each one custkey quartile (boundaries are
   literal functions of max(custkey), so the oracle states them), one
   file per commit with recorded custkey min/max. Three range probes
-  then read through ``pruned_files``: the log alone proves which
+  then read through ``pruned_files_ranges``: the log alone proves which
   files cannot match, and the oracle asserts the exact skip counts
   (1, 1, 2 of 4) alongside the value identity of the scanned rows.
 - q121 — time-sliced commits: six bimonthly 1996 slices, stats on a
@@ -79,7 +79,7 @@ def q120_file_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data skipping through log-recorded file statistics: four
     quartile-clustered append commits (one file each, custkey min/max
     in the log entry), then three range probes answered by
-    ``snapshot_pruned`` — the skip decision is made from metadata
+    ``snapshot_pruned_ranges`` — the skip decision is made from metadata
     alone, and the oracle pins BOTH the exact number of files scanned
     (1/1/2 of 4) and the scanned rows' values. The staging boundary is
     a literal function of max(custkey), so every engine states the
@@ -107,9 +107,9 @@ def q120_file_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out: DataFrame | None = None
     for name, lo, hi in probes:
-        files, total = vt.pruned_files("custkey", lo, hi)
+        files, total = vt.pruned_files_ranges({"custkey": (lo, hi)})
         agg = (
-            vt.snapshot_pruned("custkey", lo, hi)
+            vt.snapshot_pruned_ranges({"custkey": (lo, hi)})
             .agg(
                 F.count("*").cast("long").alias("n_rows"),
                 F.round(F.sum(F.col("spend").cast("decimal(18,2)")), 2)
@@ -213,9 +213,9 @@ def q121_time_sliced_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out: DataFrame | None = None
     for name, lo, hi in probes:
-        files, total = vt.pruned_files("slice_key", lo, hi)
+        files, total = vt.pruned_files_ranges({"slice_key": (lo, hi)})
         agg = (
-            vt.snapshot_pruned("slice_key", lo, hi)
+            vt.snapshot_pruned_ranges({"slice_key": (lo, hi)})
             .agg(
                 F.count("*").cast("long").alias("n_rows"),
                 F.round(

@@ -15,10 +15,7 @@
 
 Engine-checkpoint recovery (kill mid-stream, resume: no dup, no loss),
 the versionsPerBatch rate limit, and the rewrite modes are
-tests/test_dsv2_source.py. Where the python DataSource API is absent
-the face falls back to the proven ``TxnLogStream`` tailer (identical
-batch semantics — the skip-gated arm the verdict asks to keep
-visible).
+tests/test_dsv2_source.py.
 
 Reference scope: the reference's T1–T3 trigger/incremental semantics
 as a first-class Structured Streaming source — beyond-reference
@@ -44,7 +41,6 @@ from pyspark.sql.types import (
 from ..operators.txnlog import VersionedTable
 from ..sources.readers import load_table
 from ..streaming import dsv2_source
-from ..streaming.cdc_source import TxnLogStream
 from .registry import spark_query
 from .wave60 import _CUT1, _CUT2, _fresh_root, _spend
 from .wave64 import _s15_oracle
@@ -136,19 +132,6 @@ def _drain_via_readstream(
     return got[:3]
 
 
-def _drain_via_tailer(
-    spark: SparkSession, vt: VersionedTable, stages
-) -> list[tuple[int, float]]:
-    """Fallback arm (python DataSource API unavailable): the proven
-    s15 tailer over the fully staged table — identical batches."""
-    for stage in stages:
-        stage(vt)
-    return [
-        _batch_agg(batch)
-        for _v, batch in TxnLogStream(vt, on_rewrite="adds").poll()
-    ]
-
-
 @spark_query("s16_txnlog_readstream_batches", _s15_oracle())
 def s16_txnlog_readstream_batches(
     spark: SparkSession, sf_dir: str
@@ -163,10 +146,8 @@ def s16_txnlog_readstream_batches(
     Arrow batches — delta bytes only, never a full-table scan."""
     vt = VersionedTable(spark, _fresh_root("vtab-s16-"))
     stages = _commit_stages(spark, sf_dir)
-    if dsv2_source.register(spark):
-        batches = _drain_via_readstream(spark, vt, stages)
-    else:  # pragma: no cover - sandbox has DSv2
-        batches = _drain_via_tailer(spark, vt, stages)
+    dsv2_source.register(spark)
+    batches = _drain_via_readstream(spark, vt, stages)
     rows = [
         (v, _OPS[v][0], _OPS[v][1], n, s)
         for v, (n, s) in enumerate(batches)

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.txnlog import VersionedTable
+from ..operators.txnlog import BLOOM_BITS, BLOOM_K, VersionedTable
 from ..sources.readers import load_table
 from .registry import spark_query
 from .wave60 import _fresh_root
@@ -200,15 +200,13 @@ def q124_zorder_clustered_skipping(
 # q125 — bloom-filter point-lookup skipping.
 # ---------------------------------------------------------------------------
 _Q125_FILES = 8
-_Q125_BITS = 1 << 14
-_Q125_K = 2
 
 
 def _q125_hash_sql(expr: str, j: int) -> str:
     from ..operators.text import portable_hash_sql
 
     return portable_hash_sql(
-        f"'blm{j}|' || CAST({expr} AS VARCHAR)", _Q125_BITS
+        f"'blm{j}|' || CAST({expr} AS VARCHAR)", BLOOM_BITS
     )
 
 
@@ -216,12 +214,12 @@ def _q125_oracle() -> str:
     pos_arms = " UNION ALL ".join(
         f"SELECT (o_orderkey % {_Q125_FILES}) AS fid, "
         f"{_q125_hash_sql('o_orderkey', j)} AS pos FROM orders"
-        for j in range(_Q125_K)
+        for j in range(BLOOM_K)
     )
     ppos_arms = " UNION ALL ".join(
         f"SELECT probe, okey, {_q125_hash_sql('okey', j)} AS pos "
         f"FROM probes"
-        for j in range(_Q125_K)
+        for j in range(BLOOM_K)
     )
     return f"""WITH fb AS MATERIALIZED (
       SELECT DISTINCT fid, pos FROM ({pos_arms})
@@ -290,8 +288,6 @@ def q125_bloom_point_lookup_skipping(
             mode="append",
             op=f"shard-{g}",
             bloom_col="o_orderkey",
-            bloom_bits=_Q125_BITS,
-            bloom_k=_Q125_K,
         )
     lohi = src.agg(
         F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")

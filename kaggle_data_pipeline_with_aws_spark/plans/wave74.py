@@ -10,9 +10,7 @@ through the standard reader API:
   resolves through the checkpoint while v0/v1 replay entries — both
   replay paths of the pure-python reader exercised in one face. The
   ORACLE IS q114's, verbatim: the DataSource path and the JVM snapshot
-  path are proven value-equal against DuckDB. Where the python
-  DataSource API is absent the face falls back to the proven
-  ``snapshot`` reads (the s16 discipline — skip-gated arm visible).
+  path are proven value-equal against DuckDB.
 
 Scale shape: planning is log metadata only (checkpoint + tail
 entries); one InputPartition per live file keeps the scan
@@ -56,13 +54,10 @@ def q126_dsv2_batch_time_travel(
     path value-equal."""
     vt = _staged_table(spark, sf_dir)
     vt.checkpoint()  # v2 resolves via the checkpoint, v0/v1 replay
-    use_dsv2 = dsv2_source.register(spark)
+    dsv2_source.register(spark)
     out: DataFrame | None = None
     for v in (0, 1, 2):
-        snap = (
-            _as_of(spark, vt, v) if use_dsv2 else vt.snapshot(v)
-        )  # pragma: no branch - sandbox has DSv2
-        agg = _snap_agg(snap, v)
+        agg = _snap_agg(_as_of(spark, vt, v), v)
         out = agg if out is None else out.unionByName(agg)
     assert out is not None
     return out.orderBy("version")

@@ -6,8 +6,7 @@ SINK:
   (``commit(txn_app=..., txn_version=batch_id)`` — Delta's
   ``txnAppId``/``txnVersion`` contract): every micro-batch of the
   wave-68 staged source (drained through the DSv2 ``readStream``
-  source; tailer fallback where the python DataSource API is absent)
-  appends into the sink with its batch id as the transaction version.
+  source) appends into the sink with its batch id as the transaction version.
   After the stream drains, the face REPLAYS a committed batch — the
   foreachBatch retry that Structured Streaming's at-least-once sink
   contract makes every production pipeline face — with deliberately
@@ -40,7 +39,6 @@ from pyspark.sql import functions as F
 
 from ..operators.txnlog import VersionedTable
 from ..streaming import dsv2_source
-from ..streaming.cdc_source import TxnLogStream
 from .registry import spark_query
 from .wave60 import _RESUM_SQL, _fresh_root
 from .wave68 import _commit_stages
@@ -104,15 +102,6 @@ def _drain_into_sink_readstream(
         q.stop()
 
 
-def _drain_into_sink_tailer(
-    spark: SparkSession, src: VersionedTable, sink: VersionedTable, stages
-) -> None:  # pragma: no cover - sandbox has DSv2
-    for stage in stages:
-        stage(src)
-    for v, batch in TxnLogStream(src, on_rewrite="adds").poll():
-        _sink_batch(sink, batch, v)
-
-
 @spark_query("s17_exactly_once_txn_sink", _s17_oracle())
 def s17_exactly_once_txn_sink(
     spark: SparkSession, sf_dir: str
@@ -127,10 +116,8 @@ def s17_exactly_once_txn_sink(
     src = VersionedTable(spark, _fresh_root("vtab-s17-src-"))
     sink = VersionedTable(spark, _fresh_root("vtab-s17-sink-"))
     stages = _commit_stages(spark, sf_dir)
-    if dsv2_source.register(spark):
-        _drain_into_sink_readstream(spark, src, sink, stages)
-    else:  # pragma: no cover - sandbox has DSv2
-        _drain_into_sink_tailer(spark, src, sink, stages)
+    dsv2_source.register(spark)
+    _drain_into_sink_readstream(spark, src, sink, stages)
     last_bid = sink.last_txn_version(_APP)
     # the foreachBatch retry: same (app, version), WRONG data — the
     # high-water mark alone must reject it

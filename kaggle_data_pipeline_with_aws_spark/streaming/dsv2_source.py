@@ -3,9 +3,9 @@ verdict #2): the ``TxnLogStream`` tailer (streaming/cdc_source.py) is a
 driver-side python loop; production consumers expect
 ``spark.readStream.format(...)`` with engine-managed checkpoints. This
 module wraps the same log-tail semantics in Spark 4's Python
-DataSource V2 streaming API (``pyspark.sql.datasource``), so the
-micro-batch boundaries, offsets, recovery, and rate limiting are all
-the ENGINE's:
+DataSource V2 streaming API (``pyspark.sql.datasource`` — required;
+there is no fallback for older runtimes), so the micro-batch
+boundaries, offsets, recovery, and rate limiting are all the ENGINE's:
 
 - **Offset = committed version.** The stream's offset is one integer
   (``{"version": N}`` — "everything through N consumed"), exactly the
@@ -39,12 +39,16 @@ the ENGINE's:
   them (``skipChangeCommits=true``).
 
 I/O note: the DataSource and its executors-side readers run in plain
-Python processes with NO JVM access, so this module reads the log with
-``os``/``json`` and the data files with ``pyarrow`` — correct for
-local and ``file://`` roots (this sandbox, single-box deployments).
-A cloud deployment points the same class at an fsspec-backed
-filesystem; the JVM-Hadoop-FS path stays the batch/tailer face's job
-(operators/txnlog.py). Schema evolution across the streamed window is
+Python processes with NO JVM access, so ``_PyLog`` does only local IO —
+it lists ``_txn`` and reads JSON files with ``os`` — and the data files
+are read with ``pyarrow``; correct for local and ``file://`` roots
+(this sandbox, single-box deployments). Replaying the log is NOT done
+here: ``_PyLog`` hands its listing and reader to
+``operators.txnlog.replay_log``, the same checkpoint-plus-tail fold
+``VersionedTable`` runs, so the two readers cannot disagree on a live
+set, schema or deletion vector. A cloud deployment points ``_PyLog``
+at an fsspec-backed filesystem; the JVM-Hadoop-FS path stays the
+batch/tailer face's job. Schema evolution across the streamed window is
 refused loudly (a missing column raises in the reader): a streaming
 schema is fixed at query start, so evolve-then-stream consumers
 restart the query — the documented Structured Streaming contract.
@@ -52,8 +56,8 @@ restart the query — the documented Structured Streaming contract.
 The same DataSource also carries the BATCH face (round 11):
 ``spark.read.format("txnlog").option("version", N)`` is snapshot/time
 travel through the standard reader API — ``partitions()`` replays the
-log (checkpoint-based, O(tail) like ``VersionedTable``) to the
-version's live file set and each file reads as Arrow batches.
+log to the version's live file set and deletion vectors, and each file
+reads as Arrow batches.
 
 Registry faces: s16 (plans/wave68.py) proves batch-for-batch equality
 with the s15 tailer over the same staged table through the DuckDB
@@ -67,38 +71,16 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import StructType
 
-_ENTRY_RE = re.compile(r"^\d{8}\.json$")
-_CHECKPOINT_RE = re.compile(r"^chk-\d{8}\.json$")
-
-try:  # Spark 4's python DataSource API; absent on older runtimes
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    HAVE_DSV2 = True
-except ImportError:  # pragma: no cover - older pyspark fallback
-    HAVE_DSV2 = False
-
-    class DataSource:  # type: ignore[no-redef]
-        def __init__(self, options=None):
-            self.options = options or {}
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceStreamReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        def __init__(self, value=None):
-            self.value = value
+from ..operators.txnlog import read_plan, replay_log
 
 
 def _local_root(path: str) -> str:
@@ -115,102 +97,37 @@ def _local_root(path: str) -> str:
 
 
 class _PyLog:
-    """Minimal pure-python (worker-safe) reader of the transaction-log
-    layout ``operators/txnlog.py`` writes: listing-only head polls,
-    O(window) entry reads. Read side only — ALL writes stay with
-    ``VersionedTable`` (single protocol owner)."""
+    """Worker-safe local IO on a ``VersionedTable`` root: list ``_txn``
+    and read a JSON file, with ``os``. Everything else — the head, the
+    checkpoint-plus-tail read plan, the add/remove fold — is
+    ``operators.txnlog``'s, shared with ``VersionedTable``. Read side
+    only: ALL writes stay with ``VersionedTable`` (single protocol
+    owner)."""
 
     def __init__(self, root: str):
         self.root = _local_root(root).rstrip("/")
-        self.log_dir = os.path.join(self.root, "_txn")
+
+    def _names(self) -> list[str]:
+        log_dir = os.path.join(self.root, "_txn")
+        return os.listdir(log_dir) if os.path.isdir(log_dir) else []
+
+    def read(self, rel: str) -> dict:
+        """The parsed JSON file at root-relative ``rel``."""
+        with open(os.path.join(self.root, rel)) as fh:
+            return json.load(fh)
 
     def current_version(self) -> int:
-        if not os.path.isdir(self.log_dir):
-            return -1
-        names = [
-            n for n in os.listdir(self.log_dir) if _ENTRY_RE.match(n)
-        ]
-        return max((int(n[:8]) for n in names), default=-1)
+        return read_plan(self._names(), None)[1]
 
-    def entry(self, version: int) -> dict:
-        with open(os.path.join(self.log_dir, f"{version:08d}.json")) as fh:
-            return json.load(fh)
-
-    def schema_at_head(self) -> StructType:
-        head = self.current_version()
-        if head < 0:
+    def state(self, version: int | None):
+        """The table's replayed state at ``version`` (default: head;
+        past the head clamps to it)."""
+        st = replay_log(
+            self._names(), lambda name: self.read(f"_txn/{name}"), version
+        )
+        if st.schema is None:
             raise ValueError(f"empty transaction log under {self.root!r}")
-        return StructType.fromJson(json.loads(self.entry(head)["schema"]))
-
-    # -- snapshot replay (batch reads) ---------------------------------
-    def _checkpoint_versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            int(n[4:12])
-            for n in os.listdir(self.log_dir)
-            if _CHECKPOINT_RE.match(n)
-        )
-
-    def _checkpoint(self, v: int) -> dict:
-        with open(
-            os.path.join(self.log_dir, f"chk-{v:08d}.json")
-        ) as fh:
-            return json.load(fh)
-
-    def _base_and_tail(
-        self, version: int | None
-    ) -> tuple[dict | None, list[dict]]:
-        """(checkpoint state or None, tail entries) — the same O(tail)
-        read plan ``VersionedTable._base_and_tail`` resolves; versions
-        past the head clamp to it."""
-        head = self.current_version()
-        if version is not None:
-            head = min(int(version), head)
-        if head < 0:
-            raise ValueError(
-                f"empty transaction log under {self.root!r}"
-            )
-        base = max(
-            (c for c in self._checkpoint_versions() if c <= head),
-            default=None,
-        )
-        ck = self._checkpoint(base) if base is not None else None
-        return ck, [
-            self.entry(v)
-            for v in range((base if base is not None else -1) + 1,
-                           head + 1)
-        ]
-
-    def live_files(self, version: int | None = None) -> list[str]:
-        ck, tail = self._base_and_tail(version)
-        live: set[str] = set(ck["live"]) if ck else set()
-        for e in tail:
-            live.difference_update(e["remove"])
-            live.update(e["add"])
-        return sorted(live)
-
-    def file_dvs(self, version: int | None = None) -> dict[str, dict]:
-        """Live-file → deletion-vector pointer at ``version`` — the
-        pure-python twin of ``VersionedTable.file_dvs`` (a batch read
-        that ignored DVs would resurrect deleted rows)."""
-        ck, tail = self._base_and_tail(version)
-        dvs: dict[str, dict] = dict(ck.get("dv", {})) if ck else {}
-        for e in tail:
-            for rel in e["remove"]:
-                dvs.pop(rel, None)
-            for rel, meta in e.get("dv", {}).items():
-                dvs[rel] = meta
-        return dvs
-
-    def dv_positions(self, rel_index: str) -> list[int]:
-        with open(os.path.join(self.root, rel_index)) as fh:
-            return [int(p) for p in json.load(fh)["positions"]]
-
-    def schema_at(self, version: int | None = None) -> StructType:
-        ck, tail = self._base_and_tail(version)
-        sj = tail[-1]["schema"] if tail else ck["schema"]
-        return StructType.fromJson(json.loads(sj))
+        return st
 
 
 class RewriteCommitInStreamError(RuntimeError):
@@ -302,7 +219,7 @@ class TxnLogStreamReader(DataSourceStreamReader):
         self._last = v1
         parts: list[_FilePartition] = []
         for v in range(v0 + 1, v1 + 1):
-            e = self.log.entry(v)
+            e = self.log.read(f"_txn/{v:08d}.json")
             if e["remove"]:
                 if self.on_rewrite == "fail":
                     raise RewriteCommitInStreamError(
@@ -351,20 +268,17 @@ class TxnLogBatchReader(DataSourceReader):
         self.version = version
 
     def partitions(self):
-        files = self.log.live_files(self.version)
-        dvs = self.log.file_dvs(self.version)
-        parts = []
-        for rel in files:
-            meta = dvs.get(rel)
-            parts.append(
-                _FilePartition(
-                    os.path.join(self.log.root, rel),
-                    self.schema_json,
-                    self.log.dv_positions(meta["index"])
-                    if meta is not None
-                    else None,
-                )
+        st = self.log.state(self.version)
+        parts = [
+            _FilePartition(
+                os.path.join(self.log.root, rel),
+                self.schema_json,
+                self.log.read(st.dv[rel]["index"])["positions"]
+                if rel in st.dv
+                else None,
             )
+            for rel in st.live
+        ]
         return parts or [_FilePartition("", self.schema_json)]
 
     def read(self, partition):
@@ -405,9 +319,9 @@ class TxnLogDataSource(DataSource):
         # (a later schema-evolution commit must not leak backwards);
         # for streams the pinned head IS the stream-start schema — the
         # fixed-streaming-schema contract unchanged.
-        return _PyLog(self.options["path"]).schema_at(
+        return _PyLog(self.options["path"]).state(
             self._resolved_version()
-        )
+        ).schema
 
     def reader(self, schema: StructType):
         return TxnLogBatchReader(
@@ -418,13 +332,6 @@ class TxnLogDataSource(DataSource):
         return TxnLogStreamReader(schema, dict(self.options))
 
 
-def register(spark) -> bool:
-    """Idempotently register the source; False when the runtime lacks
-    the python DataSource API (callers fall back to the driver-side
-    ``TxnLogStream`` tailer — same batch semantics, proven equal by
-    s16's fallback arm). On a runtime that has the API, a registration
-    failure raises."""
-    if not HAVE_DSV2:
-        return False
+def register(spark) -> None:
+    """Idempotently register the source with ``spark``."""
     spark.dataSource.register(TxnLogDataSource)
-    return True

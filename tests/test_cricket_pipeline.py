@@ -171,15 +171,20 @@ def test_incremental_pipeline_and_ledger(spark, landing, tmp_path):
 
 
 def test_steady_state_cycle_cost(spark, landing, tmp_path, monkeypatch):
-    """The second cycle of ten files builds no DataFrame from Python
-    data (so it starts no Python worker), launches at most 26 Spark
-    jobs, and adds one ledger file. Snapshot reads of its three tables
-    run no job, and their logged schema is the one Spark would infer
-    from the files."""
+    """Neither the first cycle of ten files nor the second builds a
+    DataFrame from Python data (so neither starts a Python worker); the
+    second launches at most 26 Spark jobs and adds one ledger file.
+    Snapshot reads of its three tables run no job, and their logged
+    schema is the one Spark would infer from the files."""
     from pyspark.sql import SparkSession
 
+    def no_python_frames(*args, **kwargs):
+        raise AssertionError("the cycle built a DataFrame from Python data")
+
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_frames)
     run_incremental(spark, landing, state, out, max_files_per_cycle=10)
+    monkeypatch.undo()
     sc = spark.sparkContext
 
     def jobs_under(group, fn):
@@ -190,9 +195,6 @@ def test_steady_state_cycle_cost(spark, landing, tmp_path, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
         spark._jsc.sc().listenerBus().waitUntilEmpty()
         return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    def no_python_frames(*args, **kwargs):
-        raise AssertionError("the cycle built a DataFrame from Python data")
 
     def second_cycle():
         r = run_incremental(spark, landing, state, out, max_files_per_cycle=10)

@@ -81,11 +81,11 @@ def test_commit_log_is_atomic_and_claims_version_slot(spark, vt):
     with pytest.raises(Exception, match="FileAlreadyExistsException"):
         vt._fc.rename(
             vt._P(f"{vt.log_dir}/.tmp-race"),
-            vt._P(vt._entry_path(0)),
+            vt._P(f"{vt.log_dir}/00000000.json"),
             vt._rename_none,
         )
     # the losing writer's entry never became visible
-    with open(vt._entry_path(0)) as fh:
+    with open(f"{vt.log_dir}/00000000.json") as fh:
         e = json.load(fh)
     assert e["version"] == 0 and e["add"]
 
@@ -125,7 +125,7 @@ def test_concurrent_commits_one_wins_per_slot_loser_retries(spark, vt):
 def test_corrupt_entry_raises_loudly(spark, vt):
     vt.commit(_df(spark, [(1, "a")]), "overwrite")
     # damage the entry OUTSIDE the protocol (truncate to zero bytes)
-    with open(vt._entry_path(0), "w"):
+    with open(f"{vt.log_dir}/00000000.json", "w"):
         pass
     with pytest.raises(ValueError, match="corrupt transaction-log entry"):
         vt.entries()
@@ -289,10 +289,12 @@ def test_file_stats_and_pruning_contract(spark, vt):
     assert sorted(r["k"] for r in ranged) == [
         [0, 9], [100, 109], [200, 209],
     ]
-    files, total = vt.pruned_files("k", 100, 109)
+    files, total = vt.pruned_files_ranges({"k": (100, 109)})
     assert total == 4
     assert len(files) == 2  # the matching slice + the stats-less file
-    got = sorted(r.k for r in vt.snapshot_pruned("k", 100, 109).collect())
+    got = sorted(
+        r.k for r in vt.snapshot_pruned_ranges({"k": (100, 109)}).collect()
+    )
     want = sorted(
         r.k for r in vt.snapshot().filter(
             (F.col("k") >= 100) & (F.col("k") <= 109)
@@ -300,7 +302,7 @@ def test_file_stats_and_pruning_contract(spark, vt):
     )
     assert got == want
     # unbounded ends
-    files_lo, _ = vt.pruned_files("k", None, 9)
+    files_lo, _ = vt.pruned_files_ranges({"k": (None, 9)})
     assert len(files_lo) == 2
     # overwrite drops the old stats with the old files
     vt.commit(
@@ -456,7 +458,9 @@ def test_stats_skip_non_order_preserving_types(spark, vt):
     stats = list(vt.file_stats().values())[0]
     assert "k" in stats and "ts" not in stats
     # pruning on the unrecorded column keeps every file
-    files, total = vt.pruned_files("ts", "1990-01-01", "1990-12-31")
+    files, total = vt.pruned_files_ranges(
+        {"ts": ("1990-01-01", "1990-12-31")}
+    )
     assert len(files) == total == 1
 
 
@@ -473,13 +477,13 @@ def test_pruning_cross_type_bounds_keep_files(spark, vt):
         stats_cols=["m", "k"],
     )
     # int bounds against string stats: kept, no TypeError
-    files, total = vt.pruned_files("m", 5, 10)
+    files, total = vt.pruned_files_ranges({"m": (5, 10)})
     assert len(files) == total == 1
     # string bounds against int stats: kept, no TypeError
-    files2, _ = vt.pruned_files("k", "a", "z")
+    files2, _ = vt.pruned_files_ranges({"k": ("a", "z")})
     assert len(files2) == 1
     # same-type bounds still prune
-    files3, _ = vt.pruned_files("m", "2025-01", "2025-12")
+    files3, _ = vt.pruned_files_ranges({"m": ("2025-01", "2025-12")})
     assert files3 == []
 
 
@@ -646,12 +650,21 @@ def test_delete_where_filters_without_rewriting_files(spark):
     assert len(dvs) == 2 and all(m["n"] == 5 for m in dvs.values())
 
 
-def test_snapshot_with_dvs_runs_no_job_and_keeps_file_schema(spark):
+def test_snapshot_with_dvs_runs_no_job_and_keeps_file_schema(
+    spark, monkeypatch
+):
     """A snapshot is planned from the log alone: no footer-inference
     job, even with a deletion vector to apply, and the logged schema
-    is the one Spark would infer from the files."""
+    is the one Spark would infer from the files. Reading it builds no
+    frame from Python data, so it starts no Python worker."""
+    from pyspark.sql import SparkSession
+
+    def no_python_frames(*args, **kwargs):
+        raise AssertionError("the read built a DataFrame from Python data")
+
     vt = _dv_vt(spark)
     vt.commit_delete_where("k % 2 = 0")
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_frames)
     sc = spark.sparkContext
     sc.setJobGroup("txnlog-snapshot-read", "snapshot read")
     try:
@@ -715,7 +728,7 @@ def test_delete_pruned_and_bloom_reads_apply_dvs(spark):
     )
     vt.commit_delete_where("k = 7")
     assert sorted(
-        r.k for r in vt.snapshot_pruned("k", 5, 9).collect()
+        r.k for r in vt.snapshot_pruned_ranges({"k": (5, 9)}).collect()
     ) == [5, 6, 8, 9]
     assert vt.snapshot_bloom("k", 7).count() == 0
     assert vt.snapshot_bloom("k", 8).count() == 1

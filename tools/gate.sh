@@ -14,8 +14,10 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 fail=0
 
-echo "=== gate 1/2: pytest (includes the sf0.001 oracle check of every query) ==="
-python -m pytest tests/ -x -q || fail=1
+echo "=== gate 1/2: tier-1 pytest (includes the sf0.001 oracle check of every query) ==="
+# The tier-1 command as ROADMAP.md states it, verbatim, so the gate and
+# tier-1 cannot disagree; any failure still fails the gate.
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider || fail=1
 
 echo "=== gate 2/2: full oracle correctness at ${SF_DIR} ==="
 python tools/check_correctness.py "${SF_DIR}" > /tmp/gate_correctness.out \
