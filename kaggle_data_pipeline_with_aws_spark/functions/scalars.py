@@ -42,11 +42,6 @@ def reformat_date(
     return F.date_format(F.to_date(_c(col), in_fmt), out_fmt)
 
 
-# F5 — timestamp format for messages (utils.py:34-35,51-52)
-def now_formatted(fmt: str = "dd-MM-yyyy HH:mm:ss") -> Column:
-    return F.date_format(F.current_timestamp(), fmt)
-
-
 # F6 — coalesce / null-default (extract_matchwise...py:71: winner or
 # result; extract_deliverywise...py:159-169: .get(k, 0))
 def coalesce(*cols: str | Column) -> Column:
@@ -74,15 +69,6 @@ def second_element(col: str | Column) -> Column:
     return F.try_element_at(_c(col), F.lit(2))
 
 
-# F10/F11 — casts (int(match_type_number), astype(str))
-def to_int(col: str | Column) -> Column:
-    return _c(col).cast("int")
-
-
-def to_string(col: str | Column) -> Column:
-    return _c(col).cast("string")
-
-
 # F12 — equality-derived boolean (cell 17: toss_winner == winner)
 def eq_flag(left: str | Column, right: str | Column) -> Column:
     return _c(left) == _c(right)
@@ -101,8 +87,10 @@ def recode_bool(
 
 
 # F15 — filename → key parse (utils.py:101: splitext(basename(key))[0])
-def file_id_from_name(pattern: str = r"(\d+)\.json$") -> Column:
-    return F.regexp_extract(F.input_file_name(), pattern, 1).cast("int")
+def file_id_from_name() -> Column:
+    """``match_id`` from the scanned file's name (``<digits>.json``)."""
+    name = F.input_file_name()
+    return F.regexp_extract(name, r"(\d+)\.json$", 1).cast("int")
 
 
 # F16 — string endswith (download...py:90)

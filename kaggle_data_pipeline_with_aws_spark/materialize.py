@@ -9,8 +9,8 @@ key (:47-55). Its accidental double evaluation of the matchwise pipeline
 computed once and reused.
 
 Scale notes:
-- ``match_number`` uses the two-stage prefix-sum renumber operator, not
-  a single-partition window.
+- ``match_number`` comes from ``renumber.contiguous_row_number``'s
+  quantile-bucketed global scan, not a single-partition window.
 - The deliverywise enrich join broadcasts the (match_id, match_number)
   projection — header-table-sized.
 - Published CSV order is part of the artifact (convert...py:43,54):

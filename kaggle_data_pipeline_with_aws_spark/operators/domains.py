@@ -145,12 +145,6 @@ def _parse_psl_rules(
     return srt(normal), srt(wild), srt(exc)
 
 
-def psl_max_depth(rules: Sequence[str]) -> int:
-    """Deepest label count any rule in ``rules`` can match at."""
-    normal, wild, exc = _parse_psl_rules(rules)
-    return max([*normal, *wild, *exc], default=1)
-
-
 def psl_registrable_py(
     host: str | None, rules: Sequence[str], default_rule: bool = True
 ) -> str | None:

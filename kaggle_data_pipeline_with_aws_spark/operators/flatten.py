@@ -10,9 +10,8 @@ lateral views — fully parallel across matches and whole-stage-codegen'd,
 no Python in the hot path.
 
 Scale: the unit of parallelism is the match document; explode multiplies
-rows within a partition without shuffling. The only shuffle in
-``matchwise()`` is the per-(match, team) run aggregation, done on
-already-flat rows with map-side partial aggregation.
+rows within a partition without shuffling. ``matchwise()`` is map-only:
+its per-team totals fold the nested arrays in place (``_runs_scored_by``).
 """
 
 from __future__ import annotations
@@ -102,31 +101,6 @@ def composite_delivery_key(deliveries: DataFrame) -> DataFrame:
         F.concat_ws(
             "-", "match_id", "innings_number", "over_number", "ball_number"
         ),
-    )
-
-
-def team_totals(raw: DataFrame) -> DataFrame:
-    """A1: total runs per (match, batting team) — the nested sum of
-    extract_matchwise...py:85-98 — as a higher-order array aggregate.
-
-    No explode, no shuffle: ``F.aggregate`` folds the nested
-    innings→overs→deliveries arrays per match row, entirely within
-    whole-stage codegen. Returns one row per (match_id, team).
-    """
-    per_inning = raw.select(
-        "match_id",
-        F.explode("innings").alias("inning"),
-    ).select(
-        "match_id",
-        F.col("inning.team").alias("team"),
-        F.aggregate(
-            F.flatten("inning.overs.deliveries"),
-            F.lit(0),
-            lambda acc, d: acc + F.coalesce(d["runs"]["total"], F.lit(0)),
-        ).alias("runs"),
-    )
-    return per_inning.groupBy("match_id", "team").agg(
-        F.sum("runs").cast("int").alias("total_runs")
     )
 
 

@@ -511,12 +511,17 @@ class VersionedTable:
             raise ValueError(
                 "txn_app and txn_version must be passed together"
             )
-        if txn_app is not None and (
-            self.last_txn_version(txn_app) >= txn_version
-        ):
-            # already applied (a replayed micro-batch / retried job):
-            # skip before writing any bytes — the idempotent fast path
-            return self.current_version()
+        if txn_app is not None:
+            # ``seen``: the version the app's high-water mark is
+            # checked through
+            names = self._list_log()
+            seen = read_plan(names, None)[1]
+            st = replay_log(names, self._read_log, None)
+            if st.txn.get(txn_app, -1) >= txn_version:
+                # already applied (a replayed micro-batch / retried
+                # job): skip before writing any bytes — the idempotent
+                # fast path
+                return seen
         if bloom_col is not None:
             ftype = dict(df.dtypes).get(bloom_col)
             if ftype not in ("bigint", "int", "smallint", "tinyint",
@@ -613,7 +618,21 @@ class VersionedTable:
                     bloom[rel] = {"col": bloom_col, "index": side_rel}
         schema_json = df.schema.json()
 
-        def build(version: int) -> dict:
+        def build(version: int) -> dict | None:
+            nonlocal seen
+            if txn_app is not None:
+                # Transactional write (Delta's txnAppId/txnVersion
+                # contract): re-check the app's high-water mark on the
+                # entries committed since the last check, so two
+                # writers replaying the same (app, version) can never
+                # both land, whatever the interleaving.
+                since = self._tail_entries(seen, version - 1)
+                seen = version - 1
+                if any(
+                    e.get("txn", {}).get(txn_app, -1) >= txn_version
+                    for e in since
+                ):
+                    return None
             return {
                 "version": version,
                 "op": op or mode,
@@ -628,35 +647,16 @@ class VersionedTable:
                 ),
             }
 
-        if txn_app is None:
-            return self._publish_entry(build, read_version)
-
-        # Transactional write (Delta's txnAppId/txnVersion contract):
-        # the app's high-water mark is re-checked against the head the
-        # publish is pinned to, so every lost slot race forces a
-        # re-check — two writers replaying the same (app, version) can
-        # never both land, whatever the interleaving.
-        def attempt(head: int) -> int:
-            if self.last_txn_version(txn_app) >= txn_version:
-                # a concurrent replay already applied it AFTER this
-                # call wrote its files: reclaim the never-referenced
-                # bytes (no log entry points at them, so vacuum would
-                # never find them)
-                self._fs.delete(self._P(commit_dir), True)
-                for meta in bloom.values():
-                    self._fs.delete(
-                        self._P(f"{self.root}/{meta['index']}"), False
-                    )
-                return head
-            return self._publish_entry(
-                build, head if read_version is None else read_version
-            )
-
-        if read_version is not None:
-            # the caller's snapshot is stale once the head moves: a
-            # conflict propagates for the caller to recompute
-            return attempt(self.current_version())
-        return self._recompute(attempt, "transactional commit")
+        version = self._publish_entry(build, read_version)
+        if version is not None:
+            return version
+        # a concurrent replay already applied it AFTER this call wrote
+        # its files: reclaim the never-referenced bytes (no log entry
+        # points at them, so vacuum would never find them)
+        self._fs.delete(self._P(commit_dir), True)
+        for meta in bloom.values():
+            self._fs.delete(self._P(f"{self.root}/{meta['index']}"), False)
+        return seen
 
     def last_txn_version(self, app: str) -> int:
         """Highest ``txn_version`` committed by ``app`` (-1 when the
@@ -667,14 +667,18 @@ class VersionedTable:
         ``file_stats``."""
         return self._replay(None).txn.get(app, -1)
 
-    def _publish_entry(self, build, read_version: int | None = None) -> int:
+    def _publish_entry(
+        self, build, read_version: int | None = None
+    ) -> int | None:
         """The slot-claim loop: resolve the next version, run
         ``build(version)`` to produce the entry (re-resolved per
-        attempt, so state-dependent fields like overwrite removes see
-        the new head), publish it. A transaction carrying
-        ``read_version`` raises ``ConcurrentModificationError`` the
-        moment the head is found past it — the stale result is never
-        committed."""
+        attempt, so state-dependent fields like overwrite removes and
+        a transactional write's high-water re-check see the new head),
+        publish it. ``build`` returns None when the commit is no longer
+        needed (its transaction landed meanwhile); so does this. A
+        transaction carrying ``read_version`` raises
+        ``ConcurrentModificationError`` the moment the head is found
+        past it — the stale result is never committed."""
         for _ in range(_MAX_COMMIT_ATTEMPTS):
             version = self.current_version() + 1
             if read_version is not None and version != read_version + 1:
@@ -685,8 +689,10 @@ class VersionedTable:
                     "snapshot-derived result would drop the "
                     "interleaved commit (recompute and retry)"
                 )
-            entry = json.dumps(build(version))
-            if self._publish(f"{version:08d}.json", entry):
+            entry = build(version)
+            if entry is None:
+                return None
+            if self._publish(f"{version:08d}.json", json.dumps(entry)):
                 return version
             # lost the slot to a concurrent writer: retry against the
             # new head (overwrite removes re-resolve there)

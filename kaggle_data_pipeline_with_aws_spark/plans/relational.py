@@ -410,12 +410,8 @@ def q16_multikey_sort_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q17_global_renumber(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    # accuracy=1_000: the boundary sketch only balances buckets (any
-    # monotone cut is correct), and the r4 bench regression traced to
-    # the boundary job's cost/variance — see BENCH_SCALING.md (q17
-    # re-pin, round 5).
     return contiguous_row_number(
-        o, ["o_orderdate", "o_orderkey"], out_col="order_seq", accuracy=1_000
+        o, ["o_orderdate", "o_orderkey"], out_col="order_seq"
     ).select("order_seq", "o_orderkey", "o_orderdate")
 
 

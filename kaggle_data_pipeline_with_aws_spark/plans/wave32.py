@@ -494,7 +494,7 @@ def d139_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = d.agg(F.count("*").alias("total"))
     ranked = contiguous_row_number(
-        d, [F.col("tok_n"), F.col("doc_id")], out_col="rk", accuracy=1_000
+        d, [F.col("tok_n"), F.col("doc_id")], out_col="rk"
     )
     dec = (
         ranked.crossJoin(F.broadcast(total))
@@ -516,5 +516,4 @@ def d139_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec,
         [F.col("ordkey"), F.col("doc_id")],
         out_col="curriculum_pos",
-        accuracy=1_000,
     ).select("doc_id", "tok_n", "decile", "curriculum_pos")

@@ -150,34 +150,6 @@ MATCHWISE_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Deliverywise table (20 cols, _lambdas/constants.py:19-40; composite key
-# kept internal per extract_deliverywise...py:76-78, dropped pre-publish).
-# ---------------------------------------------------------------------------
-
-DELIVERYWISE_COLUMNS = [
-    "match_id",
-    "innings_number",
-    "batting_team",
-    "bowling_team",
-    "over_number",
-    "ball_number",
-    "batter",
-    "bowler",
-    "non_striker",
-    "wide_runs",
-    "leg_bye_runs",
-    "bye_runs",
-    "no_ball_runs",
-    "penalty_runs",
-    "batsman_runs",
-    "extra_runs",
-    "total_runs",
-    "player_dismissed",
-    "dismissal_type",
-    "fielder_name",
-]
-
-# ---------------------------------------------------------------------------
 # File-processing ledger (DynamoDB table in the reference:
 # aws/mens_t20i_dataset_stack.py:53-62, utils.py:74-89).
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions.scalars import file_id_from_name
+
 TABLES = (
     "region",
     "nation",
@@ -66,7 +68,6 @@ def read_json_documents(
     spark: SparkSession,
     path: str | list[str],
     schema: StructType,
-    id_pattern: str = r"(\d+)\.json$",
 ) -> DataFrame:
     """Scan a directory of per-match JSON documents with an explicit schema.
 
@@ -80,10 +81,7 @@ def read_json_documents(
         spark.read.schema(schema)
         .option("multiLine", True)
         .json(path)
-        .withColumn(
-            "match_id",
-            F.regexp_extract(F.input_file_name(), id_pattern, 1).cast("int"),
-        )
+        .withColumn("match_id", file_id_from_name())
     )
 
 

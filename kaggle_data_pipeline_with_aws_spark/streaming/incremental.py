@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.scalars import epoch_micros
+from ..functions.scalars import epoch_micros, file_id_from_name
 from ..operators import flatten
 from ..operators.txnlog import VersionedTable
 from ..schemas import CRICSHEET_MATCH_SCHEMA
@@ -46,7 +46,6 @@ def read_match_stream(
     spark: SparkSession,
     landing_dir: str,
     max_files_per_trigger: int = 10,
-    id_pattern: str = r"(\d+)\.json$",
 ) -> DataFrame:
     """Streaming scan of the landing zone (one multiline JSON per match).
 
@@ -60,10 +59,7 @@ def read_match_stream(
         .option("multiLine", True)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(landing_dir)
-        .withColumn(
-            "match_id",
-            F.regexp_extract(F.input_file_name(), id_pattern, 1).cast("int"),
-        )
+        .withColumn("match_id", file_id_from_name())
     )
 
 

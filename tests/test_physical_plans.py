@@ -475,4 +475,4 @@ def test_s08_running_max_stays_distributed(spark, sf_dir):
     df = QUERIES["s08_late_event_audit"](spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(__rbucket" in plan
+    assert "hashpartitioning(__bucket" in plan

@@ -9,10 +9,12 @@ values, empty/short strings, non-ascii-adjacent chars, whitespace runs.
 from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kaggle_data_pipeline_with_aws_spark.operators.renumber import (
     contiguous_row_number,
+    global_running_max,
 )
 from kaggle_data_pipeline_with_aws_spark.operators.text import (
     HASH_MOD,
@@ -53,6 +55,29 @@ def test_contiguous_row_number_is_dense_and_order_consistent(
     assert sorted(r.rn for r in out) == list(range(1, len(rows) + 1))
     by_rn = sorted(out, key=lambda r: r.rn)
     assert [(r.v, r.k) for r in by_rn] == sorted(rows)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 50),
+            st.integers(0, 2**31),
+            st.none() | st.integers(-100, 100),
+        ),
+        min_size=1,
+        max_size=60,
+        unique_by=lambda t: t[1],
+    )
+)
+def test_global_running_max_matches_single_window(spark_session, rows):
+    df = spark_session.createDataFrame(rows, "v INT, k LONG, x INT")
+    got = global_running_max(df, ["v", "k"], "x", out_col="m")
+    w = Window.orderBy("v", "k").rowsBetween(Window.unboundedPreceding, -1)
+    want = df.withColumn("m", F.max("x").over(w))
+    assert sorted((r.k, r.m) for r in got.collect()) == sorted(
+        (r.k, r.m) for r in want.collect()
+    )
 
 
 @settings(max_examples=8, deadline=None)

@@ -11,7 +11,9 @@ from kaggle_data_pipeline_with_aws_spark.operators.packing import (
     next_fit_pack,
 )
 from kaggle_data_pipeline_with_aws_spark.operators.renumber import (
+    contiguous_row_number,
     global_prefix_sum,
+    global_running_max,
 )
 
 
@@ -55,6 +57,51 @@ def test_global_prefix_sum_matches_single_window(spark):
     want = df.withColumn("cum", F.sum("w").over(w).cast("long"))
     assert sorted((r.id, r.cum) for r in got.collect()) == sorted(
         (r.id, r.cum) for r in want.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "scan, window_fn, frame_end",
+    [
+        (
+            lambda df, ob: contiguous_row_number(df, ob, out_col="o"),
+            F.row_number,
+            None,
+        ),
+        (
+            lambda df, ob: global_prefix_sum(df, ob, "w", out_col="o"),
+            lambda: F.sum("w"),
+            0,
+        ),
+        (
+            lambda df, ob: global_running_max(df, ob, "w", out_col="o"),
+            lambda: F.max("w"),
+            -1,
+        ),
+    ],
+    ids=["contiguous_row_number", "global_prefix_sum", "global_running_max"],
+)
+def test_global_scan_binary_leading_key_matches_single_window(
+    spark, scan, window_fn, frame_end
+):
+    """A binary leading key has no numeric surrogate: the scan runs as
+    one bucket, which must equal the single global window."""
+    import random
+
+    rng = random.Random(11)
+    data = [
+        (i, None if i % 37 == 0 else bytes([rng.randint(0, 9)] * 2),
+         rng.randint(-50, 50))
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(data, "id LONG, kb BINARY, w LONG")
+    w = Window.orderBy("kb", "id")
+    if frame_end is not None:
+        w = w.rowsBetween(Window.unboundedPreceding, frame_end)
+    want = df.withColumn("o", window_fn().over(w))
+    got = scan(df, ["kb", "id"])
+    assert sorted((r.id, r.o) for r in got.collect()) == sorted(
+        (r.id, r.o) for r in want.collect()
     )
 
 

@@ -909,6 +909,35 @@ def test_txn_loser_reclaims_orphan_files(spark, vt):
     assert len(sides) == 1
 
 
+def test_txn_commit_lists_the_log_once_per_slot_attempt(spark, vt):
+    """An uncontended transactional commit replays the log once for its
+    up-front skip check; the slot attempt then lists once more and reads
+    only the entries committed since that check (none here). A plain
+    append lists once and reads no entry."""
+    for k in range(3):
+        vt.commit(_df(spark, [(k, "x")]), "append")
+    calls = {"list": 0, "read": 0}
+
+    def counted(name, key):
+        real = getattr(vt, name)
+
+        def wrapper(*args):
+            calls[key] += 1
+            return real(*args)
+
+        setattr(vt, name, wrapper)
+
+    counted("_list_log", "list")
+    counted("_read_log", "read")
+    assert vt.commit(
+        _df(spark, [(3, "t")]), "append", txn_app="a", txn_version=1
+    ) == 3
+    assert calls["list"] <= 2 and calls["read"] <= 3, calls
+    calls.update(list=0, read=0)
+    assert vt.commit(_df(spark, [(4, "p")]), "append") == 4
+    assert calls == {"list": 1, "read": 0}
+
+
 def test_vacuum_reports_bloom_sidecars_in_deleted_list(spark):
     vt = _bloom_vt(spark)
     vt.commit_compact(target_files=1)
