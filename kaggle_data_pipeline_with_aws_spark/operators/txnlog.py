@@ -316,6 +316,11 @@ class VersionedTable:
             jvm.org.apache.hadoop.fs.Options.Rename, 1
         )
         self._rename_none[0] = jvm.org.apache.hadoop.fs.Options.Rename.NONE
+        # (version, live files) of the last replay: a committed version
+        # never changes, so an overwrite computed from that replay's
+        # snapshot takes its removes from here instead of replaying the
+        # same head again (``commit``'s ``build``)
+        self._replayed: tuple[int, tuple[str, ...]] | None = None
 
     # -- log plumbing --------------------------------------------------
     def _read_small(self, path: str) -> str:
@@ -638,7 +643,11 @@ class VersionedTable:
                 "op": op or mode,
                 "schema": schema_json,
                 "add": added,
-                "remove": self.live_files() if mode == "overwrite" else [],
+                "remove": (
+                    self._live_at_head(read_version)
+                    if mode == "overwrite"
+                    else []
+                ),
                 "rows_added": rows_added,
                 "stats": stats,
                 "bloom": bloom,
@@ -717,11 +726,27 @@ class VersionedTable:
             f"{_MAX_COMMIT_ATTEMPTS} times — pathological contention"
         )
 
+    def _live_at_head(self, read_version: int | None) -> list[str]:
+        """The live set of the head an overwrite removes. A commit
+        carrying ``read_version`` builds only while the head IS that
+        version (``_publish_entry``), so when the snapshot it was
+        computed from was the last replay, that replay's live set
+        serves without listing or reading the log again."""
+        replayed = self._replayed
+        if read_version is not None and replayed is not None:
+            version, live = replayed
+            if version == read_version:
+                return list(live)
+        return self.live_files()
+
     # -- reads ---------------------------------------------------------
     def _replay(self, version: int | None) -> _State:
         """The table's state at ``version`` (default: head): one
         listing, then ``replay_log`` over the checkpoint and tail."""
-        return replay_log(self._list_log(), self._read_log, version)
+        names = self._list_log()
+        st = replay_log(names, self._read_log, version)
+        self._replayed = (read_plan(names, version)[1], tuple(st.live))
+        return st
 
     def live_files(self, version: int | None = None) -> list[str]:
         """Replay add/remove actions through ``version`` (default:

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-One place to configure the engine for both the local[32] test harness and
-a real multi-executor cluster. Everything here is scale policy, not
-semantics:
+One place to configure the engine for both local mode (one driver JVM
+with a task slot per core; the tests and benchmarks run it on a 4-core /
+15 GiB host) and a real multi-executor cluster. Everything here is scale
+policy, not semantics:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   join-strategy re-planning) — at 100 TB static planning is always wrong
@@ -13,6 +14,9 @@ semantics:
   are cluster-location-independent.
 - Arrow enabled for the (rare) pandas-interchange paths: the multimodal /
   embedding Pandas UDFs.
+- The generated-code cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``), so a repeated plan shape reuses its
+  compiled class instead of compiling it again.
 """
 
 from __future__ import annotations
@@ -20,6 +24,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in the JVM-wide cache of Janino-compiled generated classes
+# (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's default
+# is 100). One pass over the 8 pinned registry queries needs 206 distinct
+# classes and one weekly cycle 113, so at the default every warm pass
+# recompiled most of what the previous pass had compiled (about 200
+# classes per registry pass, 60-80 per cycle).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -69,16 +81,21 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
     )
     # Only force local master when nothing supplied one (spark-submit on a
     # cluster sets spark.master itself).
     if not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
-        # In local mode the driver JVM IS every executor; Spark's 1g
-        # default starves 32 concurrent tasks (hash joins died with
-        # GCLocker retries on a 10x dataset while the machine sat at
-        # 1% memory use). Cluster runs are untouched: spark-submit
-        # owns driver/executor memory there.
+        # In local mode the driver JVM IS every executor, so its heap
+        # is shared by one task per core; Spark's 1g default starved
+        # the hash joins (they died with GCLocker retries on a 10x
+        # dataset while the machine sat at 1% memory use). On a
+        # 4-core / 15 GiB host the default below is 10g. Cluster runs
+        # are untouched: spark-submit owns driver/executor memory
+        # there.
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get(

@@ -909,13 +909,9 @@ def test_txn_loser_reclaims_orphan_files(spark, vt):
     assert len(sides) == 1
 
 
-def test_txn_commit_lists_the_log_once_per_slot_attempt(spark, vt):
-    """An uncontended transactional commit replays the log once for its
-    up-front skip check; the slot attempt then lists once more and reads
-    only the entries committed since that check (none here). A plain
-    append lists once and reads no entry."""
-    for k in range(3):
-        vt.commit(_df(spark, [(k, "x")]), "append")
+def _count_log_io(vt) -> dict[str, int]:
+    """Counts of ``_txn`` listings and log-file reads made through
+    ``vt`` from now on (the dict updates in place)."""
     calls = {"list": 0, "read": 0}
 
     def counted(name, key):
@@ -929,6 +925,17 @@ def test_txn_commit_lists_the_log_once_per_slot_attempt(spark, vt):
 
     counted("_list_log", "list")
     counted("_read_log", "read")
+    return calls
+
+
+def test_txn_commit_lists_the_log_once_per_slot_attempt(spark, vt):
+    """An uncontended transactional commit replays the log once for its
+    up-front skip check; the slot attempt then lists once more and reads
+    only the entries committed since that check (none here). A plain
+    append lists once and reads no entry."""
+    for k in range(3):
+        vt.commit(_df(spark, [(k, "x")]), "append")
+    calls = _count_log_io(vt)
     assert vt.commit(
         _df(spark, [(3, "t")]), "append", txn_app="a", txn_version=1
     ) == 3
@@ -936,6 +943,25 @@ def test_txn_commit_lists_the_log_once_per_slot_attempt(spark, vt):
     calls.update(list=0, read=0)
     assert vt.commit(_df(spark, [(4, "p")]), "append") == 4
     assert calls == {"list": 1, "read": 0}
+
+
+def test_snapshot_dependent_overwrite_replays_the_log_once(spark, vt):
+    """Compaction and merge take their removes from the replay their
+    snapshot made: each log entry is read once, and the log is listed
+    for the head, the snapshot and the slot claim only."""
+    for k in range(4):
+        vt.commit(_df(spark, [(k, "x")]), "append")
+    before = vt.live_files()
+    calls = _count_log_io(vt)
+    assert vt.commit_compact(1) == 4
+    assert calls["read"] == 4 and calls["list"] <= 3, calls
+    compacted = vt.live_files()
+    assert vt.entries()[4]["remove"] == before
+    calls.update(list=0, read=0)
+    assert vt.commit_merge(_df(spark, [(9, "m")]), keys=["k"]) == 5
+    assert calls["read"] == 5 and calls["list"] <= 3, calls
+    assert vt.entries()[5]["remove"] == compacted
+    assert sorted(r.k for r in vt.snapshot().collect()) == [0, 1, 2, 3, 9]
 
 
 def test_vacuum_reports_bloom_sidecars_in_deleted_list(spark):
