@@ -17,13 +17,19 @@ policy, not semantics:
 - The generated-code cache sized to the engine's working set
   (``CODEGEN_CACHE_ENTRIES``), so a repeated plan shape reuses its
   compiled class instead of compiling it again.
+
+``concurrently`` runs independent branches of one driver program on
+the same session at once, each branch's jobs under the caller's job
+group.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import InheritableThread
 
 # Entries in the JVM-wide cache of Janino-compiled generated classes
 # (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's default
@@ -131,3 +137,40 @@ def streaming_scale_conf() -> dict[str, str]:
         "spark.sql.streaming.stateStore.rocksdb"
         ".changelogCheckpointing.enabled": "true",
     }
+
+
+def concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run each thunk in its own thread on ``spark``; return their
+    results in argument order.
+
+    Each thread starts with its own copy of the caller's local
+    properties (job group, description, scheduler pool) and session
+    tags, so the jobs it launches are attributed and cancelled with the
+    caller's. Every thunk runs to its end even when another fails; then
+    the first failure in argument order is re-raised. No thread outlives
+    the call.
+    """
+    # InheritableThread, not inheritable_thread_target(spark): with
+    # pinned threads off (PYSPARK_PIN_THREAD=false) the latter returns
+    # the session itself instead of a wrapper.
+    results: list = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # re-raised in the caller's thread
+            errors[i] = e
+
+    threads = [
+        InheritableThread(run, args=(i,), session=spark)
+        for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

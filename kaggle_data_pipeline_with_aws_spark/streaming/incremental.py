@@ -39,6 +39,7 @@ from ..functions.scalars import epoch_micros, file_id_from_name
 from ..operators import flatten
 from ..operators.txnlog import VersionedTable
 from ..schemas import CRICSHEET_MATCH_SCHEMA
+from ..session import concurrently
 from ..sources.sinks import upsert_keyed
 
 
@@ -75,7 +76,8 @@ def stream_extract(
     The reference triggers two Lambdas per file (matchwise ∥
     deliverywise, ``aws/mens_t20i_dataset_stack.py:190-277``), each
     re-reading the JSON from S3. Here one ``foreachBatch`` caches the
-    micro-batch and derives both tables from the single scan; the
+    micro-batch, derives both tables from the single scan and commits
+    them side by side, unpersisting the batch once both have ended; the
     checkpoint gives exactly-once per file across restarts (T2/T7)
     without any ledger bookkeeping code. Both tables are
     ``VersionedTable``s, and each batch commits under
@@ -98,13 +100,19 @@ def stream_extract(
     def _fan_out(batch: DataFrame, batch_id: int) -> None:
         batch = batch.cache()
         try:
-            for table, rows in (
-                (matchwise_out, flatten.matchwise(batch)),
-                (deliverywise_out, flatten.deliverywise(batch)),
-            ):
-                table.commit(
-                    rows, txn_app=checkpoint_dir, txn_version=batch_id
-                )
+            concurrently(
+                batch.sparkSession,
+                lambda: matchwise_out.commit(
+                    flatten.matchwise(batch),
+                    txn_app=checkpoint_dir,
+                    txn_version=batch_id,
+                ),
+                lambda: deliverywise_out.commit(
+                    flatten.deliverywise(batch),
+                    txn_app=checkpoint_dir,
+                    txn_version=batch_id,
+                ),
+            )
         finally:
             batch.unpersist()
 

@@ -173,9 +173,10 @@ def test_incremental_pipeline_and_ledger(spark, landing, tmp_path):
 def test_steady_state_cycle_cost(spark, landing, tmp_path, monkeypatch):
     """Neither the first cycle of ten files nor the second builds a
     DataFrame from Python data (so neither starts a Python worker); the
-    second launches at most 26 Spark jobs and adds one ledger file.
-    Snapshot reads of its three tables run no job, and their logged
-    schema is the one Spark would infer from the files."""
+    second launches at most 26 Spark jobs, every one of them under the
+    caller's job group, also those its worker threads launch, and adds
+    one ledger file. Snapshot reads of its three tables run no job, and
+    their logged schema is the one Spark would infer from the files."""
     from pyspark.sql import SparkSession
 
     def no_python_frames(*args, **kwargs):
@@ -186,33 +187,45 @@ def test_steady_state_cycle_cost(spark, landing, tmp_path, monkeypatch):
     run_incremental(spark, landing, state, out, max_files_per_cycle=10)
     monkeypatch.undo()
     sc = spark.sparkContext
+    store = spark._jsc.sc().statusStore()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def all_job_ids():
+        return {job.jobId() for job in as_java(store.jobsList(None))}
 
     def jobs_under(group, fn):
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        before = all_job_ids()
         sc.setJobGroup(group, group)
         try:
             result = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         spark._jsc.sc().listenerBus().waitUntilEmpty()
-        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+        n_grouped = len(sc.statusTracker().getJobIdsForGroup(group))
+        return result, n_grouped, len(all_job_ids() - before)
 
     def second_cycle():
         r = run_incremental(spark, landing, state, out, max_files_per_cycle=10)
         return r, version_notes(r.matchwise)
 
     monkeypatch.setattr(SparkSession, "createDataFrame", no_python_frames)
-    (result, notes), n_jobs = jobs_under("cycle-cost-second", second_cycle)
+    (result, notes), n_jobs, n_all = jobs_under(
+        "cycle-cost-second", second_cycle
+    )
     monkeypatch.undo()
     assert result.n_new_files == 10 and result.matchwise.count() == 20
     assert notes["notes"].startswith("Updated till the match between ")
-    assert n_jobs <= 26
+    assert n_all == n_jobs <= 26
     ledger = VersionedTable(spark, f"{state}/file_status")
     assert ledger.history()[-1]["n_added"] == 1
 
     for name in ("silver_matchwise", "silver_deliverywise", "file_status"):
         table = VersionedTable(spark, f"{state}/{name}")
-        snap, n_jobs = jobs_under(f"cycle-cost-{name}", table.snapshot)
-        assert n_jobs == 0, name
+        snap, n_jobs, n_all = jobs_under(
+            f"cycle-cost-{name}", table.snapshot
+        )
+        assert n_jobs == n_all == 0, name
         files = [f"{table.root}/{f}" for f in table.live_files()]
         assert snap.schema == spark.read.parquet(*files).schema, name
 
@@ -287,6 +300,61 @@ def test_cycle_converges_after_crash_at_each_commit(
 
     assert _cycle(spark, landing, crashed).n_new_files == 3
     assert _cycle_outcome(spark, crashed) == want
+
+
+def test_cycle_branch_failure_reraised_and_threads_joined(
+    spark, tmp_path, monkeypatch
+):
+    """The deliverywise silver append fails inside its worker thread:
+    the cycle re-raises that exception once every branch has ended,
+    commits nothing to the ledger and leaves no thread behind; a clean
+    rerun then reaches an uninterrupted cycle's outcome. Neither run
+    raises a warning of its own."""
+    import threading
+    import warnings
+
+    from kaggle_data_pipeline_with_aws_spark import pipeline
+
+    landing = str(tmp_path / "landing")
+    write_fixture_dir(landing, n_matches=6, seed=11)
+    clean, failed = tmp_path / "clean", tmp_path / "failed"
+    _cycle(spark, landing, clean)
+    shutil.copytree(clean, failed)
+    _cycle(spark, landing, clean)
+    want = _cycle_outcome(spark, clean)
+
+    real = pipeline._append_dedup
+    raised_in = []
+
+    def fail_deliverywise(spark, df, path, keys):
+        if path.endswith("silver_deliverywise"):
+            raised_in.append(threading.current_thread())
+            raise _Crash
+        return real(spark, df, path, keys)
+
+    ledger = VersionedTable(spark, f"{failed}/state/file_status")
+    version = ledger.current_version()
+    n_threads = threading.active_count()
+    monkeypatch.setattr(pipeline, "_append_dedup", fail_deliverywise)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with pytest.raises(_Crash):
+            _cycle(spark, landing, failed)
+        monkeypatch.undo()
+        assert len(raised_in) == 1
+        assert raised_in[0] is not threading.main_thread()
+        assert ledger.current_version() == version
+        assert threading.active_count() == n_threads
+
+        assert _cycle(spark, landing, failed).n_new_files == 3
+    # PySpark's collect() leaves its result socket to the garbage
+    # collector, a ResourceWarning the serial cycle raised as well.
+    assert [
+        str(w.message)
+        for w in caught
+        if not issubclass(w.category, ResourceWarning)
+    ] == []
+    assert _cycle_outcome(spark, failed) == want
 
 
 def test_candidate_listing_filters_non_json(spark, landing, tmp_path):
